@@ -1,128 +1,74 @@
-"""Benchmark harness (BASELINE.md contract).
+"""Benchmark harness (BASELINE.md contract), fitted to the host it runs on.
 
-Prints ONE COMPACT JSON line (headline metrics only — the driver's tail
-capture is bounded, and round 2's line overflowed it by embedding every
-run's envelope; see VERDICT.md "What's wrong" #1):
+Prints ONE compact JSON line on stdout:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": <sf>,
      "images_n": N, "images_per_sec": R, "scaling": {...summary...}}
 
-The FULL evidence record (every run at every level with its before/after
-CPU+DRAM envelopes, per-round efficiency pairs) is written to
-``BENCH/bench_full_latest.json`` for scrutiny.
+and writes the same record plus every run's seconds to
+``BENCH/bench_full_latest.json``.
 
-- per-operator timings run on ``local[$SPARK_GRAFT_CPUS]`` against
-  ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-- the headline pipeline (file-striped chunks → index+PIP+color fused →
-  checkpointed write) runs in fresh subprocesses at local[2], local[8] and
-  local[32], each PINNED to that many cores via ``sched_setaffinity`` —
-  the sandbox stand-in for N-core vs 4N-core clusters (BASELINE.json
-  north_rule; the driver said to evidence the two-cluster criterion this
-  way). Levels are interleaved for R rounds and the per-level minimum is
-  used: this host has multi-minute noisy-neighbor episodes with >10x
-  capacity swings (BENCH/BASELINE.md), so the minimum estimates engine
-  capacity and the full run list is published for scrutiny.
-- every pipeline run also measures a PINNED pure-CPU envelope burn just
-  before and after, so each pair's efficiency can be read raw AND
-  normalized by what the host actually delivered in that window:
-  ``eff_norm = eff_raw / envelope_eff``. The north-rule gate is the raw
-  ``efficiency_2_to_8`` (N=2 vs 4N=8 cores: both levels sit below this
-  host's ~8-stream DRAM saturation knee, so the pair measures the ENGINE).
-  8→32 crosses the host's memory-bandwidth/SMT wall and is reported with
-  its envelope for context.
-- ``images_per_sec`` is the canonical configured level ($SPARK_GRAFT_CPUS,
-  default 32) — unless that level is CONGESTED (its best window measured
-  > 2x below its last-clean-window reference in
-  BENCH/reference_rates.json, and cooldown retries didn't recover it), in
-  which case the headline comes from the fastest clean level and the
-  congested value is quarantined to ``scaling.congested_levels``.
-  ``best_rate_images_per_sec`` is the best across levels.
+Protocol:
+
+- ``cpus`` is the number of cores this process may run on
+  (``sched_getaffinity``). The scaling levels are ``(N, 4N)`` with
+  ``N = max(1, cpus // 4)`` — the BASELINE.json north rule's N-core vs
+  4N-core pair; ``(1, 4)`` on a 4-core host. A level above ``cpus`` is
+  skipped and listed in ``scaling.skipped_levels``, never oversubscribed.
+- per-op: each :data:`BENCH_QUERIES` entry runs :data:`PER_OP_RUNS` times
+  into the noop sink on a ``local[cpus]`` session against the tables in
+  ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 set); the minimum is
+  recorded. A query that raises is recorded as null and its error goes to
+  the evidence file.
+- pipeline: the flagship ``run_pipeline`` job (index + PIP + color fused,
+  checkpointed write) over a synthetic images table, on the engine's own
+  session defaults. Each level runs in a fresh subprocess pinned to that
+  many cores; the levels are interleaved for :data:`ROUNDS` rounds and the
+  per-level minimum is the rate estimate. There is one efficiency value,
+  ``efficiency_{N}_to_{4N} = (rate_4N / rate_N) / 4``. ``images_per_sec``
+  is the rate at the largest measured level.
+
+Per-layer attribution of the pipeline lives in ``perfbench/run.py --trace 1``.
 
 Usage: python bench.py            # full bench, one JSON line on stdout
-       python bench.py --pipeline-only --cpus 8 --pin --images <p> --n <rows>
+       python bench.py --pipeline-only --cpus C --images <path>
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import tempfile
 import time
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-SCALING_LEVELS = (2, 8, 32)
-#: the BASELINE.md north-rule gate pair (N vs 4N): measured FIRST, with
-#: retry priority; local[32] is an informational extension on leftover budget
-NORTH_PAIR = (2, 8)
-#: 3 base rounds, not 5 (r6 mid-round lesson): a congested window wastes
-#: rounds 4-5 measuring the same weather (per-round efficiencies
-#: [0.69, 0.70, 0.44, 0.45, 0.66] in the 1358.9 s run that then couldn't
-#: afford ANY gate retry) — budget moved from base rounds to
-#: cooldown-separated gate-retry windows, which sample NEW weather.
-SCALING_ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
-
-#: HARD wall-clock budget for the whole bench (seconds). Round 4's
-#: artifact-of-record run timed out (BENCH_r04.json rc=124, parsed null):
-#: the retry-heavy protocol could run ~50+ min worst-case while the
-#: driver's window is ~30. The budget guarantees ONE parsed JSON line
-#: always lands on stdout before the driver's timeout, by shedding work
-#: in a fixed priority order (cheapest-to-lose first):
-#:   1. anomaly-retry windows        (pure re-measurement insurance)
-#:   2. gate-retry windows           (extra (2,8) samples for the 0.8 gate)
-#:   3. per-op runs beyond the first (min-of-3 → min-of-2 → single-shot)
-#:   4. scaling rounds beyond 2      (min-of-3 → min-of-2 per level)
-#: Every shed decision is recorded in the output's "budget.shed" list.
-BENCH_BUDGET_S = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1500"))
-
-#: reserve kept for the scaling block while the per-op section runs —
-#: sized for the 3-round (2, 8) base window (~400 s at the measured
-#: ~135 s/round) PLUS one degraded gate-retry window (60 s cooldown +
-#: 2 rounds ≈ 330 s) plus the final margin: the 0.8-gate retry must
-#: never be the thing the budget sheds (r6 mid-round run: gate 0.641
-#: with "gate retries shed at 0/3"). Per-op min-of-3 repeats are the
-#: cheaper sacrifice and shed first.
-SCALING_RESERVE_S = int(os.environ.get("SPARK_GRAFT_SCALING_RESERVE", "950"))
-
-#: seconds held back at the very end for summarize + evidence write + the
-#: stdout line itself.
-FINAL_MARGIN_S = 60
-
-_DEADLINE: float | None = None  # set in main(); None = unbudgeted (subcommands)
-_SHED: list[str] = []
-
-
-def _remaining() -> float:
-    if _DEADLINE is None:
-        return float("inf")
-    return _DEADLINE - time.monotonic()
-
-
-def _shed(msg: str) -> None:
-    _SHED.append(msg)
-
-#: executions per per-operator query; the recorded number is the MIN —
-#: steady-state capacity, consistent with the scaling block's min-of-rounds.
-#: A single-shot number charges the whole first-run expression-compile /
-#: class-load cost to the query, which at 100 TB amortizes to zero (and on
-#: this host confounds with noisy-neighbor sampling: the same query
-#: measures 4.3 s then 0.9 s back-to-back).
-PER_OP_RUNS = int(os.environ.get("SPARK_GRAFT_PER_OP_RUNS", "3"))
+#: interleaved rounds per level; the per-level minimum is the estimator
+ROUNDS = 3
+#: executions per per-operator query; the recorded number is the minimum
+PER_OP_RUNS = 3
+#: per-run hard cap. Local-mode Python-stage tasks can (rarely) wedge on
+#: their worker socket with both sides blocked (BENCH/wedge_rootcause.md); a
+#: hung run must not hang the whole bench, so it is killed and retried once.
+RUN_TIMEOUT_S = 900
+#: tmpfs for the bench tables: RAM-backed I/O measures the engine, not the
+#: host's single virtio disk
+TMP_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 METRIC = (
-    f"images/sec end-to-end pipeline; per-op sec (min of {PER_OP_RUNS}); "
-    f"N-vs-4N scaling at pinned local[2/8/32], interleaved min of {SCALING_ROUNDS} "
-    "(full evidence: BENCH/bench_full_latest.json)"
+    "images/sec end-to-end pipeline; per-op sec (min of "
+    f"{PER_OP_RUNS}); N-vs-4N scaling at pinned local[N]/local[4N], "
+    f"interleaved min of {ROUNDS} (full evidence: BENCH/bench_full_latest.json)"
 )
 
-FULL_RECORD_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_full_latest.json"
-)
+FULL_RECORD_PATH = os.path.join(HERE, "BENCH", "bench_full_latest.json")
 
 #: per-operator bench set — a representative slice of queries()
 BENCH_QUERIES = [
@@ -150,6 +96,37 @@ BENCH_QUERIES = [
 ]
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (respects ``taskset``/cgroup pinning)."""
+    return len(os.sched_getaffinity(0))
+
+
+def scaling_levels(cpus: int) -> tuple[list[int], list[int]]:
+    """(levels to run, levels skipped) for the ``(N, 4N)`` pair on a host
+    with ``cpus`` usable cores."""
+    n = max(1, cpus // 4)
+    run = [c for c in (n, 4 * n) if c <= cpus]
+    return run, [c for c in (n, 4 * n) if c > cpus]
+
+
+def summarize(
+    runs: dict[int, list[float]], n_images: int, skipped: list[int]
+) -> dict:
+    """Compact scaling summary from every level's run seconds: per-level
+    rate at its fastest run, and the N→4N efficiency when both ran."""
+    levels = sorted(runs)
+    scaling: dict = {"levels": levels, "skipped_levels": skipped}
+    rates = {c: n_images / min(runs[c]) for c in levels}
+    for c in levels:
+        scaling[f"local[{c}]_images_per_sec"] = round(rates[c], 1)
+    n = levels[0]
+    if 4 * n in rates:
+        scaling[f"efficiency_{n}_to_{4 * n}"] = round(
+            (rates[4 * n] / rates[n]) / 4.0, 3
+        )
+    return scaling
+
+
 def _sf_of(path: str) -> float:
     name = os.path.basename(path.rstrip("/"))
     try:
@@ -158,757 +135,173 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
-def _burn_task(_):
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(4_000_000):
-        x += i * i
-    return time.perf_counter() - t0
-
-
-def _stream_task(_):
-    """DRAM-bandwidth burn: stream ~3×64 MB of float64 through the caches.
-
-    The pixel pipeline is memory-bound at high parallelism; the pure-CPU
-    burn cannot see a neighbor thrashing the host's DRAM, this can."""
-    import numpy as np
-
-    a = np.ones(8_000_000)  # 64 MB
-    b = np.empty_like(a)
-    np.multiply(a, 1.000001, out=b)  # touch every page before timing
-    t0 = time.perf_counter()
-    for _i in range(3):
-        np.multiply(a, 1.000001, out=b)
-        a, b = b, a
-    dt = time.perf_counter() - t0
-    return (3 * 2 * a.nbytes / 1e9) / dt  # GB/s read+write
-
-
-def envelope_once(procs: int) -> dict:
-    """Aggregate host capacity at ``procs`` workers under the current
-    affinity mask: {"cpu": burn-loops/sec, "dram_gbs": aggregate GB/s}.
-
-    Run in the SAME window as the measurement it brackets, these are the
-    hardware+neighbors ceilings: engine efficiency is read against them
-    when the host under-delivers (the CPU ceiling catches core stealing,
-    the DRAM ceiling catches memory-bandwidth neighbors — this host's
-    pixel pipeline is DRAM-bound above ~8 concurrent streams)."""
-    import multiprocessing as mp
-
-    with mp.get_context("spawn").Pool(procs) as p:
-        per = p.map(_burn_task, range(procs))
-        gbs = p.map(_stream_task, range(procs))
-    return {
-        "cpu": round(procs / (sum(per) / len(per)), 3),
-        "dram_gbs": round(sum(gbs), 2),
-    }
-
-
-def run_pipeline_once(cpus: int, images_path: str, n_images: int) -> float:
+def run_pipeline_once(cpus: int, images_path: str) -> float:
     """Run the flagship pipeline in THIS process; return wall seconds."""
-    from rio_color_spark.functions.pip import pack_polygons
-    from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
+    from rio_color_spark.pipeline import run_pipeline
     from rio_color_spark.session import get_spark
-    from rio_color_spark.sources.polygons import make_polygons
+    from rio_color_spark.sources.polygons import packed_polygons
 
-    spark = get_spark(
-        f"bench-pipeline-{cpus}", master=f"local[{cpus}]", shuffle_partitions=32
-    )
+    spark = get_spark(f"bench-pipeline-{cpus}", master=f"local[{cpus}]")
+    packed = packed_polygons(40)
+    # steady-state throughput is the metric, but each run is a fresh JVM: a
+    # 4096-image mini run of the real pipeline warms codegen, the Python
+    # worker pool and the driver-side plan/committer path first
+    warm = tempfile.mkdtemp(prefix=f"rcs_bench_warm_{cpus}_", dir=TMP_BASE)
     images = spark.read.parquet(images_path)
-    packed = pack_polygons(make_polygons(40))
-    # warm page cache, codegen, the Python worker pool, AND the whole
-    # driver-side plan/committer path: steady-state throughput is the metric
-    # (long-running cluster jobs amortize startup), but each bench run is a
-    # fresh JVM, so without a full-shape warmup the timed window pays ~1.5 s
-    # of first-use Catalyst/committer JIT (measured: the assignments-job
-    # .select/.explode plan builds cost 0.5-1.0 s cold vs 0.1-0.2 s warm, and
-    # the first parquet job-commit is similarly taxed) — a serial cost that
-    # lands straight on the N-vs-4N ratio. A 4096-image mini run of the REAL
-    # pipeline (DataFrame input → hash chunking; ~15 MB on tmpfs) warms every
-    # code path the timed run executes.
-    images.write.mode("overwrite").format("noop").save()
-    out_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    warm = tempfile.mkdtemp(prefix=f"rcs_bench_warm_{cpus}_", dir=out_base)
     run_pipeline(spark, images.limit(4096), warm + "/run", packed, n_chunks=1)
     shutil.rmtree(warm, ignore_errors=True)
-    # outputs on tmpfs: the sandbox's single virtio disk collapses under 32
-    # concurrent parquet writers (a real cluster writes to distributed
-    # storage); RAM-backed output measures the engine, not that disk
-    out = tempfile.mkdtemp(prefix=f"rcs_bench_out_{cpus}_", dir=out_base)
-    # ONE chunk for the bench: chunking is a fault-tolerance granularity
-    # knob, and each chunk pays fixed costs (job setup, manifest commit,
-    # assignments pass) that at 100 TB amortize over terabytes but at sf0.1
-    # do not — and fixed overhead taxes the faster level MORE, understating
-    # N-vs-4N efficiency (t2-c)/(4(t8-c)) > t2/(4*t8). The resume contract
-    # itself is exercised by tests/test_checkpoint.py at multiple chunk
-    # counts; per-level adaptive chunking was the round-2 judge's ask.
+    out = tempfile.mkdtemp(prefix=f"rcs_bench_out_{cpus}_", dir=TMP_BASE)
+    # one chunk: chunking is a fault-tolerance granularity, and each chunk's
+    # fixed costs (job setup, commit) would tax the faster level more. The
+    # resume contract is exercised by tests/test_checkpoint.py.
     t0 = time.perf_counter()
-    run_pipeline(
-        spark,
-        images_path,
-        out + "/run",
-        packed,
-        n_chunks=int(os.environ.get("SPARK_GRAFT_BENCH_CHUNKS", "1")),
-    )
+    run_pipeline(spark, images_path, out + "/run", packed, n_chunks=1)
     dt = time.perf_counter() - t0
     spark.stop()
     shutil.rmtree(out, ignore_errors=True)
     return dt
 
 
-#: per-run hard cap. A pinned 100k-image run finishes in 6-80 s clean and
-#: < 300 s in the worst congested window measured; the cap exists because
-#: local-mode Python-stage tasks can (rarely) wedge on their worker socket
-#: with both sides epoll-blocked (observed at the 1M probe scale: one task
-#: idle-hung 20+ min, jstack showed the task thread in ReaderInputStream
-#: select and the worker at ~0% CPU). A hung subprocess must not hang the
-#: whole bench — kill it and retry once.
-RUN_TIMEOUT_S = int(os.environ.get("SPARK_GRAFT_RUN_TIMEOUT", "900"))
+def _reap_tmpfs(cpus: int) -> None:
+    """A killed or crashed run can't clean its tmpfs output; runs are
+    serial, so the globs only match the dead run's directories."""
+    for pat in (f"rcs_bench_out_{cpus}_*", f"rcs_bench_warm_{cpus}_*"):
+        for d in glob.glob(os.path.join(TMP_BASE or tempfile.gettempdir(), pat)):
+            shutil.rmtree(d, ignore_errors=True)
 
 
-def pipeline_subprocess(cpus: int, images_path: str, n_images: int) -> dict:
-    """Fresh-process pinned pipeline run; returns seconds + envelope.
-
-    Retries once on failure or on the wedged-task timeout above; a retry's
-    result is indistinguishable from a first run (fresh process, same
-    pinning), so the min-based protocol is unaffected."""
+def pipeline_subprocess(cpus: int, images_path: str) -> float:
+    """One pipeline run in a fresh process pinned to ``cpus`` cores;
+    returns its seconds. Retries once on failure or timeout — a retry is
+    indistinguishable from a first run (fresh process, same pinning)."""
     cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--pipeline-only",
-        "--pin",
-        "--cpus",
-        str(cpus),
-        "--images",
-        images_path,
-        "--n",
-        str(n_images),
+        sys.executable, os.path.abspath(__file__), "--pipeline-only",
+        "--cpus", str(cpus), "--images", images_path,
     ]
-
-    def _reap_tmpfs() -> None:
-        # a killed/crashed run can't clean its tmpfs output; reap it here so
-        # leaked RAM doesn't poison later DRAM-sensitive levels (runs are
-        # serial, so the glob only matches the dead run's dir)
-        import glob
-
-        for pat in (f"rcs_bench_out_{cpus}_*", f"rcs_bench_warm_{cpus}_*"):
-            for d in glob.glob(f"/dev/shm/{pat}"):
-                shutil.rmtree(d, ignore_errors=True)
-
     last_err = ""
     for _attempt in range(2):
-        # a wedged run near the deadline must not blow the budget: cap the
-        # per-run timeout at what's left (floor 90 s so a clean run can
-        # still finish and report)
-        run_timeout = RUN_TIMEOUT_S
-        if _DEADLINE is not None:
-            run_timeout = max(90, min(RUN_TIMEOUT_S, int(_remaining() - 30)))
         # start_new_session → the child leads its own process group, so a
-        # timeout kill reaps the whole tree (the wedged Spark JVM is a
-        # GRANDchild — killing only the python child would leave the JVM
-        # running with its heap and stuck worker alongside the retry)
-        t_wall0 = time.monotonic()
+        # timeout kill reaps the whole tree (the Spark JVM is a GRANDchild)
         proc = subprocess.Popen(
-            cmd,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            start_new_session=True,
+            cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+            cwd=HERE, start_new_session=True,
         )
         try:
-            out, err = proc.communicate(timeout=run_timeout)
+            out, err = proc.communicate(timeout=RUN_TIMEOUT_S)
         except subprocess.TimeoutExpired:
-            import signal
-
             try:
                 os.killpg(proc.pid, signal.SIGKILL)
             except (ProcessLookupError, PermissionError):
                 proc.kill()
             proc.communicate()
-            last_err = f"timed out after {run_timeout}s (wedged tree killed)"
-            _reap_tmpfs()
-            if _remaining() < 120:
-                break  # no budget left for a retry — fail fast to the caller
+            last_err = f"timed out after {RUN_TIMEOUT_S}s (process group killed)"
+            _reap_tmpfs(cpus)
             continue
         if proc.returncode == 0:
-            r = json.loads(out.strip().splitlines()[-1])
-            # full wall cost of a run incl. JVM start + envelopes — what a
-            # round actually costs the budget (used for shed estimates)
-            r["_wall"] = round(time.monotonic() - t_wall0, 1)
-            return r
+            return json.loads(out.strip().splitlines()[-1])["seconds"]
         last_err = err[-2000:]
-        _reap_tmpfs()
-    raise RuntimeError(f"pipeline run failed twice: {last_err}")
+        _reap_tmpfs(cpus)
+    raise RuntimeError(f"pipeline run at local[{cpus}] failed twice: {last_err}")
 
 
 def _pipeline_only(args) -> None:
-    if args.pin:
+    # pin to the first `cpus` cores this process may use; the parent only
+    # asks for levels that fit, so this never oversubscribes
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[: args.cpus])
+    print(json.dumps({"seconds": run_pipeline_once(args.cpus, args.images)}))
+
+
+def per_op(spark, sf_dir: str) -> tuple[dict, dict, dict]:
+    """(min seconds per query, every run's seconds, errors) over
+    :data:`BENCH_QUERIES`, each executed into the noop sink."""
+    import __spark_entry__ as E
+
+    qs = E.queries()
+    best: dict[str, float | None] = {}
+    runs: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+    for name in BENCH_QUERIES:
+        ts = []
         try:
-            os.sched_setaffinity(0, set(range(args.cpus)))
-        except (AttributeError, OSError):
-            pass  # non-Linux: unpinned fallback
-    # whole-file packing for the many-small-files bench input: openCost ≈
-    # file weight means splits pack ~3 whole files at 64 MiB (no sub-file
-    # splits are ever planned — sub-row-group splits of zstd parquet are
-    # 15-25x slower scans on this box; see session.py). 64 MiB (not the
-    # session's 128 MiB default) for the pipeline runs: measured r3, both
-    # fill the Arrow batches (64m: local[2] 45.6 s → local[8] 13.2 s vs
-    # 16m's 77.7/22.0), but 64m keeps ~72 splits — ≥2 tasks/core at every
-    # level — which held the interleaved-window 2→8 pair variance down
-    # where 128m's ~36 splits let single-task stragglers swing it
-    os.environ.setdefault("SPARK_GRAFT_OPEN_COST", "16m")
-    os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "64m")
-    env0 = envelope_once(args.cpus)
-    dt = run_pipeline_once(args.cpus, args.images, args.n)
-    env1 = envelope_once(args.cpus)
-    print(
-        json.dumps(
-            {"seconds": dt, "env_before": env0, "env_after": env1}
-        )
-    )
-
-
-#: extra (2, 8)-only measurement windows when the north-rule gate fails raw.
-#: This host has multi-minute noisy-neighbor episodes with >10x capacity
-#: swings (BENCH/BASELINE.md); a 40-minute stretch can cap one level's
-#: throughput for every round in it (measured: ten local[8] runs floored at
-#: 10.7 s in one window vs 9.7 s capacity minutes before/after). Each retry
-#: sleeps first so the weather can change; all runs fold into the min-based
-#: summary and every run ships in the evidence file, so retries only add
-#: samples — they never discard any.
-GATE_RETRIES = int(os.environ.get("SPARK_GRAFT_GATE_RETRIES", "3"))
-GATE_RETRY_SLEEP_S = int(os.environ.get("SPARK_GRAFT_GATE_RETRY_SLEEP", "180"))
-
-#: -- congestion detection against last-clean-window references (r5 verdict) --
-#: The r5 artifact's headline (700.8 img/s) came from ONE congested
-#: un-retried local[32] run while three r4 windows had measured the same
-#: code at up to 16131.6 img/s. The fix: BENCH/reference_rates.json carries
-#: each level's last-clean-window rate; a level whose best-of-window rate
-#: is > CONGESTION_FACTOR slower than its reference is declared congested
-#: and re-measured after a cooldown with TOP retry priority (before gate
-#: retries / extension rounds are even attempted), and the headline is
-#: never sourced from a level still congested after retries — its value is
-#: quarantined to the compact line's `congested_levels` block + evidence.
-REF_RATES_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH", "reference_rates.json"
-)
-CONGESTION_FACTOR = float(os.environ.get("SPARK_GRAFT_CONGESTION_FACTOR", "2.0"))
-CONGESTION_RETRIES = int(os.environ.get("SPARK_GRAFT_CONGESTION_RETRIES", "2"))
-CONGESTION_SLEEP_S = int(os.environ.get("SPARK_GRAFT_CONGESTION_SLEEP", "120"))
-
-
-def _load_refs(n_images: int) -> dict[int, float]:
-    """level → last-clean-window images/sec, ONLY when the stored basis
-    matches this run's image count (rates don't transfer across scales:
-    fixed startup costs amortize differently)."""
-    try:
-        with open(REF_RATES_PATH) as f:
-            doc = json.load(f)
-        if int(doc.get("n_images_basis", -1)) != int(n_images):
-            return {}
-        return {
-            int(c): float(v["images_per_sec"])
-            for c, v in doc.get("levels", {}).items()
-        }
-    except (OSError, ValueError, KeyError, json.JSONDecodeError):
-        return {}
-
-
-def _update_refs(runs: dict[int, list[dict]], n_images: int) -> None:
-    """Record this run's clean windows as the new references. A level
-    updates only when its best run was within CONGESTION_FACTOR of the old
-    reference (i.e. a clean window was actually observed — congested
-    measurements never poison the reference); a faster-than-reference
-    window always raises it. Envelope caps keep a running max as evidence
-    of the host's clean capacity."""
-    try:
-        with open(REF_RATES_PATH) as f:
-            doc = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        doc = {}
-    if int(doc.get("n_images_basis", n_images)) != int(n_images):
-        return  # different basis on disk — leave it alone
-    doc.setdefault("n_images_basis", int(n_images))
-    levels = doc.setdefault("levels", {})
-    for c, rs in runs.items():
-        if not rs:
-            continue
-        best = min(rs, key=lambda r: r["seconds"])
-        rate = n_images / best["seconds"]
-        old = levels.get(str(c), {})
-        old_rate = float(old.get("images_per_sec", 0.0))
-        if old_rate and rate < old_rate / CONGESTION_FACTOR:
-            continue  # no clean window at this level this run
-        env_cpu = max(
-            (r["env_before"]["cpu"] + r["env_after"]["cpu"]) / 2 for r in rs
-        )
-        env_dram = max(
-            (r["env_before"]["dram_gbs"] + r["env_after"]["dram_gbs"]) / 2
-            for r in rs
-        )
-        levels[str(c)] = {
-            "images_per_sec": round(rate, 1),
-            "env_cpu": round(max(env_cpu, float(old.get("env_cpu", 0.0))), 1),
-            "env_dram_gbs": round(
-                max(env_dram, float(old.get("env_dram_gbs", 0.0))), 1
-            ),
-            "source": "last bench run (auto-updated)",
-        }
-    try:
-        with open(REF_RATES_PATH, "w") as f:
-            json.dump(doc, f, indent=1)
-    except OSError:
-        pass  # read-only checkout: references just stay as they were
-
-
-def _congested(
-    refs: dict[int, float], runs: dict[int, list[dict]], n_images: int,
-    levels: tuple[int, ...],
-) -> list[int]:
-    """Levels whose best observed rate is > CONGESTION_FACTOR below their
-    last-clean-window reference (no reference → never congested)."""
-    out = []
-    for c in levels:
-        if c not in refs or not runs.get(c):
-            continue
-        best = min(r["seconds"] for r in runs[c])
-        if (n_images / best) < refs[c] / CONGESTION_FACTOR:
-            out.append(c)
-    return out
-
-
-def _round_cost_est(runs: dict[int, list[dict]], levels: tuple[int, ...]) -> float:
-    """Wall cost estimate of ONE more interleaved round at ``levels``:
-    median observed full-run wall (JVM + envelopes included) per level,
-    150 s/level before any observation exists."""
-    est = 0.0
-    for c in levels:
-        walls = sorted(r["_wall"] for r in runs.get(c, []) if r.get("_wall"))
-        est += walls[len(walls) // 2] if walls else 150.0
-    return est
-
-
-def _run_rounds(
-    runs: dict[int, list[dict]],
-    levels: tuple[int, ...],
-    rounds: int,
-    img_path: str,
-    n_images: int,
-    min_rounds: int = 1,
-    label: str = "scaling",
-) -> None:
-    for i in range(rounds):
-        if i >= min_rounds and _remaining() < (
-            _round_cost_est(runs, levels) + FINAL_MARGIN_S
-        ):
-            _shed(f"{label}: stopped after {i}/{rounds} rounds (budget)")
-            return
-        round_id = _next_round_id()
-        for cpus in levels:
-            r = pipeline_subprocess(cpus, img_path, n_images)
-            r["seconds"] = round(r["seconds"], 3)
-            # levels measured in THIS round share the id — the
-            # same-weather pairing for per-round efficiency (a solo
-            # congestion retry gets its own id and never pairs)
-            r["_round_id"] = round_id
-            runs[cpus].append(r)
-
-
-_ROUND_COUNTER = [0]
-
-
-def _next_round_id() -> int:
-    _ROUND_COUNTER[0] += 1
-    return _ROUND_COUNTER[0]
-
-
-def _scaling_block(img_path: str, n_images: int) -> tuple[dict, dict, dict]:
-    """Interleaved pinned runs at each level, under the wall-clock budget.
-
-    Returns (compact scaling summary for the stdout line, per-query seconds,
-    full evidence record for the side file).
-
-    If the 2→8 raw efficiency lands under the 0.8 gate, up to GATE_RETRIES
-    further interleaved (2, 8) windows are measured after a cooldown and
-    folded into the min-based summary — more samples of the same protocol
-    (never discarding any), all published in the evidence file. Rationale:
-    the ratio needs BOTH levels to hit a clean window, and this host's
-    episodes can cap one level for a whole window's worth of rounds.
-    NOTE (r4 advice): this conditional stopping makes the headline gate
-    value a BEST-WINDOW CAPACITY estimate; the summary therefore also
-    carries ``efficiency_2_to_8_fixed_sample`` computed from the
-    unconditional first window only.
-
-    Budget shedding (priority order, cheapest-to-lose first): an anomaly
-    retry needs the most headroom, then the local[32] extension rounds,
-    then a degraded (2-round, 60 s-cooldown) gate retry; north-pair
-    base-window rounds shrink to min 2 via _run_rounds. Every shed is
-    recorded. Measurement order is gate-first: (2,8) base window → gate
-    retries → local[32] extension → anomaly retries.
-    """
-    runs: dict[int, list[dict]] = {c: [] for c in SCALING_LEVELS}
-    # NORTH-RULE PAIR FIRST. The gate is 2→8 (BASELINE.md); local[32] is
-    # informational (the documented DRAM-wall level) and runs LAST, on
-    # leftover budget only. Lesson from the r5 validation window: one
-    # contended local[32] episode (141 s/run vs the 6 s record) inside an
-    # interleaved (2,8,32) base window burned the whole budget and left
-    # the 0.762 gate value without a single retry.
-    _run_rounds(
-        runs, NORTH_PAIR, SCALING_ROUNDS, img_path, n_images,
-        min_rounds=2, label="north-pair base window",
-    )
-    # CONGESTION RETRIES FIRST (r5 verdict): any level measuring >2x below
-    # its last-clean-window reference gets a cooldown + re-measurement
-    # BEFORE any other retry class can spend the budget — these windows
-    # are the difference between recording capacity and recording weather.
-    refs = _load_refs(n_images)
-    congestion_windows = 0
-    for _attempt in range(CONGESTION_RETRIES):
-        cong = _congested(refs, runs, n_images, NORTH_PAIR)
-        if not cong:
-            break
-        if _remaining() < (
-            CONGESTION_SLEEP_S
-            + _round_cost_est(runs, tuple(cong))
-            + FINAL_MARGIN_S
-        ):
-            _shed(
-                f"congestion retries shed (budget); levels {cong} still "
-                f">{CONGESTION_FACTOR}x below reference"
-            )
-            break
-        congestion_windows += 1
-        time.sleep(CONGESTION_SLEEP_S)
-        _run_rounds(
-            runs, tuple(cong), 1, img_path, n_images,
-            min_rounds=1, label=f"congestion retry {congestion_windows}",
-        )
-    scaling, per_query, full = _summarize_scaling(runs, n_images)
-    # fixed-sample (unconditional) gate estimate: the base window's value
-    # BEFORE any value-conditioned resampling. Budget shedding above is
-    # value-blind, so this stays an unbiased-stopping summary; everything
-    # after this point conditions on the observed efficiency and the
-    # headline gate value is therefore a best-window CAPACITY estimate.
-    fixed_sample_eff = scaling["efficiency_2_to_8"]
-    scaling["efficiency_2_to_8_fixed_sample"] = fixed_sample_eff
-    scaling["gate_estimator"] = "best-window capacity (conditional resampling)"
-    def _gate_value(s: dict) -> float:
-        # the gate clears if EITHER published estimator demonstrates 0.8:
-        # cross-window capacity pairing or the best shared-weather round
-        return max(
-            s["efficiency_2_to_8"], s.get("efficiency_2_to_8_best_round") or 0.0
-        )
-
-    retries = 0
-    while _gate_value(scaling) < 0.8 and retries < GATE_RETRIES:
-        sleep_s, rounds28 = GATE_RETRY_SLEEP_S, SCALING_ROUNDS
-        if _remaining() < (
-            sleep_s + rounds28 * _round_cost_est(runs, (2, 8)) + FINAL_MARGIN_S
-        ):
-            # degraded retry window: short cooldown, 2 rounds
-            sleep_s, rounds28 = 60, 2
-            if _remaining() < (
-                sleep_s + rounds28 * _round_cost_est(runs, (2, 8)) + FINAL_MARGIN_S
-            ):
-                _shed(f"gate retries shed at {retries}/{GATE_RETRIES} (budget)")
-                break
-            _shed(f"gate retry {retries + 1} degraded to 2 rounds/60s cooldown")
-        retries += 1
-        time.sleep(sleep_s)
-        _run_rounds(
-            runs, (2, 8), rounds28, img_path, n_images,
-            min_rounds=1, label=f"gate retry {retries}",
-        )
-        scaling, per_query, full = _summarize_scaling(runs, n_images)
-    scaling["gate_retry_windows"] = retries
-    # local[32] extension: the informational 8→32 levels, measured only
-    # with budget the settled gate left over. One round at a time so a
-    # contended episode costs at most one run before the estimator
-    # (median observed wall) prices the next round honestly.
-    ext = 0
-    while ext < SCALING_ROUNDS:
-        if _remaining() < (_round_cost_est(runs, (32,)) + FINAL_MARGIN_S + 60):
-            _shed(
-                f"local[32] extension: stopped after {ext}/{SCALING_ROUNDS} "
-                "rounds (budget)"
-            )
-            break
-        _run_rounds(
-            runs, (32,), 1, img_path, n_images,
-            min_rounds=1, label="local[32] extension",
-        )
-        ext += 1
-    # local[32] congestion retries: same top-priority re-measurement as the
-    # north pair, applied to the informational level the r5 headline was
-    # wrongly sourced from (one congested un-retried run)
-    for _attempt in range(CONGESTION_RETRIES):
-        cong = _congested(refs, runs, n_images, (32,))
-        if not cong:
-            break
-        if _remaining() < (
-            CONGESTION_SLEEP_S + _round_cost_est(runs, (32,)) + FINAL_MARGIN_S
-        ):
-            _shed(
-                f"local[32] congestion retries shed (budget); still "
-                f">{CONGESTION_FACTOR}x below reference"
-            )
-            break
-        congestion_windows += 1
-        time.sleep(CONGESTION_SLEEP_S)
-        _run_rounds(
-            runs, (32,), 1, img_path, n_images,
-            min_rounds=1, label=f"congestion retry {congestion_windows}",
-        )
-    scaling, per_query, full = _summarize_scaling(runs, n_images)
-    # monotonic-rate sanity: 4x the cores measuring SLOWER than the smaller
-    # level is physically impossible for this engine (measured 6.4 s at
-    # local[32] vs 9.8 s at local[8] in clean windows) — when a whole
-    # level's best-of-N still inverts the ordering, every one of its runs
-    # hit a noisy-neighbor episode; re-measure that level after a cooldown.
-    # FIRST to shed under budget (insurance, not a gate): requires an extra
-    # 120 s of headroom beyond what a gate retry would.
-    levels_present = tuple(c for c in SCALING_LEVELS if runs[c])
-    anomaly_retries = 0
-    while anomaly_retries < GATE_RETRIES:
-        best = {c: min(r["seconds"] for r in runs[c]) for c in levels_present}
-        inverted = [
-            b
-            for a, b in zip(levels_present, levels_present[1:])
-            if best[b] >= best[a]
-        ]
-        if not inverted:
-            break
-        rounds_a = max(2, SCALING_ROUNDS - 2)
-        if _remaining() < (
-            GATE_RETRY_SLEEP_S
-            + rounds_a * _round_cost_est(runs, tuple(inverted))
-            + FINAL_MARGIN_S
-            + 120
-        ):
-            _shed(f"anomaly retries shed (budget); inverted levels {inverted}")
-            break
-        anomaly_retries += 1
-        time.sleep(GATE_RETRY_SLEEP_S)
-        _run_rounds(
-            runs, tuple(inverted), rounds_a, img_path, n_images,
-            min_rounds=1, label=f"anomaly retry {anomaly_retries}",
-        )
-        scaling, per_query, full = _summarize_scaling(runs, n_images)
-        scaling["gate_retry_windows"] = retries
-    scaling["anomaly_retry_windows"] = anomaly_retries
-    scaling["efficiency_2_to_8_fixed_sample"] = fixed_sample_eff
-    scaling["gate_estimator"] = "best-window capacity (conditional resampling)"
-    # final congestion verdict per level: quarantine for headline selection
-    # (main() refuses to source images_per_sec from a congested level) and
-    # the measured-vs-reference evidence for the record's reader
-    scaling["congestion_retry_windows"] = congestion_windows
-    final_cong = _congested(
-        refs, runs, n_images, tuple(c for c in SCALING_LEVELS if runs.get(c))
-    )
-    if final_cong:
-        scaling["congested_levels"] = {
-            str(c): {
-                "measured_images_per_sec": round(
-                    n_images / min(r["seconds"] for r in runs[c]), 1
-                ),
-                "reference_images_per_sec": refs[c],
-            }
-            for c in final_cong
-        }
-    # persist this run's clean windows as the next run's references
-    _update_refs(runs, n_images)
-    return scaling, per_query, full
-
-
-def _summarize_scaling(
-    runs: dict[int, list[dict]], n_images: int
-) -> tuple[dict, dict, dict]:
-    present = [c for c in SCALING_LEVELS if runs.get(c)]
-    best: dict[int, dict] = {
-        c: min(runs[c], key=lambda r: r["seconds"]) for c in present
-    }
-    rates = {c: n_images / best[c]["seconds"] for c in present}
-
-    def _env(run: dict, kind: str) -> float:
-        return (run["env_before"][kind] + run["env_after"][kind]) / 2.0
-
-    scaling: dict = {
-        f"local[{c}]_images_per_sec": round(rates[c], 1) for c in present
-    }
-    per_query = {
-        f"pipeline_local{c}": best[c]["seconds"] for c in present
-    }
-    full: dict = {}
-    for a, b in ((2, 8), (8, 32)):
-        if a not in rates or b not in rates:
-            continue  # level shed under budget (local[32] extension)
-        raw = (rates[b] / rates[a]) / 4.0
-        cpu_eff = (_env(best[b], "cpu") / _env(best[a], "cpu")) / 4.0
-        dram_eff = (_env(best[b], "dram_gbs") / _env(best[a], "dram_gbs")) / 4.0
-        # the binding host ceiling for this pair: whichever resource the
-        # host scaled WORSE on in these windows
-        env_eff = min(cpu_eff, dram_eff)
-        scaling[f"efficiency_{a}_to_{b}"] = round(raw, 3)
-        full[f"envelope_cpu_eff_{a}_to_{b}"] = round(cpu_eff, 3)
-        full[f"envelope_dram_eff_{a}_to_{b}"] = round(dram_eff, 3)
-        scaling[f"efficiency_{a}_to_{b}_envelope_normalized"] = round(
-            raw / env_eff, 3
-        ) if env_eff > 0 else None
-        # same-window pairing: efficiency computed within each interleaved
-        # round (the two runs are minutes apart, not tens of minutes).
-        # Pairing is by explicit _round_id — positional zip would misalign
-        # after a solo congestion retry appended to one level only.
-        by_round_b = {
-            r["_round_id"]: r for r in runs[b] if r.get("_round_id") is not None
-        }
-        full[f"per_round_efficiency_{a}_to_{b}"] = [
-            round(ra["seconds"] / (4.0 * by_round_b[ra["_round_id"]]["seconds"]), 3)
-            for ra in runs[a]
-            if ra.get("_round_id") is not None and ra["_round_id"] in by_round_b
-        ]
-    # the north-rule pair's per-round pairs ride on the compact line (a
-    # few small floats — the direct gate evidence)
-    scaling["per_round_efficiency_2_to_8"] = full["per_round_efficiency_2_to_8"]
-    # best SAME-ROUND pair: the two runs of one interleaved round are
-    # minutes apart, so this is the cleanest shared-weather estimate of
-    # the ratio. The cross-window best-of-each-level pairing above can
-    # swing the ratio EITHER way (r5's 1.043 came from a slow-l2 window
-    # paired with a fast-l8 one; r6's 0.641 from the mirror image), so
-    # the gate accepts whichever of the two published estimators clears —
-    # both always ship, nothing is discarded.
-    pr = [v for v in scaling["per_round_efficiency_2_to_8"] if v is not None]
-    scaling["efficiency_2_to_8_best_round"] = max(pr) if pr else None
-    scaling["north_rule_pair"] = "2_to_8"
-    full["all_runs"] = {
-        str(c): [
-            {k: r[k] for k in ("seconds", "env_before", "env_after")}
-            for r in rs
-        ]
-        for c, rs in runs.items()
-    }
-    return scaling, per_query, full
+            for _ in range(PER_OP_RUNS):
+                t0 = time.perf_counter()
+                # noop sink: full distributed execution, no driver collect tax
+                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+                ts.append(round(time.perf_counter() - t0, 3))
+        except Exception as ex:  # one missing input fails one query, not the bench
+            errors[name] = f"{type(ex).__name__}: {str(ex)[:300]}"
+        runs[name] = ts
+        best[name] = None if name in errors else min(ts)
+    return best, runs, errors
 
 
 def main() -> None:
-    global _DEADLINE
     ap = argparse.ArgumentParser()
     ap.add_argument("--pipeline-only", action="store_true")
-    ap.add_argument("--pin", action="store_true")
-    ap.add_argument("--cpus", type=int, default=int(CPUS) if CPUS != "*" else 32)
+    ap.add_argument("--cpus", type=int, default=0)
     ap.add_argument("--images", type=str, default="")
-    ap.add_argument("--n", type=int, default=0)
-    ap.add_argument("--no-scaling", action="store_true")
     args = ap.parse_args()
 
     if args.pipeline_only:
         _pipeline_only(args)
         return
 
-    # the whole-bench budget clock starts here (subcommands stay unbudgeted:
-    # they run inside a parent bench's budget already)
-    _DEADLINE = time.monotonic() + BENCH_BUDGET_S
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import __spark_entry__ as E
+    sys.path.insert(0, HERE)
     from rio_color_spark.session import get_spark
     from rio_color_spark.sources.images import write_images
 
+    cpus = host_cpus()
+    levels, skipped = scaling_levels(cpus)
     sf = _sf_of(SF_DIR)
     n_images = max(20_000, int(1_000_000 * sf)) if sf > 0 else 20_000
 
     total0 = time.perf_counter()
-    spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=32)
+    spark = get_spark("bench", master=f"local[{cpus}]")
 
-    # materialize the synthetic images table once (shared by all runs), on
-    # tmpfs (the virtio disk's concurrent-reader collapse is not the metric).
-    # 256 files → each 2-chunk stripe still fans out to ≥ 4 tasks/core at 32
-    img_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    img_dir = tempfile.mkdtemp(prefix="rcs_bench_imgs_", dir=img_base)
+    # the synthetic images table, shared by every pipeline run
+    img_dir = tempfile.mkdtemp(prefix="rcs_bench_imgs_", dir=TMP_BASE)
     img_path = img_dir + "/images"
-    t0 = time.perf_counter()
-    write_images(spark, n_images, img_path, partitions=256)
-    t_generate = time.perf_counter() - t0
+    runs: dict[int, list[float]] = {c: [] for c in levels}
+    try:
+        t0 = time.perf_counter()
+        write_images(spark, n_images, img_path, partitions=256)
+        queries: dict = {"generate_images": round(time.perf_counter() - t0, 3)}
 
-    # per-operator timings
-    qs = E.queries()
-    per_query: dict[str, float] = {"generate_images": round(t_generate, 3)}
-    for name in BENCH_QUERIES:
-        ts = []
-        for i in range(PER_OP_RUNS):
-            # budget shed priority 3: every op runs ONCE; extra min-of-N
-            # runs go first when the scaling reserve is at risk
-            if i > 0 and _remaining() < SCALING_RESERVE_S + FINAL_MARGIN_S:
-                _shed(f"per-op {name}: {i}/{PER_OP_RUNS} runs (budget)")
-                break
-            t0 = time.perf_counter()
-            # noop sink: full distributed execution, no driver collect tax
-            qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            ts.append(time.perf_counter() - t0)
-        per_query[name] = round(min(ts), 3)
-    spark.stop()
+        best, query_runs, query_errors = per_op(spark, SF_DIR)
+        queries.update(best)
+        spark.stop()
 
-    scaling: dict = {}
-    full_evidence: dict = {}
-    if not args.no_scaling:
-        scaling, pq, full_evidence = _scaling_block(img_path, n_images)
-        per_query.update(pq)
-        canonical = int(CPUS) if CPUS != "*" else 32
-        # headline sourcing (r5 verdict): NEVER from a level still
-        # congested after retries — prefer the canonical level if clean,
-        # else the fastest clean level; if no level saw a clean window all
-        # run, say so explicitly and fall back to the best measured rate
-        # (the congested evidence rides in scaling.congested_levels).
-        cong = {int(c) for c in scaling.get("congested_levels", {})}
-        rate_of = {
-            c: scaling[f"local[{c}]_images_per_sec"]
-            for c in SCALING_LEVELS
-            if f"local[{c}]_images_per_sec" in scaling
-        }
-        clean = {c: v for c, v in rate_of.items() if c not in cong}
-        if canonical in clean:
-            headline_level = canonical
-        elif clean:
-            headline_level = max(clean, key=clean.get)
-        else:
-            headline_level = max(rate_of, key=rate_of.get)
-            scaling["no_clean_window"] = True
-        images_per_sec = rate_of[headline_level]
-        scaling["headline_level"] = headline_level
-        scaling["best_rate_images_per_sec"] = max(
-            v
-            for k, v in scaling.items()
-            if isinstance(v, (int, float)) and k.endswith("images_per_sec")
-        )
-    else:
-        r = pipeline_subprocess(int(args.cpus), img_path, n_images)
-        per_query["pipeline"] = round(r["seconds"], 3)
-        images_per_sec = round(n_images / r["seconds"], 1)
+        for _round in range(ROUNDS):
+            for c in levels:
+                runs[c].append(round(pipeline_subprocess(c, img_path), 3))
+    finally:
+        shutil.rmtree(img_dir, ignore_errors=True)
 
-    shutil.rmtree(img_dir, ignore_errors=True)
-
+    scaling = summarize(runs, n_images, skipped)
+    for c in levels:
+        queries[f"pipeline_local{c}"] = min(runs[c])
     headline = {
         "metric": METRIC,
         "value": round(time.perf_counter() - total0, 3),
         "unit": "sec",
-        "queries": per_query,
+        "queries": queries,
         "sf": sf,
         "images_n": n_images,
-        "images_per_sec": images_per_sec,
+        "images_per_sec": scaling[f"local[{levels[-1]}]_images_per_sec"],
         "scaling": scaling,
-        "budget": {
-            "budget_s": BENCH_BUDGET_S,
-            "used_s": round(time.perf_counter() - total0, 1),
-            "shed": _SHED,
-        },
+    }
+    evidence = {
+        "host_cpus": cpus,
+        "pipeline_runs": {str(c): rs for c, rs in runs.items()},
+        "query_runs": query_runs,
+        "query_errors": query_errors,
     }
     try:
         os.makedirs(os.path.dirname(FULL_RECORD_PATH), exist_ok=True)
         with open(FULL_RECORD_PATH, "w") as f:
-            json.dump({**headline, "evidence": full_evidence}, f, indent=1)
+            json.dump({**headline, "evidence": evidence}, f, indent=1)
     except OSError:
         pass  # the headline line must still print on a read-only checkout
-    # the final stdout line stays compact — the driver tail-captures it
     print(json.dumps(headline))
 
 

@@ -68,58 +68,14 @@ def token_hashes_col(text: Column) -> Column:
     return F.transform(tokens_col(text), token_hash_col)
 
 
-def shingles3_from_tokens(toks: Column) -> Column:
-    """3-word shingles from a token array; [] when under 3 tokens.
-
-    The transform lambda references ``toks`` once per shingle index, so
-    ``toks`` MUST be a materialized attribute (operators/dedup._materialize)
-    on hot paths — passing the deep tokenize expression here re-evaluates
-    the whole regex split per shingle (quadratic in tokens; measured 3.1 s
-    vs 0.2 s for the sf0.1 documents table)."""
-    n = F.size(toks)
-    return F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def shingles3_col(text: Column) -> Column:
-    """3-word shingles of raw text — convenience form for small inputs;
-    hot paths materialize tokens first (see shingles3_from_tokens)."""
-    return shingles3_from_tokens(tokens_col(text))
-
-
-def shingle_hashes_col(text: Column) -> Column:
-    return F.transform(shingles3_col(text), token_hash_col)
-
-
-def minhash_col(hashes: Column, j: int) -> Column:
-    """j-th MinHash over an array<long> of element hashes (P on empty)."""
-    a, b = MINHASH_A[j], MINHASH_B[j]
-    return F.coalesce(
-        F.array_min(
-            F.transform(
-                hashes,
-                lambda x: (F.lit(a) * (x % F.lit(MINHASH_P)) + F.lit(b))
-                % F.lit(MINHASH_P),
-            )
-        ),
-        F.lit(MINHASH_P),
-    )
-
-
 # -- single-parse SQL-text builders -------------------------------------------
 #
-# The Column builders above construct expression trees node-by-node through
-# py4j — measured ~320 ms of DRIVER time just for the 16 minhash columns
-# (each F.transform lambda round-trips the gateway several times). The
-# builders below emit the SAME expressions as one SQL string parsed JVM-side
-# in a single call (~1 ms). Values are identical — the hash gates and
-# tests/test_dedup*.py pin the parity; the Column forms remain the
-# documented twins (and what plans/sql_oracles.py mirrors).
+# Shingles and MinHash exist only in SQL-text form: one SQL string parsed
+# JVM-side in a single call (~1 ms), where building the same expression
+# trees node-by-node as Columns cost ~320 ms of DRIVER time for the 16
+# minhash columns (each F.transform lambda round-trips py4j several times).
+# Their DuckDB twins in plans/sql_oracles.py are built from the same
+# constants; the hash gates and tests/test_dedup*.py pin the parity.
 
 
 def token_hash_sql(tok_sql: str) -> str:
@@ -128,7 +84,12 @@ def token_hash_sql(tok_sql: str) -> str:
 
 
 def shingles3_sql(toks_sql: str) -> str:
-    """SQL text of :func:`shingles3_from_tokens` over a token-array column."""
+    """3-word shingles of a token-array column; [] when under 3 tokens.
+
+    ``toks_sql`` is referenced once per shingle index, so it MUST name a
+    materialized attribute (operators/dedup._materialize) on hot paths —
+    a deep tokenize expression here is re-evaluated per shingle (quadratic
+    in tokens; measured 3.1 s vs 0.2 s for the sf0.1 documents table)."""
     return (
         f"CASE WHEN size({toks_sql}) >= 3 THEN "
         f"transform(sequence(1, size({toks_sql}) - 2), "
@@ -138,7 +99,7 @@ def shingles3_sql(toks_sql: str) -> str:
 
 
 def minhash_sql(hashes_sql: str, j: int) -> str:
-    """SQL text of :func:`minhash_col` over a hash-array column."""
+    """j-th MinHash over an array<long> hash column (P on empty)."""
     a, b = MINHASH_A[j], MINHASH_B[j]
     return (
         f"coalesce(array_min(transform({hashes_sql}, "
@@ -168,16 +129,6 @@ def simhash_agg_sql(hashes_sql: str, n_sql: str) -> str:
 
 def simhash_agg_expr(hashes_sql: str, n_sql: str) -> Column:
     return F.expr(simhash_agg_sql(hashes_sql, n_sql))
-
-
-def minhash_sig_cols(hashes: Column) -> list[Column]:
-    return [minhash_col(hashes, j).alias(f"mh{j}") for j in range(N_MINHASH)]
-
-
-def band_sig_col(band: int) -> Column:
-    """LSH band signature from already-materialized mh0..mh15 columns."""
-    cols = [F.col(f"mh{band * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-    return F.concat_ws("-", *cols)
 
 
 def simhash_col(hashes: Column) -> Column:

@@ -98,15 +98,6 @@ def _materialize(df: DataFrame, cols: dict) -> DataFrame:
     return out.select("*", *[F.col(f"_m.{n}").alias(n) for n in cols]).drop("_m")
 
 
-def _parse_bytes(s: str) -> int:
-    """'128m'-style byte strings (Spark conf values) → bytes."""
-    s = s.strip().lower()
-    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suffix):
-            return int(float(s[: -len(suffix)]) * mult)
-    return int(s)
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Parallelism guard for heavy per-row map stages.
 
@@ -132,9 +123,8 @@ def _spread(df: DataFrame) -> DataFrame:
         if len(files) >= target:
             return df
         try:
-            mpb = _parse_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-            )
+            # Spark's own parse of the conf value ("128m", "1gb", ...)
+            mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
             import os
 
             est = 0

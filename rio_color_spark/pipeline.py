@@ -157,13 +157,6 @@ def chunk_plan(
     return readers, [None] * n_chunks
 
 
-def chunk_readers(
-    spark: SparkSession, images: DataFrame | str, n_chunks: int
-) -> list:
-    """The readers half of :func:`chunk_plan` (kept as the simple API)."""
-    return chunk_plan(spark, images, n_chunks)[0]
-
-
 def run_pipeline(
     spark: SparkSession,
     images: DataFrame | str,
@@ -184,7 +177,10 @@ def run_pipeline(
     ``images`` may be a parquet path (preferred: file-stripe chunking, one
     scan per input byte) or a DataFrame. ``fail_after`` simulates a crash
     after N chunk commits (resume tests). ``write_options`` are creation
-    options applied to every chunk write (e.g. compression codec).
+    options applied to every chunk write (e.g. compression codec); the
+    default is lz4 without dictionary encoding (see below), and
+    ``write_options={}`` restores the session's codec and dictionary
+    defaults.
 
     ``snapshot_base`` additionally maintains a
     :class:`~rio_color_spark.sources.snapshots.SnapshotTable` over the

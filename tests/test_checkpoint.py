@@ -80,13 +80,13 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path):
 def test_pipeline_file_chunking_single_scan(spark, tmp_path):
     """Path input stripes source FILES across chunks: each chunk reads only
     its own files (no re-scan), union of chunk outputs == full input."""
-    from rio_color_spark.pipeline import chunk_readers
+    from rio_color_spark.pipeline import chunk_plan
 
     n = 300
     src = str(tmp_path / "src")
     images_df(spark, n).repartition(8).write.parquet(src)
 
-    readers = chunk_readers(spark, src, 4)
+    readers = chunk_plan(spark, src, 4)[0]
     seen_files: set[str] = set()
     total = 0
     for r in readers:

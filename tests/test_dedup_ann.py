@@ -203,3 +203,21 @@ def test_simhash_agg_equals_reference_column(spark, docs):
     assert len(out) > 0
     for r in out:
         assert r["one_pass"] == r["ref"], r["doc_id"]
+
+
+@pytest.mark.parametrize("mpb", ["128mb", "1gb"])
+def test_spread_accepts_spark_byte_strings(spark, tmp_path, mpb):
+    """``_spread`` sizes splits from Spark's own parse of
+    ``maxPartitionBytes``, so any valid Spark byte string works; a
+    one-file table is still re-spread across the shuffle parallelism."""
+    src = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, mpb)
+    try:
+        out = DD._spread(df)
+    finally:
+        spark.conf.set(key, old)
+    assert "Repartition" in out._jdf.queryExecution().logical().toString()

@@ -55,11 +55,11 @@ def test_pip_join_broadcasts_cover_no_fact_shuffle(spark):
 
 
 def test_chunk_scan_reads_only_own_files(spark, tmp_path):
-    from rio_color_spark.pipeline import chunk_readers
+    from rio_color_spark.pipeline import chunk_plan
 
     src = str(tmp_path / "src")
     images_df(spark, 200).repartition(6).write.parquet(src)
-    readers = chunk_readers(spark, src, 3)
+    readers = chunk_plan(spark, src, 3)[0]
     all_files = set(spark.read.parquet(src).inputFiles())
     for r in readers:
         files = set(r().inputFiles())
