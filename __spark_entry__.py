@@ -1198,10 +1198,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
+def _golden_gates(golden, *names: str) -> dict[str, str]:
+    """Oracle SQL for the gate(s) one ``_golden_*`` function feeds (one
+    that feeds several gates returns one SQL text per name, in order). A
+    golden that raises — e.g. on a missing fixture file — fails only its
+    own gates: each becomes a DuckDB ``error()`` call carrying the reason."""
+    try:
+        sql = golden()
+    except Exception as ex:
+        reason = f"{type(ex).__name__}: {ex}".replace("'", "''")
+        return {n: f"SELECT error('{n} golden unavailable: {reason}')" for n in names}
+    return dict(zip(names, (sql,) if len(names) == 1 else sql))
+
+
 def oracle_sql() -> dict[str, str]:
     S = SQL
-    _media_goldens = _golden_media_values()
-    _raster_vector_goldens = _golden_raster_vector_values()
     px = f"SELECT l_orderkey, l_linenumber, {S.PX_R} AS px_r, {S.PX_G} AS px_g, {S.PX_B} AS px_b FROM lineitem"
     doc_pts = f"SELECT doc_id, {S.DOC_LON} AS lon, {S.DOC_LAT} AS lat FROM documents"
 
@@ -1398,13 +1409,12 @@ def oracle_sql() -> dict[str, str]:
             "FROM _cand JOIN _e ea ON ea.vec_id = id_a JOIN _e eb ON eb.vec_id = id_b "
             f"WHERE {S.cosine_sql('ea.v', 'eb.v', EMB_DIM)} >= 0.35"
         ),
-        "band_stats": _media_goldens[0],
-        "resize_images": _media_goldens[1],
-        "sample_frames": _golden_frames_values(),
-        "tiff_ingest": _golden_tiff_values(),
-        "png_decode": _golden_png_values(),
-        "frames_y4m": _golden_y4m_values(),
-        "frames_mjpeg": _golden_mjpeg_values(),
+        **_golden_gates(_golden_media_values, "band_stats", "resize_images"),
+        **_golden_gates(_golden_frames_values, "sample_frames"),
+        **_golden_gates(_golden_tiff_values, "tiff_ingest"),
+        **_golden_gates(_golden_png_values, "png_decode"),
+        **_golden_gates(_golden_y4m_values, "frames_y4m"),
+        **_golden_gates(_golden_mjpeg_values, "frames_mjpeg"),
         "snapshot_rowops": (
             "SELECT doc_id, lang, "
             "CASE WHEN lang = 'de' THEN n_chars + 1000 ELSE n_chars END "
@@ -1425,10 +1435,11 @@ def oracle_sql() -> dict[str, str]:
             if OPTIMIZE_GOLDEN
             else "SELECT 1 AS unpinned"
         ),
-        "rasterize_points": _golden_rasterize_values(),
-        "rasterize_polygons": _raster_vector_goldens[0],
-        "vectorize_mask": _raster_vector_goldens[1],
-        "band_histogram": _golden_histogram_values(),
+        **_golden_gates(_golden_rasterize_values, "rasterize_points"),
+        **_golden_gates(
+            _golden_raster_vector_values, "rasterize_polygons", "vectorize_mask"
+        ),
+        **_golden_gates(_golden_histogram_values, "band_histogram"),
         "tpch_q1": (
             "SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, "
             "round(sum(l_extendedprice), 2) AS sum_base_price, "

@@ -112,7 +112,16 @@ def minhash_expr(hashes_sql: str, j: int) -> Column:
 
 
 def simhash_agg_sql(hashes_sql: str, n_sql: str) -> str:
-    """SQL text of :func:`simhash_agg_col` (single-pass 32-counter fold)."""
+    """Single-pass SimHash as SQL text: one ``aggregate`` over the hash
+    array carrying a 32-counter accumulator, then a weighted majority fold.
+
+    Value-identical to :func:`simhash_col` (tests assert it) but each
+    element is visited ONCE instead of once per bit — 2.5× faster in the
+    interpreted HOF evaluator (0.59 → 0.24 s on the sf0.1 documents
+    table). ``n_sql`` is the token count (the size of the token array) —
+    passed separately so callers with a materialized hash column don't
+    re-evaluate the tokenize pipeline just for its length.
+    """
     bits = ", ".join(
         f"cast(shiftright(x, {b}) & 1 as bigint)" for b in range(SIMHASH_BITS)
     )
@@ -146,44 +155,6 @@ def simhash_col(hashes: Column) -> Column:
             F.lit(0).cast("long")
         )
     return acc
-
-
-def simhash_agg_col(hashes: Column, n: Column) -> Column:
-    """Single-pass SimHash: one ``aggregate`` over the hash array carrying
-    a 32-counter accumulator, then a weighted majority fold.
-
-    Value-identical to :func:`simhash_col` (tests assert it) but each
-    element is visited ONCE instead of once per bit — 2.5× faster in the
-    interpreted HOF evaluator (0.59 → 0.24 s on the sf0.1 documents
-    table). ``n`` is the token count (``F.size`` of the token array) —
-    passed separately so callers with a materialized hash column don't
-    re-evaluate the tokenize pipeline just for its length.
-    """
-    def bits(x: Column) -> Column:
-        return F.array(
-            *[
-                F.shiftright(x, b).bitwiseAND(F.lit(1)).cast("long")
-                for b in range(SIMHASH_BITS)
-            ]
-        )
-
-    counts = F.aggregate(
-        hashes,
-        F.array(*([F.lit(0).cast("long")] * SIMHASH_BITS)),
-        lambda acc, x: F.zip_with(acc, bits(x), lambda c, v: c + v),
-    )
-    weights = F.array(
-        *[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)]
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            weights,
-            lambda c, w: F.when(c * 2 > n, w).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, v: a + v,
-    )
 
 
 def hamming32_col(a: Column, b: Column) -> Column:

@@ -205,11 +205,18 @@ def lsh_bucket_topk(
     # before the self-join forks: both legs then share ONE exchange subtree
     # (ReuseExchange), so the Python bucket UDF crosses the table once —
     # not once per side (guide §2.4; the round-7 before-plan showed two
-    # ArrowEvalPython bucket passes over the full table).
-    tagged = base.select(
-        "id",
-        F.posexplode(buckets_udf(dim, n_tables)(F.col("v"))).alias("tbl", "bucket"),
-    ).repartition("tbl", "bucket")
+    # ArrowEvalPython bucket passes over the full table). The not-null
+    # filter states below the exchange what Catalyst would otherwise infer
+    # from the inner join and push into the candidate leg only, making the
+    # two exchange subtrees differ; it drops no row the join would keep.
+    tagged = (
+        base.select(
+            "id",
+            F.posexplode(buckets_udf(dim, n_tables)(F.col("v"))).alias("tbl", "bucket"),
+        )
+        .filter(F.col("id").isNotNull() & F.col("bucket").isNotNull())
+        .repartition("tbl", "bucket")
+    )
     if query_filter is not None:
         # pushdown BARRIER: Catalyst would sink a plain query_filter below
         # the repartition, making the two legs' exchange subtrees differ —

@@ -290,7 +290,7 @@ def with_simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
 
     Pure JVM: token hashes (and the token count) are materialized once
     behind a Generate barrier (see _materialize), then the single-pass
-    aggregate fingerprint (texthash.simhash_agg_col) folds them — each
+    aggregate fingerprint (texthash.simhash_agg_sql) folds them — each
     hash visited once, not once per bit."""
     base = _materialize(
         _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text"))),

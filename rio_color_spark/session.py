@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 #: any task-level self-healing — including the idle-timeout worker kill
 #: below — would fail the whole JOB on first trigger. ``local[N,F]`` is the
 #: retry-capable local master form; every engine session uses it.
-LOCAL_TASK_RETRIES = int(os.environ.get("SPARK_GRAFT_TASK_RETRIES", "4"))
+LOCAL_TASK_RETRIES = 4
 
 _PLAIN_LOCAL = re.compile(r"local\[(\d+|\*)\]$")
 
@@ -27,9 +27,20 @@ def _retryable_master(master: str) -> str:
     """``local[N]`` → ``local[N,F]`` so task failures retry instead of
     failing the job (cluster masters pass through untouched)."""
     m = _PLAIN_LOCAL.fullmatch(master)
-    if m and LOCAL_TASK_RETRIES > 1:
+    if m:
         return f"local[{m.group(1)},{LOCAL_TASK_RETRIES}]"
     return master
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` that fits the host: half the physical
+    memory in whole GiB, at least ``1g``. In local mode the driver JVM
+    also hosts every executor thread, and the Python workers live beside
+    it in the other half."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys_bytes // 2 // 2**30)}g"
+
 
 #: rows per Arrow batch crossing into Python workers. At the default 32×32
 #: uint8 RGB payload (~3 KiB/row) this bounds a batch to ~6 MiB, keeping
@@ -52,7 +63,7 @@ _WORKER_ENV_PINS = {
 def get_spark(
     app_name: str = "rio_color_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with the engine's tuning applied.
 
@@ -64,8 +75,6 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     master = _retryable_master(master)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     # local-mode python workers inherit the driver env
     for k, v in _WORKER_ENV_PINS.items():
@@ -80,19 +89,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.parquet.compression.codec", "zstd")
         # binary image payloads compress poorly and dictionary-encode worse
         .config("spark.sql.parquet.enableVectorizedReader", "true")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        # straggler re-runs are valuable on a real cluster but duplicate
-        # heavy Python tasks on this oversubscribed single box — opt-in
-        .config(
-            "spark.speculation",
-            os.environ.get("SPARK_GRAFT_SPECULATION", "false"),
-        )
-        .config("spark.speculation.multiplier", "2")
-        .config("spark.speculation.quantile", "0.9")
+        .config("spark.ui.enabled", "false")
         # scan-split size. MEASURED on the 100k-image pipeline (r3): 16 MiB
         # splits of a 256-file input made one ~390-row task per file — each
         # task crossed into Python with a single undersized Arrow batch and
@@ -100,21 +101,15 @@ def get_spark(
         # per split fills the 2048-row Arrow batches and amortizes the
         # worker round-trip: 64 MiB → 13.2 s, 128 MiB → 10.8 s at local[8]
         # (and 36.5 s vs 77.7 s at local[2]). 128 MiB is also the standard
-        # cluster setting. Env-tunable; never lower it below the parquet
-        # row-group size (openCostInBytes is the packing knob — see below).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
+        # cluster setting. Never lower it below the parquet row-group size
+        # (openCostInBytes is the packing knob — see below).
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         # packing knob for many-small-files tables: raising the open cost
         # toward maxPartitionBytes gives ~one file per split WITHOUT
         # creating sub-file splits (sub-row-group split planning of zstd
         # parquet measured 15-25x slower scans on this box: a 3.6 GB scan
         # took 148 s at 2 MB splits vs 5.9 s at 64 MB)
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", "4m"),
-        )
+        .config("spark.sql.files.openCostInBytes", "4m")
         .config("spark.ui.showConsoleProgress", "false")
         # self-healing for the (rare, local-mode, 1M-scale) wedged-task
         # hazard: a JVM task thread stuck reading from an idle Python worker
@@ -132,10 +127,7 @@ def get_spark(
         # (batches are 2048 rows / ~6 MiB; kernels run in ms), so a
         # genuinely busy worker is never killed. On a 1000-executor cluster
         # this matters more: some worker somewhere WILL hang.
-        .config(
-            "spark.python.worker.idleTimeoutSeconds",
-            os.environ.get("SPARK_GRAFT_WORKER_IDLE_TIMEOUT", "600"),
-        )
+        .config("spark.python.worker.idleTimeoutSeconds", "600")
         .config("spark.python.worker.killOnIdleTimeout", "true")
     )
     # shuffle/spill scratch on tmpfs when available: the sandbox's single

@@ -8,15 +8,14 @@ already atomic, and the lineage table is a regular Iceberg table). This
 container has no Iceberg jars (SURVEY.md §7), so the facade provides the
 same contract over plain Parquet:
 
-- data lands under ``<base>/data/chunk=<k>/`` (one directory per chunk,
-  written with overwrite semantics so a re-run of a half-written chunk is
-  idempotent)
+- each named output lands under ``<base>/<name>/chunk=<k>/``
+  (:meth:`CheckpointedWriter.write_data`; overwrite semantics, so a re-run
+  of a half-written chunk is idempotent)
 - a chunk is COMMITTED only when a manifest row exists under
   ``<base>/_manifest/``; manifest rows are one-row PARQUET files (so the
   manifest is itself a queryable lineage table — :meth:`lineage_df` — the
   Iceberg metadata-table analogue), written via tmp-file + ``os.replace``
-  (atomic on POSIX), AFTER the data write returns. Legacy ``.json``
-  manifest rows from older runs are still read.
+  (atomic on POSIX), AFTER the data write returns.
 - resume = read the manifest, skip committed chunks; chunk inputs can be
   fingerprinted (``extra={"stripe_md5": ...}``) so a resume over a
   rewritten/compacted source fails fast instead of silently reassigning
@@ -29,7 +28,6 @@ chunk re-runs) is itself under test (tests/test_checkpoint.py).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -58,15 +56,10 @@ class CheckpointedWriter:
 
         out: dict[int, dict] = {}
         for name in sorted(os.listdir(self.manifest_dir)):
-            path = os.path.join(self.manifest_dir, name)
             if name.endswith(".parquet"):
+                path = os.path.join(self.manifest_dir, name)
                 rec = pq.read_table(path).to_pylist()[0]
-            elif name.endswith(".json"):  # pre-r3 manifests
-                with open(path) as f:
-                    rec = json.load(f)
-            else:
-                continue
-            out[rec["chunk"]] = rec
+                out[rec["chunk"]] = rec
         return out
 
     def _commit(self, record: dict) -> None:
@@ -84,17 +77,15 @@ class CheckpointedWriter:
         — the Parquet-facade analogue of Iceberg's metadata tables."""
         rows = []
         for rec in self.committed().values():
-            paths = rec.get("paths") or {"data": rec.get("path")}
-            counts = rec.get("counts") or {}
-            for name, path in paths.items():
+            for name, path in rec["paths"].items():
                 rows.append(
                     (
                         int(rec["chunk"]),
                         name,
                         path,
-                        int(counts.get(name, rec.get("n_rows", 0)) or 0),
-                        rec.get("lineage_id"),
-                        float(rec.get("committed_at", 0.0)),
+                        int(rec["counts"][name]),
+                        rec["lineage_id"],
+                        float(rec["committed_at"]),
                     )
                 )
         return spark.createDataFrame(
@@ -104,13 +95,6 @@ class CheckpointedWriter:
         )
 
     # -- data ----------------------------------------------------------------
-
-    def chunk_path(self, chunk: int) -> str:
-        return os.path.join(self.base, "data", f"chunk={chunk}")
-
-    def write_chunk(self, df: DataFrame, chunk: int, extra: dict | None = None) -> dict:
-        """Write one chunk + commit its lineage record. Idempotent per chunk."""
-        return self.write_chunk_multi({"data": df}, chunk, extra)
 
     def write_data(self, df: DataFrame, name: str, chunk: int) -> str:
         """Write one named output of a chunk (no commit yet); returns path."""
@@ -143,10 +127,8 @@ class CheckpointedWriter:
         counts = {name: self._count_rows(p) for name, p in paths.items()}
         record = {
             "chunk": chunk,
-            "n_rows": counts.get("data", sum(counts.values())),
             "counts": counts,
             "paths": dict(paths),
-            "path": paths.get("data"),
             "lineage_id": uuid.uuid4().hex,
             "committed_at": time.time(),
             **(extra or {}),
@@ -154,64 +136,12 @@ class CheckpointedWriter:
         self._commit(record)
         return record
 
-    def write_chunk_multi(
-        self, dfs: dict[str, DataFrame], chunk: int, extra: dict | None = None
-    ) -> dict:
-        """Write several named outputs for one chunk under one atomic commit.
-
-        Row counts for the lineage record come from reading back the written
-        parquet footers (metadata-only), so the pipeline computes each chunk
-        exactly once.
-        """
-        paths: dict[str, str] = {}
-        counts: dict[str, int] = {}
-        for name, df in dfs.items():
-            paths[name] = self.write_data(df, name, chunk)
-            counts[name] = self._count_rows(paths[name])
-        record = {
-            "chunk": chunk,
-            "n_rows": counts.get("data", sum(counts.values())),
-            "counts": counts,
-            "paths": paths,
-            "path": paths.get("data"),
-            "lineage_id": uuid.uuid4().hex,
-            "committed_at": time.time(),
-            **(extra or {}),
-        }
-        self._commit(record)
-        return record
-
-    def read(self, spark: SparkSession, name: str = "data") -> DataFrame:
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
         """All committed data for one named output (uncommitted dirs ignored)."""
         paths = [
-            r.get("paths", {"data": r.get("path")}).get(name)
-            for r in self.committed().values()
+            r["paths"][name] for r in self.committed().values() if name in r["paths"]
         ]
-        paths = [p for p in paths if p]
         if not paths:
             raise FileNotFoundError(f"no committed chunks for {name!r} under {self.base}")
         return spark.read.parquet(*paths)
 
-
-def run_resumable(
-    writer: CheckpointedWriter,
-    n_chunks: int,
-    make_chunk_df,
-    fail_after: int | None = None,
-) -> list[dict]:
-    """Run chunks 0..n_chunks-1, skipping committed ones (the resume loop).
-
-    ``make_chunk_df(chunk_id) -> DataFrame`` builds each chunk's output.
-    ``fail_after`` simulates a crash after N successful commits (tests).
-    """
-    done = writer.committed()
-    records = []
-    completed = 0
-    for k in range(n_chunks):
-        if k in done:
-            continue
-        records.append(writer.write_chunk(make_chunk_df(k), k))
-        completed += 1
-        if fail_after is not None and completed >= fail_after:
-            raise RuntimeError(f"simulated crash after {completed} chunks")
-    return records

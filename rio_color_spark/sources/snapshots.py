@@ -84,12 +84,11 @@ def _stat_jsonable(v):
 def _keep_row(
     r: dict, name_to_id: dict, type_of_id: dict, specs: dict, predicates: dict,
 ) -> bool:
-    """Per-file pruning decision — the single source of truth shared by
-    the driver planning loop and the distributed manifest scan (both in
-    :meth:`SnapshotTable.plan_files`); a parity test pins that the two
-    paths keep identical sets. ``predicates`` bounds must already be
-    normalized via :func:`_stat_jsonable`; ``specs`` maps spec_id →
-    partition-spec dict."""
+    """Per-file pruning decision of :meth:`SnapshotTable.plan_files`:
+    False only when the manifest row's min/max stats or its hidden-
+    partition tuple prove no row can match. ``predicates`` bounds must
+    already be normalized via :func:`_stat_jsonable`; ``specs`` maps
+    spec_id → partition-spec dict."""
     lo = json.loads(r["lower_bounds"])
     hi = json.loads(r["upper_bounds"])
     for name, (p_lo, p_hi) in predicates.items():
@@ -852,10 +851,6 @@ class SnapshotTable:
         snapshot_id: int | None = None,
         as_of_ms: int | None = None,
         predicates: dict[str, tuple] | None = None,
-        *,
-        spark: SparkSession | None = None,
-        distributed: bool | None = None,
-        distributed_threshold: int = 50_000,
     ) -> tuple[list[dict], dict]:
         """Manifest rows surviving min/max pruning + a planning report.
 
@@ -863,17 +858,9 @@ class SnapshotTable:
         (either side may be None; names resolve to field ids, so pruning
         works across renames). A file is kept unless its stats OR its
         hidden-partition tuple prove no row can match — Iceberg's
-        inclusive metrics evaluator + partition-spec evaluator.
-
-        Planning is driver-side by default (milliseconds to ~10⁴ files,
-        no Spark job — Iceberg's posture for small manifests). Past
-        ``distributed_threshold`` manifest rows (footer count, no data
-        read) and given a ``spark`` session, the per-file evaluation runs
-        as a distributed scan OVER the manifest parquet itself —
-        Iceberg's distributed planning mode for 10⁶+-file tables. Both
-        paths share :func:`_keep_row`, so the kept-set is identical by
-        construction (pinned by a parity test). ``distributed=True/False``
-        forces the choice.
+        inclusive metrics evaluator + partition-spec evaluator, decided
+        per manifest row by :func:`_keep_row`. Planning is a driver-side
+        loop over the manifest parquet (no Spark job).
         """
         meta = self.metadata()
         snap = self._resolve_snapshot(meta, snapshot_id, as_of_ms)
@@ -884,84 +871,24 @@ class SnapshotTable:
         )
         name_to_id = {f["name"]: f["id"] for f in read_schema["fields"]}
         type_of_id = {f["id"]: f["type"] for f in read_schema["fields"]}
-        # normalize predicate bounds ONCE, identically for both paths
-        # (date/timestamp bounds are stored as fixed-width ISO strings —
-        # the predicate side must compare type-consistently)
+        # date/timestamp bounds are stored as fixed-width ISO strings —
+        # the predicate side must compare type-consistently
         norm_preds = {
             name: (_stat_jsonable(p_lo), _stat_jsonable(p_hi))
             for name, (p_lo, p_hi) in (predicates or {}).items()
         }
         specs = {s["spec_id"]: s for s in meta.get("partition_specs", [])}
-        manifest_path = os.path.join(self.base, snap["manifest"])
-
-        if distributed is None:
-            import pyarrow.parquet as pq
-
-            n_manifest = pq.ParquetFile(manifest_path).metadata.num_rows
-            use_dist = spark is not None and n_manifest >= distributed_threshold
-        else:
-            use_dist = bool(distributed) and spark is not None
-        if use_dist:
-            kept, report = self._plan_files_distributed(
-                spark, manifest_path, name_to_id, type_of_id, specs, norm_preds
-            )
-        else:
-            rows = self._manifest_rows(snap)
-            kept = [
-                r for r in rows
-                if _keep_row(r, name_to_id, type_of_id, specs, norm_preds)
-            ]
-            report = {
-                "files_total": len(rows),
-                "files_scanned": len(kept),
-                "rows_total": sum(r["n_rows"] for r in rows),
-                "rows_scanned": sum(r["n_rows"] for r in kept),
-            }
-        report["snapshot_id"] = snap["snapshot_id"]
-        return kept, report
-
-    def _plan_files_distributed(
-        self,
-        spark: SparkSession,
-        manifest_path: str,
-        name_to_id: dict,
-        type_of_id: dict,
-        specs: dict,
-        predicates: dict,
-    ) -> tuple[list[dict], dict]:
-        """Spark-side manifest evaluation: the per-file json-decode +
-        pruning predicate (:func:`_keep_row` — the SAME function the
-        driver loop runs) executes on executors via ``mapInPandas`` over
-        the manifest parquet; the driver receives only the surviving
-        rows. O(kept) driver memory instead of O(files_total) Python-loop
-        time — the planning bottleneck the driver loop hits at 10⁶ files.
-        """
-        from pyspark.sql import functions as F
-
-        mdf = spark.read.parquet(manifest_path)
-
-        def prune(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                mask = [
-                    _keep_row(rec, name_to_id, type_of_id, specs, predicates)
-                    for rec in pdf.to_dict("records")
-                ]
-                out = pdf[pd.Series(mask, index=pdf.index)]
-                if len(out):
-                    yield out
-
-        kept = [r.asDict() for r in mdf.mapInPandas(prune, schema=mdf.schema).collect()]
-        tot = mdf.agg(
-            F.count("*").alias("files"), F.sum("n_rows").alias("rows")
-        ).collect()[0]
+        rows = self._manifest_rows(snap)
+        kept = [
+            r for r in rows
+            if _keep_row(r, name_to_id, type_of_id, specs, norm_preds)
+        ]
         report = {
-            "files_total": int(tot["files"]),
+            "files_total": len(rows),
             "files_scanned": len(kept),
-            "rows_total": int(tot["rows"] or 0),
+            "rows_total": sum(r["n_rows"] for r in rows),
             "rows_scanned": sum(r["n_rows"] for r in kept),
-            "planned_distributed": True,
+            "snapshot_id": snap["snapshot_id"],
         }
         return kept, report
 
@@ -991,8 +918,7 @@ class SnapshotTable:
         if snap is None:
             return spark.createDataFrame([], ddl)
         kept, _ = self.plan_files(
-            snapshot_id=snapshot_id, as_of_ms=as_of_ms, predicates=predicates,
-            spark=spark,  # auto-distributed planning past the manifest threshold
+            snapshot_id=snapshot_id, as_of_ms=as_of_ms, predicates=predicates
         )
         if not kept:
             return spark.createDataFrame([], ddl)

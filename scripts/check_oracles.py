@@ -62,28 +62,28 @@ def run_all(spark, sf_dir: str, only=None, verbose=True) -> dict[str, list[str]]
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
             results[name] = [f"SPARK ERROR {type(ex).__name__}: {str(ex)[:200]}"]
-            continue
-        if name not in oracles:
-            results[name] = []
-            if verbose:
-                print(f"{name:18s} rows-only: {len(sdf)} rows (no oracle)")
-            continue
-        try:
-            ddf = con.execute(oracles[name]).df()
-        except Exception as ex:
-            results[name] = [f"DUCKDB ERROR {type(ex).__name__}: {str(ex)[:200]}"]
-            continue
-        results[name] = compare_query(sdf, ddf)
+        else:
+            if name not in oracles:
+                results[name] = []
+                if verbose:
+                    print(f"{name:18s} rows-only: {len(sdf)} rows (no oracle)")
+                continue
+            try:
+                ddf = con.execute(oracles[name]).df()
+            except Exception as ex:
+                results[name] = [f"DUCKDB ERROR {type(ex).__name__}: {str(ex)[:200]}"]
+            else:
+                results[name] = compare_query(sdf, ddf)
         if verbose:
             mark = "OK" if not results[name] else "FAIL: " + " | ".join(results[name])[:400]
-            print(f"{name:18s} {mark} ({len(sdf)} rows)")
+            print(f"{name:18s} {mark}" + ("" if results[name] else f" ({len(sdf)} rows)"))
     return results
 
 
 if __name__ == "__main__":
     from rio_color_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     res = run_all(spark, "/root/testdata/sf0.01", set(sys.argv[1:]) or None)
     failures = {k: v for k, v in res.items() if v}
     print("\nFAILURES:", failures if failures else "none")

@@ -9,41 +9,28 @@ from pyspark.sql import functions as F
 
 from rio_color_spark.functions.pip import pack_polygons
 from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
-from rio_color_spark.sources.catalog import CheckpointedWriter, run_resumable
+from rio_color_spark.sources.catalog import CheckpointedWriter
 from rio_color_spark.sources.images import images_df
 from rio_color_spark.sources.polygons import make_polygons
 
 
+def _commit(w, df, chunk, name="data"):
+    return w.commit_chunk(chunk, {name: w.write_data(df, name, chunk)})
+
+
 def test_chunked_write_and_lineage(spark, tmp_path):
     w = CheckpointedWriter(str(tmp_path / "out"))
-    run_resumable(
-        w, 4, lambda k: spark.range(k * 10, (k + 1) * 10).withColumn("chunk", F.lit(k))
-    )
+    for k in range(4):
+        _commit(w, spark.range(k * 10, (k + 1) * 10).withColumn("chunk", F.lit(k)), k)
     recs = w.committed()
     assert sorted(recs) == [0, 1, 2, 3]
-    assert all(r["n_rows"] == 10 for r in recs.values())
+    assert all(r["counts"] == {"data": 10} for r in recs.values())
     assert len({r["lineage_id"] for r in recs.values()}) == 4
-    assert w.read(spark).count() == 40
-
-
-def test_crash_and_resume_skips_committed(spark, tmp_path):
-    base = str(tmp_path / "out")
-    w = CheckpointedWriter(base)
-    calls = []
-
-    def make(k):
-        calls.append(k)
-        return spark.range(k * 5, (k + 1) * 5)
-
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_resumable(w, 5, make, fail_after=2)
-    assert sorted(w.committed()) == [0, 1]
-
-    # resume with a fresh writer over the same base
-    run_resumable(CheckpointedWriter(base), 5, make)
-    assert calls == [0, 1, 2, 3, 4]  # chunks 0,1 NOT recomputed on resume
-    assert sorted(CheckpointedWriter(base).committed()) == [0, 1, 2, 3, 4]
-    assert CheckpointedWriter(base).read(spark).count() == 25
+    assert w.read(spark, "data").count() == 40
+    # the manifest is itself a queryable lineage table
+    lin = w.lineage_df(spark)
+    assert lin.filter("name = 'data'").count() == 4
+    assert lin.groupBy().sum("n_rows").collect()[0][0] == 40
 
 
 def test_pipeline_resume_equals_uninterrupted(spark, tmp_path):
@@ -55,8 +42,20 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path):
     a_base = str(tmp_path / "a")
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_pipeline(spark, images, a_base, packed, n_chunks=4, fail_after=2)
-    assert len(CheckpointedWriter(a_base).committed()) == 2
+    assert sorted(CheckpointedWriter(a_base).committed()) == [0, 1]
+
+    def part_files():
+        return {
+            k: sorted(os.listdir(os.path.join(a_base, "images", f"chunk={k}")))
+            for k in (0, 1)
+        }
+
+    # Spark names part files afresh on every write: unchanged names prove
+    # the resume skipped the committed chunks instead of recomputing them
+    before = part_files()
     run_pipeline(spark, images, a_base, packed, n_chunks=4)  # resume
+    assert part_files() == before
+    assert sorted(CheckpointedWriter(a_base).committed()) == [0, 1, 2, 3]
 
     b_base = str(tmp_path / "b")
     run_pipeline(spark, images, b_base, packed, n_chunks=4)  # uninterrupted
@@ -130,14 +129,13 @@ def test_fused_pip_matches_standalone_join(spark, tmp_path):
 def test_writer_creation_options_applied(spark, tmp_path):
     """--co analogue: writer creation options reach every chunk write."""
     w = CheckpointedWriter(str(tmp_path / "o"), {"compression": "gzip"})
-    w.write_chunk(spark.range(10), 0)
+    rec = _commit(w, spark.range(10), 0)
     files = [
-        f for f in os.listdir(w.chunk_path(0))
+        f for f in os.listdir(rec["paths"]["data"])
         if f.endswith(".parquet")
     ]
     assert files and all(".gz." in f for f in files)
-    assert w.read(spark).count() == 10
-
+    assert w.read(spark, "data").count() == 10
 
 
 def test_resume_rejects_rewritten_source(spark, tmp_path):
@@ -153,14 +151,6 @@ def test_resume_rejects_rewritten_source(spark, tmp_path):
     images_df(spark, 200, partitions=7).write.mode("overwrite").parquet(src)
     with pytest.raises(RuntimeError, match="stripe changed"):
         run_pipeline(spark, src, base, packed, n_chunks=2)
-
-
-def test_lineage_df_is_queryable(spark, tmp_path):
-    w = CheckpointedWriter(str(tmp_path / "out"))
-    run_resumable(w, 3, lambda k: spark.range(k * 10, (k + 1) * 10))
-    lin = w.lineage_df(spark)
-    assert lin.filter("name = 'data'").count() == 3
-    assert lin.groupBy().sum("n_rows").collect()[0][0] == 30
 
 
 def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):

@@ -186,8 +186,9 @@ def test_ngram_jaccard_hot_group_fails_fast(spark, docs):
 
 
 def test_simhash_agg_equals_reference_column(spark, docs):
-    """The single-pass aggregate SimHash equals the 32-pass reference
-    Column formulation value-for-value on the same token hashes."""
+    """The single-pass aggregate SimHash (the SQL-text engine form) equals
+    the 32-pass reference Column formulation value-for-value on the same
+    token hashes."""
     from rio_color_spark.functions import texthash as TH
 
     base = docs.select(
@@ -197,7 +198,7 @@ def test_simhash_agg_equals_reference_column(spark, docs):
     )
     out = base.select(
         "doc_id",
-        TH.simhash_agg_col(F.col("th"), F.col("n")).alias("one_pass"),
+        TH.simhash_agg_expr("th", "n").alias("one_pass"),
         TH.simhash_col(F.col("th")).alias("ref"),
     ).collect()
     assert len(out) > 0

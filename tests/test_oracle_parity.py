@@ -27,3 +27,31 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {
         "image_id", "caption", "fmt", "w", "h", "tile_x", "tile_y", "cell_id",
     }
+
+
+def test_missing_golden_fails_only_its_gate(monkeypatch):
+    """One golden that cannot be built (a missing fixture) turns into an
+    erroring oracle for its own gate; every other gate keeps its SQL."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from scripts.check_oracles import TABLES
+
+    def missing():
+        raise FileNotFoundError("rgb8.tif")
+
+    monkeypatch.setattr(E, "_golden_tiff_values", missing)
+    oracles = E.oracle_sql()
+    assert set(oracles) == set(E.queries())
+
+    failed = set()
+    with duckdb.connect() as con:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        for name, sql in oracles.items():
+            try:
+                con.execute(sql).fetchall()
+            except duckdb.Error as ex:
+                failed.add(name)
+                assert "FileNotFoundError: rgb8.tif" in str(ex)
+    assert failed == {"tiff_ingest"}

@@ -5,12 +5,14 @@
 - the PIP join broadcasts the polygon cover — the fact side is never
   shuffled (no Exchange between the fact scan and the join)
 - chunk scans read only their own files (pruning at planning time)
+- the LSH self-joins run their bucket UDF once, behind a reused exchange
 
 These are the properties that keep the flagship pipeline viable at 100 TB;
 value correctness is gated elsewhere (oracles + resume tests).
 """
 
 import numpy as np
+import pytest
 
 from rio_color_spark.functions.pip import pack_polygons
 from rio_color_spark.operators.spatial import with_spatial_index
@@ -32,7 +34,7 @@ def test_assignments_scan_prunes_bytes(spark, tmp_path):
     packed = pack_polygons(make_polygons(10))
     w = run_pipeline(spark, src, str(tmp_path / "out"), packed, n_chunks=2)
 
-    meta = spark.read.parquet(w.chunk_path(0).replace("data", "images")).select(
+    meta = spark.read.parquet(w.committed()[0]["paths"]["images"]).select(
         "image_id", "lon", "lat", "tile_xyz", "cell_id", "poly_ids"
     )
     plan = _plan(meta)
@@ -99,3 +101,19 @@ def test_rowops_rewrite_plans_are_jvm_joins(spark, tmp_path):
         plan = _plan(df)
         assert "EvalPython" not in plan and "ArrowEval" not in plan
         assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+
+
+@pytest.mark.parametrize("name", ["ann_lsh", "ann_lsh_multi", "cosine_neardup"])
+def test_lsh_bucket_udf_runs_once_via_reused_exchange(spark, name):
+    """The bucket UDF crosses the table once: both self-join legs read one
+    (tbl, bucket) exchange, which AQE reuses at runtime. Checked on the
+    final adaptive plan, which exists only after execution."""
+    import __spark_entry__ as E
+    from test_oracle_parity import SF
+
+    df = getattr(E, "q_" + name)(spark, SF)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython [_b(") == 1
+    reused = [line for line in final.splitlines() if "ReusedExchange" in line]
+    assert any("Exchange hashpartitioning(tbl" in line for line in reused)

@@ -687,37 +687,6 @@ def test_drop_partition_source_column_rejected(spark, tmp_path):
     assert [f["name"] for f in t.schema()["fields"]] == ["doc_id"]
 
 
-def test_distributed_planning_parity(spark, tmp_path):
-    """The mapInPandas manifest scan must keep the IDENTICAL file set the
-    driver loop keeps — both paths run the same _keep_row — including
-    hidden-partition pruning and renamed-column predicates."""
-    t = SnapshotTable.create(
-        str(tmp_path / "dp2"), "doc_id bigint, lang string, n_chars bigint",
-        partition_spec=[("truncate", "doc_id", 100)],
-    )
-    t.append(_docs(spark, 0, 400).repartition(4))
-    t.append(_docs(spark, 400, 500))
-    t.rename_column("doc_id", "document_id")
-
-    for preds in (
-        None,
-        {"document_id": (120, 180)},
-        {"document_id": (450, None)},
-        {"lang": ("de", "de")},
-        {"document_id": (42, 42), "lang": (None, "zz")},
-    ):
-        k_drv, r_drv = t.plan_files(predicates=preds, spark=spark, distributed=False)
-        k_dst, r_dst = t.plan_files(predicates=preds, spark=spark, distributed=True)
-        assert sorted(r["file_path"] for r in k_drv) == sorted(
-            r["file_path"] for r in k_dst
-        ), preds
-        assert r_dst.pop("planned_distributed") is True
-        assert r_drv == r_dst, preds
-    # auto mode: small manifests stay on the driver (no Spark job)
-    _, rep = t.plan_files(spark=spark)
-    assert "planned_distributed" not in rep
-
-
 # -- round-6 row-level operations (DELETE FROM / UPDATE, copy-on-write) ----
 
 
