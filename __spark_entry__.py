@@ -699,13 +699,9 @@ def q_tiff_ingest(spark, sf_dir):
     """Distributed GeoTIFF ingest (reference tests/rgb8.tif, the parity
     raster): driver parses only the header, executors decode disjoint
     LZW tile ranges into image-table rows (sources/tiff_bridge.py)."""
-    import tempfile
-
     from rio_color_spark.sources import tiff_bridge as TB
 
-    tbl = tempfile.mkdtemp(prefix="rcs_gate_tiff_") + "/tbl"
-    TB.ingest_tiff(spark, REF_TIF, tbl)
-    return spark.read.parquet(tbl).select(
+    return TB.tiff_rows(spark, REF_TIF)[0].select(
         "image_id", "w", "h", "fmt",
         F.length("bytes").alias("n_bytes"),
         F.md5("bytes").alias("bytes_md5"),

@@ -26,6 +26,8 @@ Run via ``python -m rio_color_spark.cli ...`` or ship the package with
 from __future__ import annotations
 
 import argparse
+import contextlib
+import dataclasses
 import sys
 
 
@@ -201,12 +203,14 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
+@contextlib.contextmanager
 def _session(jobs: int):
-    """(spark, owned): reuse an active session when one exists — under
-    spark-submit (or tests) its lifecycle belongs to its owner; stop only
-    what we created. A spark-submit --master (SparkConf) also wins over
-    -j: the jobs flag sizes LOCAL runs, a cluster sizes itself (reference
-    -j ≈ pool size, cli.py:103-112 — here the pool is the cluster)."""
+    """Spark session for one command: reuse an active session when one
+    exists — under spark-submit (or tests) its lifecycle belongs to its
+    owner; stop only what we created. A spark-submit --master (SparkConf)
+    also wins over -j: the jobs flag sizes LOCAL runs, a cluster sizes
+    itself (reference -j ≈ pool size, cli.py:103-112 — here the pool is
+    the cluster)."""
     from pyspark import SparkConf
     from pyspark.sql import SparkSession
 
@@ -215,57 +219,41 @@ def _session(jobs: int):
     owned = SparkSession.getActiveSession() is None
     configured = SparkConf().get("spark.master", None)
     spark = get_spark("rio-color-spark-cli", master=configured or f"local[{jobs}]")
-    return spark, owned
-
-
-def _run(src: str, dst: str, ops: str, out_dtype, jobs: int, co: dict) -> None:
-    from rio_color_spark.operators.color import color_correct
-    from rio_color_spark.sources import tiff_bridge as TB
-
-    spark, owned = _session(jobs)
     try:
-        if TB.is_tiff_path(src) and TB.is_tiff_path(dst):
-            # the reference's native surface: .tif in, .tif out
-            # (reference cli.py:81-121); --co become GDAL-style container
-            # creation options instead of parquet writer options
-            TB.color_correct_tiff(
-                spark, src, dst, ops, out_dtype=out_dtype, creation_options=co
-            )
-            return
-        import os
-        import shutil
-        import tempfile
-
-        manifest_src = None
-        if TB.is_tiff_path(src):
-            tmp = tempfile.mkdtemp(prefix="rio_color_spark_ingest_")
-            src_table = f"{tmp}/src_table"
-            TB.ingest_tiff(spark, src, src_table)
-            src = src_table
-        if os.path.exists(os.path.join(src, TB.MANIFEST)):
-            manifest_src = os.path.join(src, TB.MANIFEST)
-        df = spark.read.parquet(src)
-        out = color_correct(df, ops, out_dtype=out_dtype)
-        if TB.is_tiff_path(dst):
-            if manifest_src is None:
-                raise SystemExit(
-                    "exporting a .tif needs the source table's "
-                    f"{TB.MANIFEST} manifest; ingest the source tif first"
-                )
-            tmp = tempfile.mkdtemp(prefix="rio_color_spark_export_")
-            dst_table = f"{tmp}/dst_table"
-            out.write.mode("overwrite").parquet(dst_table)
-            shutil.copy(manifest_src, os.path.join(dst_table, TB.MANIFEST))
-            TB.export_tiff(spark, dst_table, dst, creation_options=co)
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
-        out.write.mode("overwrite").options(**co).parquet(dst)
-        if manifest_src is not None:
-            # keep the table exportable: the container profile travels
-            shutil.copy(manifest_src, os.path.join(dst, TB.MANIFEST))
+        yield spark
     finally:
         if owned:
             spark.stop()
+
+
+def _run(src: str, dst: str, ops: str, out_dtype, jobs: int, co: dict) -> None:
+    """One lazy path for every src/dst kind: source (a .tif, or a parquet
+    table with its optional manifest) → ``color_correct`` → sink (a .tif,
+    whose --co are GDAL-style container creation options as in reference
+    cli.py:81-121; or a parquet table, whose --co are parquet writer
+    options, with a manifest holding the output profile)."""
+    from rio_color_spark.operators.color import color_correct
+    from rio_color_spark.sources import codec
+    from rio_color_spark.sources import tiff_bridge as TB
+
+    with _session(jobs) as spark:
+        if TB.is_tiff_path(src):
+            df, prof = TB.tiff_rows(spark, src)
+        else:
+            df, prof = TB.table_rows(spark, src)
+        if prof is None and TB.is_tiff_path(dst):
+            raise SystemExit(
+                "exporting a .tif needs the source table's "
+                f"{TB.MANIFEST} manifest; ingest the source tif first"
+            )
+        out = color_correct(df, ops, out_dtype=out_dtype)
+        if TB.is_tiff_path(dst):
+            fmt = codec.fmt_for_dtype(out_dtype or prof.np_dtype, prof.count)
+            TB.write_tiff_rows(out, prof, fmt, dst, co)
+        else:
+            if prof is not None:
+                prof = dataclasses.replace(prof, dtype=out_dtype or prof.dtype)
+            TB.write_table(out, prof, dst, co)
 
 
 def _table_cmd(args, parser) -> int:
@@ -342,8 +330,7 @@ def _table_cmd(args, parser) -> int:
 
     # append / compact run distributed
     jobs = check_jobs(args.jobs, parser)
-    spark, owned = _session(jobs)
-    try:
+    with _session(jobs) as spark:
         if args.action == "append":
             if not args.src:
                 parser.error("table append needs a source parquet path")
@@ -422,9 +409,6 @@ def _table_cmd(args, parser) -> int:
                 parser.error(str(e))
             print(_json.dumps({"version": snap["version"],
                                "snapshot_id": snap["current_snapshot_id"]}))
-    finally:
-        if owned:
-            spark.stop()
     return 0
 
 
@@ -448,19 +432,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "optimize":
-        from pyspark import SparkConf
-        from pyspark.sql import SparkSession
-
         from rio_color_spark.operators.optimize import optimize_color
-        from rio_color_spark.session import get_spark
 
         jobs = check_jobs(args.jobs, parser)
-        owned = SparkSession.getActiveSession() is None
-        configured = SparkConf().get("spark.master", None)
-        spark = get_spark(
-            "rio-color-spark-cli", master=configured or f"local[{jobs}]"
-        )
-        try:
+        with _session(jobs) as spark:
             res = optimize_color(
                 spark.read.parquet(args.src_path),
                 spark.read.parquet(args.ref_path),
@@ -468,9 +443,6 @@ def main(argv: list[str] | None = None) -> int:
                 seed=args.seed,
                 max_pixels=args.max_pixels,
             )
-        finally:
-            if owned:
-                spark.stop()
         # reference progress_report prints best cmd + scores
         # (scripts/optimize_color.py:29-47); final echo shape mirrors it
         print(f"rio color src dst {res['ops']}")
@@ -482,27 +454,19 @@ def main(argv: list[str] | None = None) -> int:
         from rio_color_spark.sources import tiff_bridge as TB
 
         jobs = check_jobs(args.jobs, parser)
-        spark, owned = _session(jobs)
-        try:
+        with _session(jobs) as spark:
             TB.ingest_tiff(spark, args.src_tif, args.dst_table)
-        finally:
-            if owned:
-                spark.stop()
         return 0
 
     if args.command == "export":
         from rio_color_spark.sources import tiff_bridge as TB
 
         jobs = check_jobs(args.jobs, parser)
-        spark, owned = _session(jobs)
-        try:
+        with _session(jobs) as spark:
             TB.export_tiff(
                 spark, args.src_table, args.dst_tif,
                 creation_options=_co_pairs(args.co, parser),
             )
-        finally:
-            if owned:
-                spark.stop()
         return 0
 
     if args.command == "table":

@@ -39,6 +39,7 @@ assembling writer holds O(one chunk) in memory regardless of raster size.
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 from dataclasses import dataclass, field
@@ -626,6 +627,11 @@ class TiffChunkWriter:
     Classic TIFF (version 42) offsets are 32-bit; :meth:`close` raises if
     the file outgrew 4 GiB — write with ``prof.bigtiff=True`` (or
     ``--co bigtiff=yes``) for version 43's 64-bit offsets.
+
+    The container is assembled under the sibling name ``path + ".part"``
+    and moved onto ``path`` only when :meth:`close` succeeds; a failed
+    close, or an exception inside a ``with`` block, removes it, so a
+    failed write never leaves a partial file.
     """
 
     def __init__(self, path: str, prof: TiffProfile):
@@ -636,7 +642,9 @@ class TiffChunkWriter:
         # index = plane * len(grid) + spatial (plane-major, TIFF 6.0)
         self.n_planes = prof.count if prof.planar == 2 else 1
         n = len(self.grid) * self.n_planes
-        self._f = open(path, "wb")
+        self.path = path
+        self._part = path + ".part"
+        self._f = open(self._part, "wb")
         bo = "<"
         if self.bigtiff:
             # II + 43 + offset-size 8 + reserved 0 + IFD offset (patched)
@@ -650,6 +658,21 @@ class TiffChunkWriter:
     @property
     def n_chunks(self) -> int:
         return len(self._counts)
+
+    def __enter__(self) -> TiffChunkWriter:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            self.close()
+        else:
+            self._discard()
+
+    def _discard(self) -> None:
+        """Drop the partial container; ``path`` is left untouched."""
+        self._f.close()
+        if os.path.exists(self._part):
+            os.remove(self._part)
 
     def add(self, index: int, payload: bytes) -> None:
         if not 0 <= index < len(self._counts):
@@ -666,9 +689,18 @@ class TiffChunkWriter:
         self._pos += len(payload) + (len(payload) & 1)
 
     def close(self) -> None:
+        """Write the tail IFD and move the container onto ``path``."""
+        try:
+            self._write_ifd()
+        except BaseException:
+            self._discard()
+            raise
+        self._f.close()
+        os.replace(self._part, self.path)
+
+    def _write_ifd(self) -> None:
         missing = [i for i, c in enumerate(self._counts) if c < 0]
         if missing:
-            self._f.close()
             raise ValueError(
                 f"{len(missing)} of {len(self._counts)} chunk payloads missing "
                 f"(first: {missing[:5]})"
@@ -738,7 +770,6 @@ class TiffChunkWriter:
                 body += payload.ljust(vbytes, b"\0")
         end = ifd_off + ifd_size + len(ovf)
         if not self.bigtiff and end > 0xFFFFFFFF:
-            self._f.close()
             raise ValueError(
                 f"file is {end} bytes — classic TIFF offsets overflow 4 GiB; "
                 f"write with bigtiff (--co bigtiff=yes)"
@@ -746,21 +777,19 @@ class TiffChunkWriter:
         self._f.write(head + body + struct.pack(bo + ("Q" if self.bigtiff else "I"), 0) + ovf)
         self._f.seek(8 if self.bigtiff else 4)
         self._f.write(struct.pack(bo + ("Q" if self.bigtiff else "I"), ifd_off))
-        self._f.close()
 
 
 def write_tiff_chunks(path: str, payloads: list[bytes], prof: TiffProfile) -> None:
     """Assemble a TIFF from pre-compressed chunk payloads (index order must
     match :func:`_chunk_grid`). Thin wrapper over :class:`TiffChunkWriter`;
     the Spark export path streams into the writer directly."""
-    w = TiffChunkWriter(path, prof)
-    if len(payloads) != w.n_chunks:
-        raise ValueError(
-            f"expected {w.n_chunks} chunk payloads, got {len(payloads)}"
-        )
-    for i, p in enumerate(payloads):
-        w.add(i, p)
-    w.close()
+    with TiffChunkWriter(path, prof) as w:
+        if len(payloads) != w.n_chunks:
+            raise ValueError(
+                f"expected {w.n_chunks} chunk payloads, got {len(payloads)}"
+            )
+        for i, p in enumerate(payloads):
+            w.add(i, p)
 
 
 def write_tiff(path: str, arr: np.ndarray, prof: TiffProfile) -> None:

@@ -3,22 +3,25 @@ windowed raster IO (reference rio_color/scripts/cli.py:81-121 reads GeoTIFF
 windows via riomucho and writes them back preserving profile + creation
 options + colorinterp; tests/test_cli.py:121-169,199-219 pin that contract).
 
-Spark-first shape:
+Spark-first shape — a ``.tif`` is a lazy DataFrame source and a sink:
 
-- **ingest** — the DRIVER parses only the TIFF structure (header, IFD,
-  tag payloads — wherever they live in the file; libtiff writes them at
-  the tail) through a range-read fetch, turning the raster into a
-  DataFrame of chunk byte-ranges; each TASK then reads and decodes its
-  own disjoint tile ranges (``mapInPandas``) and emits image-table rows.
-  A 100 GB (Big)TIFF on a shared filesystem ingests as a fully parallel
-  scan — pixel data never passes through the driver.
-- **export** — tasks encode + compress their tiles (the CPU-heavy step);
-  the driver streams opaque compressed payloads into the single-file
-  container via ``toLocalIterator`` + :class:`tiff.TiffChunkWriter`
-  (tail-written IFD, any arrival order), holding at most ONE Spark
-  partition of compressed chunks at a time — never the whole raster.
-  A single .tif has one writer by construction — the same constraint
-  rasterio has. Containers past 4 GiB need ``--co bigtiff=yes``.
+- **source** (:func:`tiff_rows`) — the DRIVER parses only the TIFF
+  structure (header, IFD, tag payloads — wherever they live in the file;
+  libtiff writes them at the tail) through a range-read fetch, turning
+  the raster into a DataFrame of chunk byte-ranges; each TASK then reads
+  and decodes its own disjoint tile ranges (``mapInPandas``) and emits
+  image-table rows. A 100 GB (Big)TIFF on a shared filesystem reads as a
+  fully parallel scan — pixel data never passes through the driver.
+- **sink** (:func:`write_tiff_rows`) — tasks encode + compress their
+  tiles (the CPU-heavy step); the driver streams opaque compressed
+  payloads into the single-file container via ``toLocalIterator`` +
+  :class:`tiff.TiffChunkWriter` (tail-written IFD, any arrival order),
+  holding at most ONE Spark partition of compressed chunks at a time —
+  never the whole raster. A single .tif has one writer by construction —
+  the same constraint rasterio has. Containers past 4 GiB need
+  ``--co bigtiff=yes``.
+- ``rio color in.tif out.tif`` (:func:`color_correct_tiff`) is source →
+  ``color_correct`` → sink: one Spark plan, no intermediate table.
 - **re-tiling** — when creation options change the chunk grid
   (blockxsize/blockysize/tiled), pixel blocks are re-gridded on
   executors: each source chunk splits into target-aligned pieces,
@@ -27,18 +30,20 @@ Spark-first shape:
   makes the result exact (same full-raster array, new grid).
 - every chunk row lands in the standard images schema (sources/images.py
   ``IMAGES_SCHEMA``), so the ENTIRE existing operator surface — color
-  chains, optimize, histograms, dedup of captions, … — runs on ingested
-  rasters unchanged.
+  chains, optimize, histograms, dedup of captions, … — runs on TIFF
+  rows unchanged.
 
-The container profile (dtype, tiling, compression, photometric,
-ExtraSamples, GeoTIFF/GDAL tags) rides in a ``_tiff_profile.json``
-manifest inside the table directory — underscore-prefixed, so Spark's
-listing treats it as a non-data file (pipeline._list_data_files applies
-the same rule).
+A parquet table is written only on request (:func:`ingest_tiff`, the
+CLI's table destinations). Its container profile (dtype, tiling,
+compression, photometric, ExtraSamples, GeoTIFF/GDAL tags) rides in a
+``_tiff_profile.json`` manifest inside the table directory —
+underscore-prefixed, so Spark's listing treats it as a non-data file
+(pipeline._list_data_files applies the same rule).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from collections.abc import Iterator
@@ -68,7 +73,7 @@ _CHUNK_META_SCHEMA = (
 )
 
 
-def _profile_to_json(prof: T.TiffProfile, n_chunks: int, source: str) -> str:
+def _profile_to_json(prof: T.TiffProfile) -> str:
     return json.dumps(
         {
             "width": prof.width,
@@ -87,16 +92,14 @@ def _profile_to_json(prof: T.TiffProfile, n_chunks: int, source: str) -> str:
             "jpeg_quality": prof.jpeg_quality,
             "planar": prof.planar,
             "geo": {str(t): [typ, cnt, payload.hex()] for t, (typ, cnt, payload) in prof.geo.items()},
-            "n_chunks": n_chunks,
-            "source": source,
         },
         indent=1,
     )
 
 
-def _profile_from_json(s: str) -> tuple[T.TiffProfile, int]:
+def _profile_from_json(s: str) -> T.TiffProfile:
     d = json.loads(s)
-    prof = T.TiffProfile(
+    return T.TiffProfile(
         width=d["width"],
         height=d["height"],
         count=d["count"],
@@ -114,10 +117,9 @@ def _profile_from_json(s: str) -> tuple[T.TiffProfile, int]:
         planar=d.get("planar", 1),
         geo={int(t): (v[0], v[1], bytes.fromhex(v[2])) for t, v in d["geo"].items()},
     )
-    return prof, d["n_chunks"]
 
 
-def read_profile(table_path: str) -> tuple[T.TiffProfile, int]:
+def read_profile(table_path: str) -> T.TiffProfile:
     with open(os.path.join(table_path, MANIFEST)) as f:
         return _profile_from_json(f.read())
 
@@ -131,16 +133,16 @@ def read_structure(tif_path: str) -> tuple[T.TiffProfile, list[T.ChunkRef]]:
         return T.read_ifd_fetch(T.file_fetch(f, prefix))
 
 
-def ingest_tiff(
-    spark: SparkSession, tif_path: str, table_path: str, parallelism: int | None = None
-) -> None:
-    """GeoTIFF → parquet image table (one row per tile/strip) + manifest."""
+def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProfile]:
+    """GeoTIFF → lazy image-table DataFrame (one row per tile/strip) and
+    its container profile. Only the structure parse runs now; tile reads
+    and decodes run on executors when the DataFrame is consumed."""
     tif_path = os.path.abspath(tif_path)
     prof, chunks = read_structure(tif_path)
     fmt = codec.fmt_for_dtype(prof.np_dtype, prof.count)
     stem = os.path.splitext(os.path.basename(tif_path))[0]
 
-    # one ingest row per SPATIAL chunk: a planar (band-separate) source
+    # one row per SPATIAL chunk: a planar (band-separate) source
     # contributes `count` byte ranges per row (one per band, plane order);
     # the executor decodes each plane and stacks — same full-band output
     # rows as a chunky source, no extra shuffle
@@ -166,18 +168,12 @@ def ingest_tiff(
             "nbytess": [[c.nbytes for c in g] for g in groups],
         }
     )
-    if parallelism is None:
-        parallelism = max(1, min(spark.sparkContext.defaultParallelism, len(groups)))
+    parallelism = max(1, min(spark.sparkContext.defaultParallelism, len(groups)))
     meta_df = spark.createDataFrame(meta, schema=_CHUNK_META_SCHEMA).repartition(
         parallelism
     )
 
-    # decoder state shipped by value (tiny): the profile dict, not the
-    # file; n_chunks counts SPATIAL chunks (== image-table rows)
-    prof_json = _profile_to_json(prof, len(groups), tif_path)
-
     def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p, _ = _profile_from_json(prof_json)
         with open(tif_path, "rb") as f:
             for pdf in batches:
                 out = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
@@ -192,7 +188,7 @@ def ingest_tiff(
                             r.stored_width, r.stored_height, int(off),
                             int(nb), plane=pi if planar else -1,
                         )
-                        planes.append(T.decode_chunk(raw, p, ch))
+                        planes.append(T.decode_chunk(raw, prof, ch))
                     arr = (
                         planes[0] if len(planes) == 1
                         else np.concatenate(planes, axis=0)
@@ -206,10 +202,24 @@ def ingest_tiff(
                     out["phash"].append(int(phash_for(np.array([r.index]))[0]))
                 yield pd.DataFrame(out)
 
-    rows = meta_df.mapInPandas(decode_rows, schema=IMAGES_SCHEMA)
-    rows.write.mode("overwrite").parquet(table_path)
-    with open(os.path.join(table_path, MANIFEST), "w") as f:
-        f.write(prof_json)
+    return meta_df.mapInPandas(decode_rows, schema=IMAGES_SCHEMA), prof
+
+
+def write_table(
+    df: DataFrame, prof: T.TiffProfile | None, table_path: str,
+    options: dict[str, str] | None = None,
+) -> None:
+    """Image rows → parquet table; with a profile, also the manifest that
+    keeps the table exportable as a GeoTIFF."""
+    df.write.mode("overwrite").options(**(options or {})).parquet(table_path)
+    if prof is not None:
+        with open(os.path.join(table_path, MANIFEST), "w") as f:
+            f.write(_profile_to_json(prof))
+
+
+def ingest_tiff(spark: SparkSession, tif_path: str, table_path: str) -> None:
+    """GeoTIFF → parquet image table (one row per tile/strip) + manifest."""
+    write_table(*tiff_rows(spark, tif_path), table_path)
 
 
 def _planar_payloads(
@@ -228,12 +238,11 @@ def _planar_payloads(
     return [(spatial_idx, T.encode_chunk(arr, p, sw, sh))]
 
 
-def _encode_same_grid(df: DataFrame, prof_json: str) -> DataFrame:
+def _encode_same_grid(df: DataFrame, p: T.TiffProfile) -> DataFrame:
     """Image-table rows → (index, payload): the source grid IS the target
     grid, so every row encodes independently (no shuffle at all)."""
 
     def encode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p, _ = _profile_from_json(prof_json)
         per_plane = len(T._chunk_grid(p))
         for pdf in batches:
             idxs, payloads = [], []
@@ -254,7 +263,7 @@ def _encode_same_grid(df: DataFrame, prof_json: str) -> DataFrame:
     return df.mapInPandas(encode_rows, schema="index int, payload binary")
 
 
-def _encode_regrid(df: DataFrame, in_prof_json: str, out_prof_json: str) -> DataFrame:
+def _encode_regrid(df: DataFrame, pin: T.TiffProfile, pout: T.TiffProfile) -> DataFrame:
     """Image-table rows on the SOURCE grid → (index, payload) on the
     TARGET grid, fully distributed:
 
@@ -270,8 +279,6 @@ def _encode_regrid(df: DataFrame, in_prof_json: str, out_prof_json: str) -> Data
     """
 
     def split_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin, _ = _profile_from_json(in_prof_json)
-        pout, _ = _profile_from_json(out_prof_json)
         in_grid = T._chunk_grid(pin)
         out_grid = T._chunk_grid(pout)
         if pout.tiled:
@@ -317,7 +324,6 @@ def _encode_regrid(df: DataFrame, in_prof_json: str, out_prof_json: str) -> Data
     )
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pout, _ = _profile_from_json(out_prof_json)
         out_grid = T._chunk_grid(pout)
         tgt = int(key[0])
         _r0, _c0, vw, vh, sw, sh = out_grid[tgt]
@@ -337,13 +343,26 @@ def _encode_regrid(df: DataFrame, in_prof_json: str, out_prof_json: str) -> Data
     )
 
 
-def export_tiff(
-    spark: SparkSession,
-    table_path: str,
+def _profile_for_fmt(prof: T.TiffProfile, fmt: str) -> T.TiffProfile:
+    """``prof`` with the dtype and band count of payload format ``fmt``."""
+    info = codec.format_info(fmt)
+    return dataclasses.replace(
+        prof,
+        count=info.bands,
+        dtype="uint16" if info.dtype.itemsize == 2 else "uint8",
+        extrasamples=prof.extrasamples[: max(0, info.bands - 3)],
+    )
+
+
+def write_tiff_rows(
+    df: DataFrame,
+    prof: T.TiffProfile,
+    fmt: str,
     tif_path: str,
     creation_options: dict[str, str] | None = None,
 ) -> None:
-    """Image table (+ manifest) → single GeoTIFF.
+    """Image rows on ``prof``'s chunk grid (payload format ``fmt``) →
+    single GeoTIFF.
 
     Chunk compression runs on executors; the driver streams opaque
     payloads into the container (peak driver hold: one Spark partition of
@@ -352,60 +371,49 @@ def export_tiff(
     compress=deflate``, ``blockxsize``, ``bigtiff=yes`` …) override the
     preserved profile, the reference's GDAL-option contract
     (tests/test_cli.py:121-169); a changed chunk grid triggers the
-    distributed re-grid path.
+    distributed re-grid path. An error in any upstream stage leaves
+    ``tif_path`` untouched.
     """
-    prof, n_chunks = read_profile(table_path)
+    in_prof = _profile_for_fmt(prof, fmt)
+    out_prof = T.apply_creation_options(in_prof, creation_options or {})
+    grid_fields = ("tiled", "tile_width", "tile_height", "rows_per_strip")
+    if all(getattr(out_prof, k) == getattr(in_prof, k) for k in grid_fields):
+        enc = _encode_same_grid(df, out_prof)
+    else:
+        enc = _encode_regrid(df, in_prof, out_prof)
+    with T.TiffChunkWriter(tif_path, out_prof) as writer:
+        for row in enc.toLocalIterator():
+            writer.add(row["index"], bytes(row["payload"]))
+
+
+def table_rows(
+    spark: SparkSession, table_path: str
+) -> tuple[DataFrame, T.TiffProfile | None]:
+    """Parquet image table → (rows, profile of its payloads), the profile
+    None when the table has no manifest. The payload dtype/band count is
+    read from the ``fmt`` column (a JVM-only scan) and wins over the
+    manifest's: a manifest may have been copied from the table's source."""
     df = spark.read.parquet(table_path)
+    if not os.path.exists(os.path.join(table_path, MANIFEST)):
+        return df, None
     rows_fmt = df.select("fmt").limit(1).collect()
     if not rows_fmt:
         raise ValueError(f"empty image table: {table_path}")
-    fmt = rows_fmt[0]["fmt"]
-    info = codec.format_info(fmt)
-    # the table's payload dtype/band-count wins (e.g. after --out-dtype):
-    out_prof = T.TiffProfile(
-        width=prof.width,
-        height=prof.height,
-        count=info.bands,
-        dtype="uint16" if info.dtype.itemsize == 2 else "uint8",
-        compression=prof.compression,
-        predictor=prof.predictor,
-        photometric=prof.photometric,
-        extrasamples=prof.extrasamples[: max(0, info.bands - 3)],
-        tiled=prof.tiled,
-        tile_width=prof.tile_width,
-        tile_height=prof.tile_height,
-        rows_per_strip=prof.rows_per_strip,
-        bigtiff=prof.bigtiff,
-        jpeg_quality=prof.jpeg_quality,
-        planar=prof.planar,  # interleave preserved; --co interleave=… overrides
-        geo=prof.geo,
-    )
-    if creation_options:
-        out_prof = T.apply_creation_options(out_prof, creation_options)
-    in_prof = T.TiffProfile(**{**out_prof.__dict__, "tiled": prof.tiled,
-                               "tile_width": prof.tile_width,
-                               "tile_height": prof.tile_height,
-                               "rows_per_strip": prof.rows_per_strip})
-    same_grid = (
-        out_prof.tiled, out_prof.tile_width, out_prof.tile_height,
-        out_prof.rows_per_strip,
-    ) == (prof.tiled, prof.tile_width, prof.tile_height, prof.rows_per_strip)
-    out_json = _profile_to_json(out_prof, n_chunks, tif_path)
-    if same_grid:
-        enc = _encode_same_grid(df, out_json)
-    else:
-        in_json = _profile_to_json(in_prof, n_chunks, tif_path)
-        enc = _encode_regrid(df, in_json, out_json)
+    return df, _profile_for_fmt(read_profile(table_path), rows_fmt[0]["fmt"])
 
-    writer = T.TiffChunkWriter(tif_path, out_prof)
-    if same_grid and writer.n_chunks != n_chunks * writer.n_planes:
-        raise ValueError(
-            f"manifest expects {n_chunks} spatial chunks x {writer.n_planes} "
-            f"plane(s), grid has {writer.n_chunks}"
-        )
-    for row in enc.toLocalIterator():
-        writer.add(row["index"], bytes(row["payload"]))
-    writer.close()  # raises listing any missing chunk
+
+def export_tiff(
+    spark: SparkSession,
+    table_path: str,
+    tif_path: str,
+    creation_options: dict[str, str] | None = None,
+) -> None:
+    """Image table (+ manifest) → single GeoTIFF; see :func:`write_tiff_rows`."""
+    df, prof = table_rows(spark, table_path)
+    if prof is None:
+        raise FileNotFoundError(os.path.join(table_path, MANIFEST))
+    fmt = codec.fmt_for_dtype(prof.np_dtype, prof.count)
+    write_tiff_rows(df, prof, fmt, tif_path, creation_options)
 
 
 def is_tiff_path(path: str) -> bool:
@@ -419,32 +427,15 @@ def color_correct_tiff(
     ops_string: str,
     out_dtype: str | None = None,
     creation_options: dict[str, str] | None = None,
-    work_dir: str | None = None,
 ) -> None:
-    """End-to-end ``rio color SRC.tif DST.tif OPS`` twin: distributed
-    ingest → fused color chain → distributed encode → container write.
-
-    The intermediate table lives in ``work_dir`` (a temp dir by default)
-    — on a cluster point it at shared storage."""
-    import shutil
-    import tempfile
-
+    """End-to-end ``rio color SRC.tif DST.tif OPS`` twin: one Spark plan
+    of distributed tile decode → fused color chain → distributed encode,
+    streamed into the container on the driver."""
     from rio_color_spark.operators.color import color_correct
 
-    tmp = work_dir or tempfile.mkdtemp(prefix="rio_color_spark_tiff_")
-    src_table = os.path.join(tmp, "src_table")
-    dst_table = os.path.join(tmp, "dst_table")
-    try:
-        ingest_tiff(spark, src_tif, src_table)
-        df = spark.read.parquet(src_table)
-        out = color_correct(df, ops_string, out_dtype=out_dtype)
-        out.write.mode("overwrite").parquet(dst_table)
-        # profile travels with the table; pixel dtype may have changed
-        with open(os.path.join(src_table, MANIFEST)) as f:
-            prof_json = f.read()
-        with open(os.path.join(dst_table, MANIFEST), "w") as f:
-            f.write(prof_json)
-        export_tiff(spark, dst_table, dst_tif, creation_options)
-    finally:
-        if work_dir is None:
-            shutil.rmtree(tmp, ignore_errors=True)
+    df, prof = tiff_rows(spark, src_tif)
+    fmt = codec.fmt_for_dtype(out_dtype or prof.np_dtype, prof.count)
+    write_tiff_rows(
+        color_correct(df, ops_string, out_dtype=out_dtype), prof, fmt,
+        dst_tif, creation_options,
+    )

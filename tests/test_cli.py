@@ -287,3 +287,24 @@ def test_table_merge_cli(spark, tmp_path, capsys):
     with pytest.raises(SystemExit) as e:
         main(["table", "merge", base, src1])  # no --on
     assert e.value.code == 2
+
+
+def test_tif_table_directions_leave_no_temp_files(spark, tmp_path, monkeypatch):
+    """.tif → table and table → .tif (successful or failing) stream
+    through one plan: nothing is left in the temp dir."""
+    import tempfile
+
+    from rio_color_spark.sources import tiff as T
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    arr = np.random.default_rng(0).integers(0, 256, (3, 48, 64), dtype=np.uint8)
+    src = str(tmp_path / "src.tif")
+    T.write_tiff(src, arr, T.TiffProfile(width=64, height=48, count=3, dtype="uint8"))
+    tbl = str(tmp_path / "tbl")
+    assert main(["color", src, tbl, "gamma rgb 1.5"]) == 0
+    assert main(["color", tbl, str(tmp_path / "out.tif"), "gamma rgb 1.5"]) == 0
+    with pytest.raises(FileNotFoundError):
+        main(["color", tbl, str(tmp_path / "no_dir" / "out.tif"), "gamma rgb 1.5"])
+    assert os.listdir(tmp) == []

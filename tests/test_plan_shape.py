@@ -117,3 +117,25 @@ def test_lsh_bucket_udf_runs_once_via_reused_exchange(spark, name):
     assert final.count("ArrowEvalPython [_b(") == 1
     reused = [line for line in final.splitlines() if "ReusedExchange" in line]
     assert any("Exchange hashpartitioning(tbl" in line for line in reused)
+
+
+def test_lsh_pairs_tokenizes_once_via_reused_exchanges(spark):
+    """minhash_lsh_pairs tokenizes the corpus once: the band self-join
+    reads one (band, band_sig) exchange and the exact-Jaccard verify
+    re-reads the token exchange, both reused by AQE at runtime. Checked
+    on the final adaptive plan, which exists only after execution."""
+    import __spark_entry__ as E
+    from test_oracle_parity import SF
+
+    df = E.q_lsh_pairs(spark, SF)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    tokenize = [
+        line for line in final.splitlines()
+        if "Generate" in line and "split(trim(lower(_text" in line
+    ]
+    assert len(tokenize) == 1
+    reused = [line for line in final.splitlines() if "ReusedExchange" in line]
+    assert any("Exchange hashpartitioning(band#" in line and "band_sig#" in line
+               for line in reused)
+    assert any("Exchange RoundRobinPartitioning(" in line for line in reused)

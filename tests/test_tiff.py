@@ -366,6 +366,114 @@ def test_out_dtype_conversion_roundtrip(spark, tmp_path):
     assert np.array_equal(a1, expected)
 
 
+# -- Spark bridge on rasters written at test time -----------------------------
+
+#: the reference rasters' shapes: 438x500, 32x32 LZW tiles
+SHAPES = {"rgb8": (3, "uint8"), "rgba8": (4, "uint8"), "rgb16": (3, "uint16")}
+VARIANTS = {
+    "default": ({}, {}),
+    "out_uint8": ({"out_dtype": "uint8"}, {}),
+    "regrid64": ({}, {"blockxsize": "64", "blockysize": "64"}),
+    "stripped": ({}, {"tiled": "no"}),
+}
+
+
+def _make_raster(path: str, kind: str, seed: int) -> np.ndarray:
+    bands, dtype = SHAPES[kind]
+    hi = np.iinfo(dtype).max
+    rng = np.random.default_rng(seed)
+    yy, xx = np.mgrid[0:500, 0:438]
+    arr = np.empty((bands, 500, 438), dtype=dtype)
+    for b in range(3):
+        fx, fy = rng.uniform(0.002, 0.03, 2)
+        smooth = 0.5 + 0.4 * np.sin(xx * fx + b) * np.cos(yy * fy)
+        noise = rng.uniform(-0.05, 0.05, (500, 438))
+        arr[b] = (np.clip(smooth + noise, 0, 1) * hi).astype(dtype)
+    if bands == 4:  # opaque, with one transparent block
+        arr[3] = hi
+        arr[3, 100:180, 50:300] = 0
+    prof = T.TiffProfile(
+        width=438, height=500, count=bands, dtype=dtype,
+        extrasamples=(2,) if bands == 4 else (),
+    )
+    T.write_tiff(path, arr.copy(), prof)
+    return arr
+
+
+@pytest.fixture(scope="module")
+def rasters(tmp_path_factory):
+    d = tmp_path_factory.mktemp("rasters")
+    return {
+        kind: (str(d / f"{kind}.tif"), _make_raster(str(d / f"{kind}.tif"), kind, i))
+        for i, kind in enumerate(SHAPES)
+    }
+
+
+@pytest.mark.parametrize("variant", VARIANTS)
+@pytest.mark.parametrize("kind", SHAPES)
+def test_color_correct_tiff_equals_chain_replay(spark, rasters, tmp_path, kind, variant):
+    """Distributed decode → chain → encode (same grid or re-gridded) is
+    bit-identical to the whole-array chain; alpha and colorinterp survive."""
+    src, arr = rasters[kind]
+    kwargs, co = VARIANTS[variant]
+    out = str(tmp_path / "out.tif")
+    TB.color_correct_tiff(spark, src, out, OPS, creation_options=co, **kwargs)
+    got, prof = T.read_tiff(out)
+    dt = np.dtype(kwargs.get("out_dtype", arr.dtype))
+    assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), dt))
+    if kind == "rgba8":
+        assert np.array_equal(got[3], arr[3])
+        assert prof.colorinterp() == ("red", "green", "blue", "alpha")
+    assert prof.colorinterp() == TB.read_structure(src)[0].colorinterp()
+    if variant == "stripped":
+        assert not prof.tiled
+    else:
+        size = 64 if variant == "regrid64" else 32
+        assert prof.tiled and (prof.tile_width, prof.tile_height) == (size, size)
+    assert os.listdir(tmp_path) == ["out.tif"]
+
+
+def test_corrupt_tile_leaves_no_partial_output(spark, rasters, tmp_path):
+    """A decode error surfaces while the container is being written; the
+    writer drops its partial file and ``dst`` never appears."""
+    _, arr = rasters["rgb8"]
+    src = str(tmp_path / "deflate.tif")
+    T.write_tiff(src, arr.copy(), T.TiffProfile(
+        width=438, height=500, count=3, dtype="uint8",
+        compression=T.COMPRESSION_DEFLATE,
+    ))
+    _, chunks = TB.read_structure(src)
+    victim = chunks[len(chunks) // 2]
+    with open(src, "r+b") as f:
+        f.seek(victim.offset)
+        f.write(bytes(victim.nbytes))
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    with pytest.raises(Exception, match="while decompressing data"):
+        TB.color_correct_tiff(spark, src, str(out_dir / "out.tif"), OPS)
+    assert os.listdir(out_dir) == []
+
+
+def test_cli_via_tables_equals_direct_tif(spark, rasters, tmp_path):
+    """ingest → color (table → table) → export gives the same container
+    as color .tif → .tif; the colored table's manifest holds the OUTPUT
+    profile (dtype after --out-dtype)."""
+    from rio_color_spark.cli import main
+
+    src, _ = rasters["rgb16"]
+    direct = str(tmp_path / "direct.tif")
+    assert main(["color", "-d", "uint8", src, direct, OPS]) == 0
+    t0, t1, via = (str(tmp_path / n) for n in ("t0", "t1", "via.tif"))
+    assert main(["ingest", src, t0]) == 0
+    assert main(["color", "-d", "uint8", t0, t1, OPS]) == 0
+    assert TB.read_profile(t1).dtype == "uint8"
+    assert main(["export", t1, via]) == 0
+    a, pa = T.read_tiff(direct)
+    b, pb = T.read_tiff(via)
+    assert a.dtype == np.uint8 and np.array_equal(a, b)
+    assert pa == pb
+
+
 # -- CLI surface -------------------------------------------------------------
 
 
