@@ -125,9 +125,3 @@ def pip_multi(
         for i in cand[inside]:
             out[i].append(pid)
     return out
-
-
-def pip_single(px: float, py: float, ring: np.ndarray) -> bool:
-    """Scalar reference path (oracle/debug) — same rule, one polygon."""
-    packed = pack_polygons([("p", ring)])
-    return bool(pip_pairs(np.array([px]), np.array([py]), np.array([0]), packed)[0])

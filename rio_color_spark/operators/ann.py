@@ -55,14 +55,6 @@ def dot_col(a: Column, b: Column) -> Column:
     )
 
 
-def norm_col(a: Column) -> Column:
-    return F.sqrt(dot_col(a, a))
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def bucket_col(vec: Column, planes: np.ndarray) -> Column:
     """LSH bucket id: sign bits of the hyperplane dot products (JVM HOF
     twin of :func:`buckets_udf` — kept for oracle parity documentation)."""

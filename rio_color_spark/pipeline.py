@@ -286,20 +286,26 @@ class _SnapshotSink:
 
     def _table(self, sample_file: str):
         """Open the table, creating it on first use from a written file's
-        footer schema (arrow → Spark simpleString via an empty read)."""
+        footer schema (read with pyarrow like :func:`_stripe_schema`, so it
+        needs no active SparkSession and works from any thread). The handle
+        is kept only once open or create succeeded, so a failed create is
+        retried on the next call."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         from rio_color_spark.sources.snapshots import SnapshotTable
 
         if self._tbl is None:
+            tbl = SnapshotTable(self.base)
             try:
-                self._tbl = SnapshotTable(self.base)
-                self._tbl.metadata()
+                tbl.metadata()
             except FileNotFoundError:
-                spark = SparkSession.getActiveSession()
                 ddl = ", ".join(
                     f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in spark.read.parquet(sample_file).schema.fields
+                    for f in from_arrow_schema(pq.read_schema(sample_file))
                 )
-                self._tbl = SnapshotTable.create(self.base, ddl)
+                tbl = SnapshotTable.create(self.base, ddl)
+            self._tbl = tbl
         return self._tbl
 
     def commit_chunk(self, k: int, images_path: str, stripe_md5) -> None:

@@ -255,6 +255,11 @@ def _parse_fields_ddl(ddl: str) -> list[tuple[str, str]]:
     return out
 
 
+def _ddl(schema: dict) -> str:
+    """Backquoted ``name type, ...`` DDL of a stored schema."""
+    return ", ".join(f"`{f['name']}` {f['type']}" for f in schema["fields"])
+
+
 _TRANSFORMS = ("identity", "bucket", "truncate")
 
 
@@ -314,6 +319,18 @@ def _transform_value(field: dict, src_type: str, value):
     if src_type in ("string", "varchar"):
         return str(value)[:w]
     return int(value) - (int(value) % w)
+
+
+def _assign(df: DataFrame, hit, assignments: dict[str, str], types: dict):
+    """SQL UPDATE ``SET``: ``assignments`` (column → SQL expression) on
+    the rows where ``hit``, in ONE select — every expression evaluated
+    against the PRE-update row (sequential withColumn would leak earlier
+    assignments into later expressions)."""
+    new_val = {
+        col: F.when(hit, F.expr(expr).cast(types[col])).otherwise(F.col(col))
+        for col, expr in assignments.items()
+    }
+    return df.select(*[new_val.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
 class SnapshotTable:
@@ -467,15 +484,14 @@ class SnapshotTable:
         return ", ".join(f"{f['name']} {f['type']}" for f in s["fields"])
 
     def _evolve(self, mutate_fields) -> dict:
+        """Commit a new current schema: ``mutate_fields(fields, meta)``
+        returns the edited copy of the current field list."""
         def mut(meta):
-            cur = self.schema(meta=meta)
-            fields = [dict(f) for f in cur["fields"]]
-            last_id = meta["last_field_id"]
-            fields, last_id = mutate_fields(fields, last_id)
-            new_schema = {"schema_id": len(meta["schemas"]), "fields": fields}
+            fields = [dict(f) for f in self.schema(meta=meta)["fields"]]
+            new_schema = {"schema_id": len(meta["schemas"]),
+                          "fields": mutate_fields(fields, meta)}
             meta["schemas"].append(new_schema)
             meta["current_schema_id"] = new_schema["schema_id"]
-            meta["last_field_id"] = last_id
             return meta
         return self._commit(mut)
 
@@ -483,11 +499,12 @@ class SnapshotTable:
         """Metadata-only: existing files read the new column as NULL."""
         type_ss = _parse_type_ddl(type_ddl)  # validate + normalize, no Spark
 
-        def mut(fields, last_id):
+        def mut(fields, meta):
             if any(f["name"] == name for f in fields):
                 raise ValueError(f"column {name!r} exists")
-            return fields + [{"id": last_id + 1, "name": name,
-                              "type": type_ss}], last_id + 1
+            meta["last_field_id"] += 1
+            return fields + [{"id": meta["last_field_id"], "name": name,
+                              "type": type_ss}]
         return self._evolve(mut)
 
     def drop_column(self, name: str) -> dict:
@@ -495,9 +512,7 @@ class SnapshotTable:
         column (matching Iceberg): otherwise the spec keeps referencing a
         dead field id and every later write crashes in ``_write_data``.
         Evolve the spec away from the column first."""
-        def mut(meta):
-            cur = self.schema(meta=meta)
-            fields = [dict(f) for f in cur["fields"]]
+        def mut(fields, meta):
             hit = [f for f in fields if f["name"] == name]
             if not hit:
                 raise KeyError(name)
@@ -511,26 +526,20 @@ class SnapshotTable:
                         f"{[pf['name'] for pf in used]} in spec "
                         f"{spec['spec_id']}; set_partition_spec first"
                     )
-            new_schema = {
-                "schema_id": len(meta["schemas"]),
-                "fields": [f for f in fields if f["name"] != name],
-            }
-            meta["schemas"].append(new_schema)
-            meta["current_schema_id"] = new_schema["schema_id"]
-            return meta
-        return self._commit(mut)
+            return [f for f in fields if f["name"] != name]
+        return self._evolve(mut)
 
     def rename_column(self, old: str, new: str) -> dict:
         """Same field id, new name — no data rewrite; old files still
         resolve BY ID, so the physical column name in them keeps working."""
-        def mut(fields, last_id):
+        def mut(fields, meta):
             if any(f["name"] == new for f in fields):
                 raise ValueError(f"column {new!r} exists")
             hit = [f for f in fields if f["name"] == old]
             if not hit:
                 raise KeyError(old)
             hit[0]["name"] = new
-            return fields, last_id
+            return fields
         return self._evolve(mut)
 
     # -- writes --------------------------------------------------------------
@@ -609,7 +618,7 @@ class SnapshotTable:
 
     def _write_data(
         self, df: DataFrame, write_options: dict | None,
-        spec: dict | None = None, schema: dict | None = None,
+        spec: dict, schema: dict,
     ) -> tuple[list[str], dict[str, dict]]:
         """Write a commit's data files; returns (paths, path → hidden-
         partition tuple). With a non-empty spec the derived transform
@@ -619,7 +628,7 @@ class SnapshotTable:
         from urllib.parse import unquote
 
         out = os.path.join(self.data_dir, uuid.uuid4().hex)
-        spec_fields = (spec or {}).get("fields") or []
+        spec_fields = spec["fields"]
         if spec_fields:
             by_id = {f["id"]: f for f in schema["fields"]}
             names = []
@@ -713,6 +722,21 @@ class SnapshotTable:
             return meta
         return self._commit(mut)
 
+    def _write_rows(
+        self, df: DataFrame, meta: dict, write_options: dict | None,
+    ) -> list[dict]:
+        """The one write path of every data-writing commit: conform ``df``
+        to ``meta``'s current schema, write it under the current partition
+        spec, and return its manifest rows. An empty file (a fully-deleted
+        rewrite, an empty Spark output part) gets no manifest entry."""
+        schema = self.schema(meta=meta)
+        spec = self.partition_spec(meta=meta)
+        files, parts = self._write_data(
+            self._conform(df, schema), write_options, spec, schema
+        )
+        rows = self._collect_stats(files, schema, spec["spec_id"], parts)
+        return [r for r in rows if r["n_rows"] > 0]
+
     def append(
         self, df: DataFrame, write_options: dict | None = None,
         summary_extra: dict | None = None,
@@ -722,12 +746,7 @@ class SnapshotTable:
         columns are filled with NULL; extra columns are an error).
         ``summary_extra`` lands in the snapshot summary (e.g. the
         streaming sink's batch stamp)."""
-        meta = self.metadata()
-        schema = self.schema(meta=meta)
-        spec = self.partition_spec(meta=meta)
-        df = self._conform(df, schema)
-        files, parts = self._write_data(df, write_options, spec, schema)
-        new_rows = self._collect_stats(files, schema, spec["spec_id"], parts)
+        new_rows = self._write_rows(df, self.metadata(), write_options)
         return self._snapshot_commit(
             "append", new_rows, summary_extra, merge_parent=True
         )
@@ -735,14 +754,8 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame, write_options: dict | None = None) -> dict:
         """New snapshot whose file list is ONLY the newly written files.
         Old files stay on disk for time travel until expire_snapshots."""
-        meta = self.metadata()
-        schema = self.schema(meta=meta)
-        spec = self.partition_spec(meta=meta)
-        df = self._conform(df, schema)
-        files, parts = self._write_data(df, write_options, spec, schema)
         return self._snapshot_commit(
-            "overwrite",
-            self._collect_stats(files, schema, spec["spec_id"], parts),
+            "overwrite", self._write_rows(df, self.metadata(), write_options)
         )
 
     def add_files(
@@ -835,40 +848,23 @@ class SnapshotTable:
             return eligible[-1]  # snapshot list is append-ordered
         return self.current_snapshot(meta)
 
-    def _read_schema_id(
-        self, meta: dict, snap: dict | None,
-        snapshot_id: int | None, as_of_ms: int | None
-    ) -> int:
-        """Current reads use the CURRENT schema (metadata-only evolutions
-        apply immediately); time-travel reads use the schema the snapshot
-        was committed under (Iceberg's VERSION AS OF semantics)."""
-        if snapshot_id is None and as_of_ms is None:
-            return meta["current_schema_id"]
-        return snap["schema_id"]
-
-    def plan_files(
-        self,
-        snapshot_id: int | None = None,
-        as_of_ms: int | None = None,
-        predicates: dict[str, tuple] | None = None,
-    ) -> tuple[list[dict], dict]:
-        """Manifest rows surviving min/max pruning + a planning report.
-
-        ``predicates`` maps read-schema column name → (lo, hi) bound
-        (either side may be None; names resolve to field ids, so pruning
-        works across renames). A file is kept unless its stats OR its
-        hidden-partition tuple prove no row can match — Iceberg's
-        inclusive metrics evaluator + partition-spec evaluator, decided
-        per manifest row by :func:`_keep_row`. Planning is a driver-side
-        loop over the manifest parquet (no Spark job).
-        """
-        meta = self.metadata()
+    def _plan(
+        self, meta: dict, snapshot_id: int | None, as_of_ms: int | None,
+        predicates: dict[str, tuple] | None,
+    ) -> tuple[dict, list[dict], dict]:
+        """(read schema, kept manifest rows, report) — all from the ONE
+        metadata document ``meta``, so a commit landing mid-read can never
+        pair a newer file list with an older schema list. Current reads use
+        the CURRENT schema (metadata-only evolutions apply immediately);
+        time-travel reads use the schema the snapshot was committed under
+        (Iceberg's VERSION AS OF semantics)."""
         snap = self._resolve_snapshot(meta, snapshot_id, as_of_ms)
         if snap is None:
-            return [], {"files_total": 0, "files_scanned": 0, "snapshot_id": None}
-        read_schema = self.schema(
-            self._read_schema_id(meta, snap, snapshot_id, as_of_ms), meta
-        )
+            return self.schema(meta=meta), [], {
+                "files_total": 0, "files_scanned": 0, "snapshot_id": None,
+            }
+        travel = snapshot_id is not None or as_of_ms is not None
+        read_schema = self.schema(snap["schema_id"] if travel else None, meta)
         name_to_id = {f["name"]: f["id"] for f in read_schema["fields"]}
         type_of_id = {f["id"]: f["type"] for f in read_schema["fields"]}
         # date/timestamp bounds are stored as fixed-width ISO strings —
@@ -890,6 +886,27 @@ class SnapshotTable:
             "rows_scanned": sum(r["n_rows"] for r in kept),
             "snapshot_id": snap["snapshot_id"],
         }
+        return read_schema, kept, report
+
+    def plan_files(
+        self,
+        snapshot_id: int | None = None,
+        as_of_ms: int | None = None,
+        predicates: dict[str, tuple] | None = None,
+    ) -> tuple[list[dict], dict]:
+        """Manifest rows surviving min/max pruning + a planning report.
+
+        ``predicates`` maps read-schema column name → (lo, hi) bound
+        (either side may be None; names resolve to field ids, so pruning
+        works across renames). A file is kept unless its stats OR its
+        hidden-partition tuple prove no row can match — Iceberg's
+        inclusive metrics evaluator + partition-spec evaluator, decided
+        per manifest row by :func:`_keep_row`. Planning is a driver-side
+        loop over the manifest parquet (no Spark job).
+        """
+        _, kept, report = self._plan(
+            self.metadata(), snapshot_id, as_of_ms, predicates
+        )
         return kept, report
 
     def read(
@@ -908,20 +925,9 @@ class SnapshotTable:
         are re-applied as a residual Spark filter (pruning is file-level;
         the residual keeps row-level semantics exact)."""
         meta = self.metadata()
-        snap = self._resolve_snapshot(meta, snapshot_id, as_of_ms)
-        read_schema = self.schema(
-            self._read_schema_id(meta, snap, snapshot_id, as_of_ms)
-            if snap else None,
-            meta,
+        read_schema, kept, _ = self._plan(
+            meta, snapshot_id, as_of_ms, predicates
         )
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in read_schema["fields"])
-        if snap is None:
-            return spark.createDataFrame([], ddl)
-        kept, _ = self.plan_files(
-            snapshot_id=snapshot_id, as_of_ms=as_of_ms, predicates=predicates
-        )
-        if not kept:
-            return spark.createDataFrame([], ddl)
         df = self._scan_rows(spark, kept, read_schema, meta)
         for name, (p_lo, p_hi) in (predicates or {}).items():
             if p_lo is not None:
@@ -937,16 +943,15 @@ class SnapshotTable:
         """Per-schema-group explicit-schema parquet scan projected BY
         FIELD ID onto ``read_schema``, groups unioned. ``file_col`` adds
         an ``input_file_name()`` column (row → data-file attribution, the
-        row-level ops' rewrite planner)."""
+        row-level ops' rewrite planner). No files → an empty frame."""
+        if not kept:
+            return spark.createDataFrame([], _ddl(read_schema))
         groups: dict[int, list[str]] = {}
         for r in kept:
             groups.setdefault(r["schema_id"], []).append(r["file_path"])
         parts = []
         for sid, paths in sorted(groups.items()):
             write_schema = self.schema(sid, meta)
-            phys_ddl = ", ".join(
-                f"`{f['name']}` {f['type']}" for f in write_schema["fields"]
-            )
             by_id = {f["id"]: f["name"] for f in write_schema["fields"]}
             cols = []
             for f in read_schema["fields"]:
@@ -958,7 +963,8 @@ class SnapshotTable:
             if file_col is not None:
                 cols.append(F.input_file_name().alias(file_col))
             parts.append(
-                spark.read.schema(phys_ddl).parquet(*paths).select(*cols)
+                spark.read.schema(_ddl(write_schema)).parquet(*paths)
+                .select(*cols)
             )
         df = parts[0]
         for p in parts[1:]:
@@ -975,67 +981,67 @@ class SnapshotTable:
             "file:"
         ) else uri
 
-    def _rewrite_where(
-        self, spark: SparkSession, operation: str, predicate: str,
-        transform, write_options: dict | None,
-    ) -> dict:
-        """Shared copy-on-write machinery for row-level ops.
+    def _copy_on_write(
+        self, spark: SparkSession, meta: dict, detect, rewrite,
+        write_options: dict | None,
+    ) -> tuple[set[str], int, list[dict]]:
+        """The copy-on-write core of DELETE / UPDATE / MERGE (Iceberg
+        row-level ops over ``meta``'s current snapshot).
 
-        1. Scan the current snapshot with per-row file attribution and
-           find the data files holding ≥1 matching row (everything runs
-           distributed; the driver collects only O(touched files) rows).
-        2. Rewrite ONLY those files through ``transform(df, matched)``
-           (delete drops matched rows, update rewrites them), conformed
-           to the current schema and partition spec.
-        3. Commit manifest = parent rows − touched + rewritten, via the
-           CAS retry with the compaction-style conflict check: if a
-           concurrent commit removed a touched file, raise
-           :class:`CommitConflict` instead of resurrecting deleted rows.
+        1. ``detect(scan)`` maps the file-attributed scan to the matched
+           rows; grouping them by data file finds the files holding ≥1
+           match (everything runs distributed; the driver collects only
+           O(touched files) rows).
+        2. ``rewrite(scan of the touched files)`` yields their new rows,
+           written through :meth:`_write_rows`.
 
-        Snapshot isolation: rows appended by commits AFTER the scan's
-        snapshot are not affected (Iceberg's default for row-level ops).
-        Predicate NULL-semantics follow SQL: NULL never matches."""
-        meta = self.metadata()
+        Returns (touched paths, matched-row count, new manifest rows) —
+        nothing touched when nothing matches. The caller commits with
+        ``replace_files=touched``: if a concurrent commit removed a touched
+        file, that raises :class:`CommitConflict` instead of resurrecting
+        replaced rows. Snapshot isolation: rows appended by commits AFTER
+        ``meta`` are not affected (Iceberg's default for row-level ops)."""
         snap = self.current_snapshot(meta)
-        if snap is None:
-            return meta
-        read_schema = self.schema(meta=meta)
-        spec = self.partition_spec(meta=meta)
-        kept = self._manifest_rows(snap)
+        kept = self._manifest_rows(snap) if snap else []
         if not kept:
-            return meta
-        matched = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
-        scan = self._scan_rows(spark, kept, read_schema, meta, file_col="_sf_file")
-        hits = (
-            scan.filter(matched)
-            .groupBy("_sf_file")
-            .count()
-            .collect()
-        )
-        if not hits:
-            return meta  # no-op: no snapshot for a delete/update of nothing
-        n_matched = sum(r["count"] for r in hits)
+            return set(), 0, []
+        schema = self.schema(meta=meta)
+        scan = self._scan_rows(spark, kept, schema, meta, file_col="_sf_file")
+        hits = detect(scan).groupBy("_sf_file").count().collect()
         by_path = {self._uri_path(r["_sf_file"]): r["count"] for r in hits}
-        touched = {
-            r["file_path"] for r in kept if r["file_path"] in by_path
-        }
+        touched = [r for r in kept if r["file_path"] in by_path]
         if len(touched) != len(by_path):
-            unknown = set(by_path) - touched
+            # a hit file that fails to map back to a manifest path would
+            # silently drop its rewrite (and, for MERGE, exclude its source
+            # rows from the insert) — a lost update must be an error instead
+            unknown = set(by_path) - {r["file_path"] for r in touched}
             raise RuntimeError(
                 f"row scan attributed rows to file(s) outside the "
                 f"manifest: {sorted(unknown)[:3]}"
             )
-        touched_rows = [r for r in kept if r["file_path"] in touched]
-        rewrite_src = self._scan_rows(
-            spark, touched_rows, read_schema, meta, file_col="_sf_file"
+        if not touched:
+            return set(), 0, []
+        new_rows = self._write_rows(
+            rewrite(self._scan_rows(spark, touched, schema, meta)),
+            meta, write_options,
         )
-        out_cols = [f["name"] for f in read_schema["fields"]]
-        rewritten = transform(rewrite_src, matched).select(*out_cols)
-        files, parts = self._write_data(rewritten, write_options, spec, read_schema)
-        new_rows = self._collect_stats(files, read_schema, spec["spec_id"], parts)
-        # a fully-deleted file (or an empty Spark output part) contributes
-        # no manifest entry — the snapshot simply drops it
-        new_rows = [r for r in new_rows if r["n_rows"] > 0]
+        return {r["file_path"] for r in touched}, sum(by_path.values()), new_rows
+
+    def _rewrite_where(
+        self, spark: SparkSession, operation: str, meta: dict,
+        predicate: str, transform, write_options: dict | None,
+    ) -> dict:
+        """DELETE/UPDATE front end of :meth:`_copy_on_write`: rows match
+        ``predicate`` (SQL NULL semantics — NULL never matches), touched
+        files rewrite through ``transform(df, matched)``. Matching nothing
+        is a no-op (no empty snapshot)."""
+        matched = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
+        touched, n_matched, new_rows = self._copy_on_write(
+            spark, meta, lambda scan: scan.filter(matched),
+            lambda df: transform(df, matched), write_options,
+        )
+        if not touched:
+            return meta
         return self._snapshot_commit(
             operation, new_rows,
             {
@@ -1057,9 +1063,8 @@ class SnapshotTable:
         no-op (no empty snapshot). NULL predicates keep the row (SQL
         DELETE semantics)."""
         return self._rewrite_where(
-            spark, "delete", predicate,
-            lambda df, matched: df.filter(~matched),
-            write_options,
+            spark, "delete", self.metadata(), predicate,
+            lambda df, matched: df.filter(~matched), write_options,
         )
 
     def update_where(
@@ -1071,27 +1076,15 @@ class SnapshotTable:
         matching rows with ``assignments`` (column → SQL expression over
         the pre-update row) applied to matching rows only; non-matching
         rows in the same file are rewritten byte-identical in value."""
-        fields = {f["name"]: f["type"] for f in self.schema()["fields"]}
+        meta = self.metadata()
+        types = {f["name"]: f["type"] for f in self.schema(meta=meta)["fields"]}
         for col in assignments:
-            if col not in fields:
+            if col not in types:
                 raise KeyError(f"update_where: no column {col!r}")
-
-        def transform(df: DataFrame, matched):
-            # one select, every assignment expression evaluated against the
-            # PRE-update row (SQL UPDATE semantics — sequential withColumn
-            # would leak earlier assignments into later expressions)
-            new_val = {
-                col: F.when(matched, F.expr(expr).cast(fields[col])).otherwise(
-                    F.col(col)
-                )
-                for col, expr in assignments.items()
-            }
-            return df.select(
-                *[new_val.get(c, F.col(c)).alias(c) for c in df.columns]
-            )
-
         return self._rewrite_where(
-            spark, "update", predicate, transform, write_options
+            spark, "update", meta, predicate,
+            lambda df, matched: _assign(df, matched, assignments, types),
+            write_options,
         )
 
     def merge_into(
@@ -1121,24 +1114,30 @@ class SnapshotTable:
 
         Scale shape: one key-equi-join against the source per phase
         (detection semi-join, rewrite left-join, insert anti-join), all
-        shuffles on the merge key; the rewrite scan touches only matched
-        files.
+        shuffles on the merge key; the rewrite and insert legs scan only
+        matched files.
         """
         keys = [on] if isinstance(on, str) else list(on)
-        schema = self.schema()
-        fields = {f["name"]: f["type"] for f in schema["fields"]}
+        meta = self.metadata()
+        types = {f["name"]: f["type"] for f in self.schema(meta=meta)["fields"]}
         for k in keys:
-            if k not in fields:
+            if k not in types:
                 raise KeyError(f"merge_into: no key column {k!r}")
             if k not in source.columns:
                 raise KeyError(f"merge_into: source lacks key column {k!r}")
         if isinstance(when_matched, dict):
             for col in when_matched:
-                if col not in fields:
+                if col not in types:
                     raise KeyError(f"merge_into: no column {col!r}")
                 if col in keys:
                     raise ValueError(f"merge_into: cannot assign key {col!r}")
-        elif when_matched not in ("update_all", "delete"):
+            assignments = when_matched
+        elif when_matched == "update_all":
+            assignments = {
+                n: f"src_{n}" for n in types
+                if n not in keys and n in source.columns
+            }
+        elif when_matched != "delete":
             raise ValueError(f"bad when_matched {when_matched!r}")
         if when_not_matched not in ("insert", "ignore"):
             raise ValueError(f"bad when_not_matched {when_not_matched!r}")
@@ -1152,95 +1151,37 @@ class SnapshotTable:
                 f"(e.g. {[dup[0][k] for k in keys]})"
             )
 
-        meta = self.metadata()
-        snap = self.current_snapshot(meta)
-        spec = self.partition_spec(meta=meta)
-        kept = self._manifest_rows(snap) if snap else []
-        non_keys = [n for n in fields if n not in keys]
-        src_cols = [F.col(k) for k in keys] + [
+        src = source.select(*keys, *[
             F.col(n).alias(f"src_{n}") for n in source.columns if n not in keys
-        ]
-        src = source.select(*src_cols)
+        ])
+        touched_keys: list[DataFrame] = []
 
-        touched: set[str] = set()
-        n_matched = 0
-        if kept:
-            scan = self._scan_rows(
-                spark, kept, schema, meta, file_col="_sf_file"
-            )
-            hits = (
-                scan.join(src.select(*keys), on=keys, how="leftsemi")
-                .groupBy("_sf_file")
-                .count()
-                .collect()
-            )
-            n_matched = sum(r["count"] for r in hits)
-            by_path = {self._uri_path(r["_sf_file"]) for r in hits}
-            touched = {r["file_path"] for r in kept if r["file_path"] in by_path}
-            # same attribution guard as _rewrite_where (ADVICE r6): a hit
-            # file that fails to map back to a manifest path would silently
-            # drop the update AND exclude its source rows from the insert
-            # anti-join — a lost update must be an error instead
-            if len(touched) != len(by_path):
-                unknown = by_path - touched
-                raise RuntimeError(
-                    f"merge row scan attributed rows to file(s) outside "
-                    f"the manifest: {sorted(unknown)[:3]}"
-                )
-
-        new_rows: list[dict] = []
-        n_files_rewritten = 0
-        if touched:
-            touched_rows = [r for r in kept if r["file_path"] in touched]
-            t = self._scan_rows(
-                spark, touched_rows, schema, meta, file_col="_sf_file"
-            )
+        def rewrite(df: DataFrame) -> DataFrame:
+            touched_keys.append(df.select(*keys))
             # matched marker that survives NULL source values: an explicit
             # flag column (checking any src_ column for NULL would
             # misclassify legitimately-NULL source values)
-            joined = t.join(
+            joined = df.join(
                 src.withColumn("_src_hit", F.lit(True)), on=keys, how="left"
             )
             hit = F.coalesce(F.col("_src_hit"), F.lit(False))
             if when_matched == "delete":
-                rewritten = joined.filter(~hit)
-            else:
-                if when_matched == "update_all":
-                    assignments = {
-                        n: f"src_{n}" for n in non_keys if f"src_{n}" in joined.columns
-                    }
-                else:
-                    assignments = when_matched
-                new_val = {
-                    col: F.when(hit, F.expr(expr).cast(fields[col])).otherwise(
-                        F.col(col)
-                    )
-                    for col, expr in assignments.items()
-                }
-                rewritten = joined.select(
-                    *[
-                        new_val.get(c, F.col(c)).alias(c)
-                        for c in joined.columns
-                    ]
-                )
-            rewritten = rewritten.select(*fields)
-            files, parts = self._write_data(
-                rewritten, write_options, spec, schema
-            )
-            rows = self._collect_stats(files, schema, spec["spec_id"], parts)
-            new_rows += [r for r in rows if r["n_rows"] > 0]
-            n_files_rewritten = len(touched)
+                return joined.filter(~hit).select(*types)
+            return _assign(joined, hit, assignments, types).select(*types)
 
+        touched, n_matched, new_rows = self._copy_on_write(
+            spark, meta,
+            lambda scan: scan.join(src.select(*keys), on=keys, how="leftsemi"),
+            rewrite, write_options,
+        )
         n_inserted = 0
         if when_not_matched == "insert":
+            # a source key that matches any target row matches one in a
+            # touched file, so the anti-join needs only the touched files
             ins = source
-            if kept:
-                cur_keys = self._scan_rows(spark, kept, schema, meta).select(*keys)
-                ins = source.join(cur_keys, on=keys, how="leftanti")
-            ins = self._conform(ins, schema)
-            files, parts = self._write_data(ins, write_options, spec, schema)
-            rows = self._collect_stats(files, schema, spec["spec_id"], parts)
-            rows = [r for r in rows if r["n_rows"] > 0]
+            if touched_keys:
+                ins = source.join(touched_keys[0], on=keys, how="leftanti")
+            rows = self._write_rows(ins, meta, write_options)
             n_inserted = sum(r["n_rows"] for r in rows)
             new_rows += rows
 
@@ -1250,7 +1191,7 @@ class SnapshotTable:
             "merge", new_rows,
             {
                 "matched_rows": n_matched,
-                "rewritten_files": n_files_rewritten,
+                "rewritten_files": len(touched),
                 "inserted_rows": n_inserted,
             },
             replace_files=touched or None,
@@ -1387,7 +1328,9 @@ class SnapshotTable:
                     raise KeyError(f"{what} columns {bad} not in schema")
         if zorder and len(zorder) < 2:
             raise ValueError("zorder needs at least 2 columns (use sort_by)")
-        df = self.read(spark)  # current read → current schema
+        # the scan of exactly the files this rewrite replaces, under the
+        # current schema (a second metadata read could see newer files)
+        df = self._scan_rows(spark, rows, schema, meta)
         if zorder:
             df = df.withColumn("_zv", self._zorder_value(df, zorder, schema))
             sort_by = ["_zv"]  # downstream clustering path is identical
@@ -1412,10 +1355,8 @@ class SnapshotTable:
             df = df.repartition(int(n_out))
         if zorder:
             df = df.drop("_zv")  # clustering key only — never written
-        files, parts = self._write_data(df, write_options, spec, schema)
         return self._snapshot_commit(
-            "rewrite",
-            self._collect_stats(files, schema, spec["spec_id"], parts),
+            "rewrite", self._write_rows(df, meta, write_options),
             replace_files={r["file_path"] for r in rows},
         )
 

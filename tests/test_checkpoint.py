@@ -202,6 +202,76 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
     assert t2.read(spark).count() == n
 
 
+def _sink_chunk(spark, path: str, n: int = 40) -> str:
+    """One written chunk output dir, as run_pipeline hands to the sink."""
+    images_df(spark, n).coalesce(1).write.parquet(path)
+    return path
+
+
+def test_snapshot_sink_commits_from_worker_thread(spark, tmp_path):
+    """The sink creates its table from the chunk's parquet footer, so a
+    first commit_chunk on a non-driver thread (no active SparkSession
+    there) works and yields the same schema Spark infers."""
+    import threading
+
+    from rio_color_spark.pipeline import _SnapshotSink
+    from rio_color_spark.sources.snapshots import SnapshotTable
+
+    chunk = _sink_chunk(spark, str(tmp_path / "chunk0"))
+    snap_base = str(tmp_path / "snap")
+    sink = _SnapshotSink(snap_base)
+    errors = []
+
+    def body():
+        try:
+            sink.commit_chunk(0, chunk, "md5-0")
+        except Exception as e:  # re-raised on the main thread below
+            errors.append(e)
+
+    th = threading.Thread(target=body)
+    th.start()
+    th.join(timeout=300)
+    assert not th.is_alive()
+    assert errors == []
+    t = SnapshotTable(snap_base)
+    snaps = t.metadata()["snapshots"]
+    assert [s["summary"]["pipeline_chunk"] for s in snaps] == [0]
+    assert snaps[0]["summary"]["stripe_md5"] == "md5-0"
+    assert [(f["name"], f["type"]) for f in t.schema()["fields"]] == [
+        (f.name, f.dataType.simpleString())
+        for f in spark.read.parquet(chunk).schema.fields
+    ]
+    assert t.read(spark).count() == 40
+
+
+def test_snapshot_sink_retries_failed_create(spark, tmp_path, monkeypatch):
+    """A failed first create caches no table handle: the next
+    commit_chunk creates the table and commits the chunk once."""
+    from rio_color_spark.pipeline import _SnapshotSink
+    from rio_color_spark.sources.snapshots import SnapshotTable
+
+    chunk = _sink_chunk(spark, str(tmp_path / "chunk0"))
+    snap_base = str(tmp_path / "snap")
+    real = SnapshotTable.create.__func__
+    calls = []
+
+    def flaky(cls, *a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("simulated create failure")
+        return real(cls, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "create", classmethod(flaky))
+    sink = _SnapshotSink(snap_base)
+    with pytest.raises(OSError, match="simulated create failure"):
+        sink.commit_chunk(0, chunk, None)
+    sink.commit_chunk(0, chunk, None)
+    sink.commit_chunk(0, chunk, None)  # idempotent by chunk
+    assert len(calls) == 2
+    snaps = SnapshotTable(snap_base).metadata()["snapshots"]
+    assert [s["summary"]["pipeline_chunk"] for s in snaps] == [0]
+
+
 def test_add_files_contract(spark, tmp_path):
     """add_files validates schema coverage, refuses partitioned specs, and
     never lets expire GC imported (external) files."""

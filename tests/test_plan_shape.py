@@ -68,37 +68,44 @@ def test_chunk_scan_reads_only_own_files(spark, tmp_path):
         assert files and files < all_files  # strict subset: pruned scan
 
 
-def test_rowops_rewrite_plans_are_jvm_joins(spark, tmp_path):
+def test_rowops_rewrite_plans_are_jvm_joins(spark, tmp_path, monkeypatch):
     """Row-level DELETE/UPDATE/MERGE plans: no Python eval stages and no
     cartesian products anywhere in the rewrite path — the detection is a
-    key join, the rewrite a filtered/left-joined scan of touched files."""
+    key join, the rewrite a filtered/left-joined scan of touched files.
+    The plans are the engine's own: every detection and rewrite frame the
+    shared copy-on-write core builds is recorded as it runs."""
     from rio_color_spark.sources.snapshots import SnapshotTable
 
-    base = str(tmp_path / "ppt")
-    t = SnapshotTable.create(base, "doc_id bigint, lang string, n_chars bigint")
+    plans = []
+    real = SnapshotTable._copy_on_write
+
+    def recording(self, spark, meta, detect, rewrite, write_options):
+        def rec(step):
+            def run(df):
+                out = step(df)
+                plans.append(_plan(out))
+                return out
+            return run
+        return real(self, spark, meta, rec(detect), rec(rewrite), write_options)
+
+    monkeypatch.setattr(SnapshotTable, "_copy_on_write", recording)
+    t = SnapshotTable.create(
+        str(tmp_path / "ppt"), "doc_id bigint, lang string, n_chars bigint"
+    )
     t.append(
         spark.range(0, 500).selectExpr(
             "id AS doc_id", "'en' AS lang", "id * 3 AS n_chars"
         )
     )
-    meta = t.metadata()
-    schema = t.schema(meta=meta)
-    kept = t._manifest_rows(t.current_snapshot(meta))
-    scan = t._scan_rows(spark, kept, schema, meta, file_col="_sf_file")
-
-    import pyspark.sql.functions as F
-
-    matched = F.coalesce(F.expr("(doc_id % 7 = 0)"), F.lit(False))
-    detect = scan.filter(matched).groupBy("_sf_file").count()
+    t.delete_where(spark, "doc_id % 7 = 0")
+    t.update_where(spark, "doc_id % 5 = 0", {"n_chars": "n_chars + 1"})
     src = spark.range(0, 50).selectExpr(
         "id AS doc_id", "'xx' AS lang", "0L AS n_chars"
     )
-    merge_detect = scan.join(
-        src.select("doc_id"), on=["doc_id"], how="leftsemi"
-    ).groupBy("_sf_file").count()
+    t.merge_into(spark, src, on=["doc_id"])
 
-    for df in (detect, merge_detect, scan.filter(~matched)):
-        plan = _plan(df)
+    assert len(plans) == 6  # detection + rewrite for each of the three ops
+    for plan in plans:
         assert "EvalPython" not in plan and "ArrowEval" not in plan
         assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
 

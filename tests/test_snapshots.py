@@ -954,3 +954,92 @@ def test_zorder_compaction_prunes_both_dimensions(spark, tmp_path):
         t3 = SnapshotTable(str(tmp_path / "zs"))
         t3.append(spark.sql("SELECT 1L AS a, 'q' AS s"))
         t3.compact(spark, zorder=["a", "s"])
+
+
+# -- one metadata read per scan; one copy-on-write core ----------------------
+
+
+def test_read_plans_from_its_one_metadata_read(spark, tmp_path):
+    """An add_column + append committed right after read() takes its
+    metadata must not tear the read: planning uses that same document, so
+    the scan sees the old snapshot under the old schema (no KeyError for
+    the new file's schema id)."""
+    base = str(tmp_path / "torn")
+    t = SnapshotTable.create(base, "doc_id bigint, lang string, n_chars bigint")
+    t.append(_docs(spark, 0, 50))
+    other = SnapshotTable(base)
+    real = t.metadata
+    state = {"fired": False}
+
+    def racy(version=None):
+        doc = real(version)
+        if not state["fired"]:
+            state["fired"] = True
+            other.add_column("score", "double")
+            other.append(_docs(spark, 50, 60).withColumn("score", F.lit(1.0)))
+        return doc
+
+    t.metadata = racy
+    got = t.read(spark)
+    assert state["fired"]
+    assert got.columns == ["doc_id", "lang", "n_chars"]
+    assert got.count() == 50
+    # the concurrent commit is visible to the next read
+    assert other.read(spark).count() == 60
+
+
+def test_merge_race_with_compaction_conflicts(spark, tmp_path):
+    """MERGE shares the delete/update conflict path: a compaction that
+    removes a touched file between the merge's scan and its commit raises
+    CommitConflict and leaves the compaction's state intact."""
+    base = str(tmp_path / "mr")
+    a = SnapshotTable.create(base, "doc_id bigint, lang string, n_chars bigint")
+    for lo in (0, 100):
+        a.append(_docs(spark, lo, lo + 100).coalesce(1))
+    b = SnapshotTable(base)
+    real = a._cas_write
+    state = {"fired": False}
+
+    def racy(meta):
+        if not state["fired"]:
+            state["fired"] = True
+            b.compact(spark)  # rewrites (removes) every current file
+        real(meta)
+
+    a._cas_write = racy
+    src = spark.sql(
+        "SELECT id AS doc_id, 'xx' AS lang, 0L AS n_chars FROM range(5, 15)"
+    ).union(spark.sql("SELECT 500L AS doc_id, 'zz' AS lang, 1L AS n_chars"))
+    with pytest.raises(CommitConflict):
+        a.merge_into(spark, src, on="doc_id")
+    assert state["fired"]
+    got = b.read(spark)
+    assert got.count() == 200
+    assert got.filter("lang IN ('xx', 'zz')").count() == 0
+    assert b.metadata()["snapshots"][-1]["operation"] == "rewrite"
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_rowops_reject_rows_attributed_outside_manifest(
+    spark, tmp_path, monkeypatch, op
+):
+    """A matched row whose data file does not map back to a manifest
+    entry is an error for every row-level op, never a silently lost
+    rewrite; nothing is committed."""
+    t = SnapshotTable.create(
+        str(tmp_path / op), "doc_id bigint, lang string, n_chars bigint"
+    )
+    t.append(_docs(spark, 0, 20))
+    n_snaps = len(t.metadata()["snapshots"])
+    monkeypatch.setattr(
+        SnapshotTable, "_uri_path", staticmethod(lambda uri: "/elsewhere.parquet")
+    )
+    with pytest.raises(RuntimeError, match="outside the manifest"):
+        if op == "delete":
+            t.delete_where(spark, "doc_id < 5")
+        elif op == "update":
+            t.update_where(spark, "doc_id < 5", {"n_chars": "0"})
+        else:
+            src = spark.sql("SELECT 3L AS doc_id, 'xx' AS lang, 0L AS n_chars")
+            t.merge_into(spark, src, on="doc_id")
+    assert len(t.metadata()["snapshots"]) == n_snaps
