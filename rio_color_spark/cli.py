@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import dataclasses
+import json
 import sys
 
 
@@ -50,6 +51,27 @@ def _co_pairs(values: list[str], parser: argparse.ArgumentParser) -> dict[str, s
         k, _, val = v.partition("=")
         out[k] = val
     return out
+
+
+def _set_pairs(values: list[str], parser: argparse.ArgumentParser) -> dict[str, str]:
+    out = {}
+    for v in values:
+        col, sep, expr = v.partition("=")
+        if not sep or not col.strip() or not expr.strip():
+            parser.error(f"--set expects COL=EXPR, got {v!r}")
+        out[col.strip()] = expr.strip()
+    return out
+
+
+def _print_rowop(snap: dict, before) -> None:
+    """Echo a row op's new snapshot and summary; ``noop`` when nothing
+    matched (no new snapshot)."""
+    out = {"version": snap["version"], "snapshot_id": snap["current_snapshot_id"]}
+    if snap["current_snapshot_id"] == before:
+        out["noop"] = True
+    else:
+        out.update(snap["snapshots"][-1].get("summary", {}))
+    print(json.dumps(out))
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -261,8 +283,6 @@ def _table_cmd(args, parser) -> int:
     files, expire, evolve) never start Spark — they are driver-side
     manifest/metadata reads, exactly like Iceberg's catalog operations;
     append and compact run distributed."""
-    import json as _json
-
     from rio_color_spark.sources.snapshots import SnapshotTable
 
     if args.action == "create":
@@ -286,7 +306,7 @@ def _table_cmd(args, parser) -> int:
     t = SnapshotTable(args.base)
     if args.action == "history":
         for s in t.metadata()["snapshots"]:
-            print(_json.dumps({
+            print(json.dumps({
                 "snapshot_id": s["snapshot_id"],
                 "timestamp_ms": s["timestamp_ms"],
                 "operation": s["operation"],
@@ -297,18 +317,18 @@ def _table_cmd(args, parser) -> int:
     if args.action == "files":
         kept, report = t.plan_files(snapshot_id=args.snapshot_id)
         for r in kept:
-            print(_json.dumps({
+            print(json.dumps({
                 "file_path": r["file_path"], "n_rows": r["n_rows"],
                 "n_bytes": r["n_bytes"], "schema_id": r["schema_id"],
                 "spec_id": r.get("spec_id", 0),
                 "partition": r.get("partition", "{}"),
             }))
-        print(_json.dumps(report))
+        print(json.dumps(report))
         return 0
     if args.action == "expire":
         new = t.expire_snapshots(keep_last=args.keep)
-        print(_json.dumps({"version": new["version"],
-                           "snapshots": len(new["snapshots"])}))
+        print(json.dumps({"version": new["version"],
+                          "snapshots": len(new["snapshots"])}))
         return 0
     if args.action == "evolve":
         if args.add:
@@ -338,22 +358,17 @@ def _table_cmd(args, parser) -> int:
                 spark.read.parquet(args.src),
                 write_options=_co_pairs(args.co, parser),
             )
-            print(_json.dumps({"version": snap["version"],
-                               "snapshot_id": snap["current_snapshot_id"]}))
+            print(json.dumps({"version": snap["version"],
+                              "snapshot_id": snap["current_snapshot_id"]}))
         elif args.action == "merge":
             if not args.src:
                 parser.error("table merge needs a source parquet path")
             if not args.on:
                 parser.error("table merge needs --on KEY")
-            when_matched = args.matched or "update_all"
-            if args.set_:
-                assignments = {}
-                for s in args.set_:
-                    col, sep, expr = s.partition("=")
-                    if not sep or not col.strip() or not expr.strip():
-                        parser.error(f"--set expects COL=EXPR, got {s!r}")
-                    assignments[col.strip()] = expr.strip()
-                when_matched = assignments
+            when_matched = (
+                _set_pairs(args.set_, parser) if args.set_
+                else args.matched or "update_all"
+            )
             before = t.metadata()["current_snapshot_id"]
             try:
                 snap = t.merge_into(
@@ -364,13 +379,7 @@ def _table_cmd(args, parser) -> int:
                 )
             except (KeyError, ValueError) as e:
                 parser.error(str(e))
-            out = {"version": snap["version"],
-                   "snapshot_id": snap["current_snapshot_id"]}
-            if snap["current_snapshot_id"] == before:
-                out["noop"] = True
-            else:
-                out.update(snap["snapshots"][-1].get("summary", {}))
-            print(_json.dumps(out))
+            _print_rowop(snap, before)
         elif args.action in ("delete", "update"):
             if not args.where:
                 parser.error(f"table {args.action} needs --where 'SQL predicate'")
@@ -382,23 +391,11 @@ def _table_cmd(args, parser) -> int:
             else:
                 if not args.set_:
                     parser.error("table update needs --set COL=EXPR")
-                assignments = {}
-                for s in args.set_:
-                    col, sep, expr = s.partition("=")
-                    if not sep or not col.strip() or not expr.strip():
-                        parser.error(f"--set expects COL=EXPR, got {s!r}")
-                    assignments[col.strip()] = expr.strip()
                 snap = t.update_where(
-                    spark, args.where, assignments,
+                    spark, args.where, _set_pairs(args.set_, parser),
                     write_options=_co_pairs(args.co, parser),
                 )
-            out = {"version": snap["version"],
-                   "snapshot_id": snap["current_snapshot_id"]}
-            if snap["current_snapshot_id"] == before:
-                out["noop"] = True  # nothing matched: no new snapshot
-            else:
-                out.update(snap["snapshots"][-1].get("summary", {}))
-            print(_json.dumps(out))
+            _print_rowop(snap, before)
         else:  # compact
             try:
                 snap = t.compact(
@@ -407,8 +404,8 @@ def _table_cmd(args, parser) -> int:
                 )
             except (KeyError, ValueError) as e:
                 parser.error(str(e))
-            print(_json.dumps({"version": snap["version"],
-                               "snapshot_id": snap["current_snapshot_id"]}))
+            print(json.dumps({"version": snap["version"],
+                              "snapshot_id": snap["current_snapshot_id"]}))
     return 0
 
 

@@ -79,12 +79,6 @@ def lonlat_to_xyz(lon, lat):
     return cl * np.cos(lon), cl * np.sin(lon), np.sin(lat)
 
 
-def xyz_to_lonlat(x, y, z):
-    lon = np.degrees(np.arctan2(y, x))
-    lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
-    return lon, lat
-
-
 def _xyz_to_face_uv(x, y, z):
     """3D point → (face, u, v) per the frame table in the module docstring."""
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
@@ -171,17 +165,6 @@ def children(cell) -> np.ndarray:
     c = np.asarray(cell, dtype=np.int64).view(_U64)
     base = c << _U64(2)
     return np.stack([ (base | _U64(q)).view(np.int64) for q in range(4)], axis=-1)
-
-
-def cell_center_lonlat(cell, level: int = DEFAULT_LEVEL):
-    """cell id → (lon, lat) of the cell center."""
-    face, i, j = decompose(cell, level)
-    n = 1 << level
-    u = (i.astype(np.float64) + 0.5) / n * 2.0 - 1.0
-    v = (j.astype(np.float64) + 0.5) / n * 2.0 - 1.0
-    x, y, z = _face_uv_to_xyz(face, u, v)
-    norm = np.sqrt(x * x + y * y + z * z)
-    return xyz_to_lonlat(x / norm, y / norm, z / norm)
 
 
 _RING_STEPS = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]

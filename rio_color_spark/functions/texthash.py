@@ -59,27 +59,20 @@ def tokens_col(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), WS_REGEX)
 
 
-def token_hash_col(tok: Column) -> Column:
-    """First 8 md5 hex chars as int64 — the cross-engine hash."""
-    return F.conv(F.substring(F.md5(tok.cast("binary")), 1, 8), 16, 10).cast("long")
-
-
-def token_hashes_col(text: Column) -> Column:
-    return F.transform(tokens_col(text), token_hash_col)
-
-
 # -- single-parse SQL-text builders -------------------------------------------
 #
-# Shingles and MinHash exist only in SQL-text form: one SQL string parsed
-# JVM-side in a single call (~1 ms), where building the same expression
-# trees node-by-node as Columns cost ~320 ms of DRIVER time for the 16
-# minhash columns (each F.transform lambda round-trips py4j several times).
+# Token hashes, shingles, MinHash and SimHash exist only in SQL-text form:
+# one SQL string parsed JVM-side in a single call (~1 ms), where building
+# the same expression trees node-by-node as Columns cost ~320 ms of DRIVER
+# time for the 16 minhash columns (each F.transform lambda round-trips py4j
+# several times).
 # Their DuckDB twins in plans/sql_oracles.py are built from the same
 # constants; the hash gates and tests/test_dedup*.py pin the parity.
 
 
 def token_hash_sql(tok_sql: str) -> str:
-    """SQL text of :func:`token_hash_col` over a token expression."""
+    """First 8 md5 hex chars as int64 — the cross-engine hash — over a
+    token expression."""
     return f"cast(conv(substring(md5(cast({tok_sql} as binary)), 1, 8), 16, 10) as bigint)"
 
 
@@ -107,20 +100,15 @@ def minhash_sql(hashes_sql: str, j: int) -> str:
     )
 
 
-def minhash_expr(hashes_sql: str, j: int) -> Column:
-    return F.expr(minhash_sql(hashes_sql, j))
-
-
 def simhash_agg_sql(hashes_sql: str, n_sql: str) -> str:
     """Single-pass SimHash as SQL text: one ``aggregate`` over the hash
     array carrying a 32-counter accumulator, then a weighted majority fold.
 
-    Value-identical to :func:`simhash_col` (tests assert it) but each
-    element is visited ONCE instead of once per bit — 2.5× faster in the
-    interpreted HOF evaluator (0.59 → 0.24 s on the sf0.1 documents
-    table). ``n_sql`` is the token count (the size of the token array) —
-    passed separately so callers with a materialized hash column don't
-    re-evaluate the tokenize pipeline just for its length.
+    Value-identical to the per-bit reference formulation in
+    ``tests/twins.py`` (tests assert it) but each element is visited ONCE
+    instead of once per bit — 2.5× faster in the interpreted HOF evaluator
+    (0.59 → 0.24 s on the sf0.1 documents table). ``n_sql`` is the token
+    count (the size of the token array).
     """
     bits = ", ".join(
         f"cast(shiftright(x, {b}) & 1 as bigint)" for b in range(SIMHASH_BITS)
@@ -134,32 +122,6 @@ def simhash_agg_sql(hashes_sql: str, n_sql: str) -> str:
         f"(c, w) -> CASE WHEN c * 2 > {n_sql} THEN w ELSE 0L END), "
         "0L, (a, v) -> a + v)"
     )
-
-
-def simhash_agg_expr(hashes_sql: str, n_sql: str) -> Column:
-    return F.expr(simhash_agg_sql(hashes_sql, n_sql))
-
-
-def simhash_col(hashes: Column) -> Column:
-    """32-bit SimHash: bit b set iff strict majority of hashes set bit b."""
-    def bit_pred(b: int):
-        # a plain 1-arg lambda with a default arg would be inspected by
-        # PySpark as a 2-arg (value, index) lambda — build via closure
-        return lambda x: F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1
-
-    n = F.size(hashes)
-    acc = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        set_cnt = F.size(F.filter(hashes, bit_pred(b)))
-        acc = acc + F.when(set_cnt * 2 > n, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
-
-
-def hamming32_col(a: Column, b: Column) -> Column:
-    """Hamming distance between two 32-bit simhashes (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def stopword_hits_col(text: Column, lang: str) -> Column:

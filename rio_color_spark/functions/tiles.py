@@ -83,16 +83,6 @@ def tile_cols(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
     return clip(x).cast("int"), clip(y).cast("int")
 
 
-def tile_bounds(x: int, y: int, zoom: int) -> tuple[float, float, float, float]:
-    """(lon_min, lat_min, lon_max, lat_max) of a tile."""
-    n = 1 << zoom
-    lon_min = x / n * 360.0 - 180.0
-    lon_max = (x + 1) / n * 360.0 - 180.0
-    lat_max = math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * y / n))))
-    lat_min = math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * (y + 1) / n))))
-    return lon_min, lat_min, lon_max, lat_max
-
-
 def bbox_tile_range(
     lon_min: float, lat_min: float, lon_max: float, lat_max: float, zoom: int
 ) -> tuple[int, int, int, int]:

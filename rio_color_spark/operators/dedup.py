@@ -6,79 +6,28 @@ All four families over a generic (id, text) DataFrame:
 - **MinHash + LSH** — shingle → 16 MinHashes → 4×4 banding → candidate
   pairs via band equi-join → exact-Jaccard verification. The band join is
   the canonical big-data near-dup plan: no cross join ever materializes.
-- **SimHash** — 32-bit majority-vote fingerprint; near-dups = pairs at
-  Hamming distance ≤ r among band-join candidates
+- **SimHash** — 32-bit majority-vote fingerprint per document
 - **n-gram Jaccard** — exact 3-shingle Jaccard on candidate pairs
 
 Every hash primitive comes from functions/texthash.py and has a DuckDB
 twin, so the driver's oracle comparison covers these operators exactly.
-All hashing runs JVM-side (md5 + conv Column expressions over a
-Generate-materialized hash array) — there are no Python crossings in this
-module's execution paths; the NumPy functions below are test-only twins.
+All hashing runs JVM-side (md5 + conv SQL expressions over a
+Generate-materialized token array) — there are no Python crossings in this
+module's execution paths. The NumPy reference twins the tests compare
+against live in tests/twins.py.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
-
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rio_color_spark.functions import texthash as TH
 
-_WS = re.compile(TH.WS_REGEX)
-
-
-def _sig_from_shingles(sh: list[str]) -> list[int]:
-    """MinHash signature from a precomputed shingle list (one tokenization
-    per document — the shingles are computed once and shared, not rebuilt
-    inside the signature)."""
-    if not sh:
-        return [TH.MINHASH_P] * TH.N_MINHASH
-    hs = np.array(
-        [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) for s in sh],
-        dtype=np.int64,
-    )
-    a = np.array(TH.MINHASH_A, dtype=np.int64)[:, None]
-    b = np.array(TH.MINHASH_B, dtype=np.int64)[:, None]
-    sig = ((a * (hs % TH.MINHASH_P)[None, :] + b) % TH.MINHASH_P).min(axis=1)
-    return sig.tolist()
-
-
-def _minhash_sig_py(text: str) -> list[int]:
-    """NumPy MinHash reference twin of the JVM Column formulation.
-
-    Token/shingle/hash definitions mirror the Column builders exactly:
-    whitespace split of trimmed lowercased text, 3-word shingles, first 8
-    md5 hex chars as the element hash. Kept (with _simhash_py) as an
-    engine-independent cross-check — tests assert the JVM operators match
-    it value-for-value; it is NOT on any execution path.
-    """
-    return _sig_from_shingles(_shingles_py(text))
-
-
-def _simhash_py(text: str) -> int:
-    """32-bit majority SimHash reference twin (see _minhash_sig_py)."""
-    # strip(" ") not strip(): Spark/DuckDB `trim` removes ONLY spaces,
-    # and the oracle contract is trim(lower(text))
-    toks = _WS.split(text.lower().strip(" "))
-    hs = np.array(
-        [int(hashlib.md5(t.encode("utf-8")).hexdigest()[:8], 16) for t in toks],
-        dtype=np.int64,
-    )
-    n = len(hs)
-    bits = (hs[:, None] >> np.arange(TH.SIMHASH_BITS)[None, :]) & 1  # (n, 32)
-    maj = bits.sum(axis=0) * 2 > n
-    return int((maj.astype(np.int64) << np.arange(TH.SIMHASH_BITS)).sum())
-
-
-def _shingles_py(text: str) -> list[str]:
-    # strip(" ") not strip(): Spark/DuckDB `trim` removes ONLY spaces,
-    # and the oracle contract is trim(lower(text))
-    toks = _WS.split(text.lower().strip(" "))
-    return [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+#: md5-prefix hashes of the 3-word shingles of the materialized ``_toks``
+_SHINGLE_HASHES_SQL = (
+    f"transform({TH.shingles3_sql('_toks')}, s -> {TH.token_hash_sql('s')})"
+)
 
 
 def _materialize(df: DataFrame, cols: dict) -> DataFrame:
@@ -166,18 +115,13 @@ def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     Column formulation in round 2 (see _materialize).
     """
     base = _materialize(_spread(df), {"_toks": TH.tokens_col(F.col(text_col))})
-    base = _materialize(
-        base,
-        {
-            "_shh": F.expr(
-                f"transform({TH.shingles3_sql('_toks')}, "
-                f"s -> {TH.token_hash_sql('s')})"
-            )
-        },
-    )
+    base = _materialize(base, {"_shh": F.expr(_SHINGLE_HASHES_SQL)})
     return base.select(
         "*",
-        *[TH.minhash_expr("_shh", j).alias(f"mh{j}") for j in range(TH.N_MINHASH)],
+        *[
+            F.expr(TH.minhash_sql("_shh", j)).alias(f"mh{j}")
+            for j in range(TH.N_MINHASH)
+        ],
     ).drop("_toks", "_shh")
 
 
@@ -220,15 +164,9 @@ def minhash_lsh_pairs(
         ).select("id", "_toks")
     )
     sh_expr = F.expr(TH.shingles3_sql("_toks"))
-    enriched = _materialize(
-        toked,
-        {
-            "_shh": F.expr(
-                f"transform({TH.shingles3_sql('_toks')}, "
-                f"s -> {TH.token_hash_sql('s')})"
-            )
-        },
-    ).select("id", "_shh")
+    enriched = _materialize(toked, {"_shh": F.expr(_SHINGLE_HASHES_SQL)}).select(
+        "id", "_shh"
+    )
 
     band_sigs = F.expr(
         "array("
@@ -288,62 +226,17 @@ def minhash_lsh_pairs(
 def with_simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, simhash) — 32-bit majority-vote fingerprint per document.
 
-    Pure JVM: token hashes (and the token count) are materialized once
-    behind a Generate barrier (see _materialize), then the single-pass
-    aggregate fingerprint (texthash.simhash_agg_sql) folds them — each
-    hash visited once, not once per bit."""
+    Pure JVM: the tokens are materialized once behind a Generate barrier
+    (see _materialize); the single-pass aggregate fingerprint
+    (texthash.simhash_agg_sql) then hashes and folds them, and the token
+    count is the size of the same array — one tokenize per row."""
     base = _materialize(
         _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text"))),
-        {
-            "_th": TH.token_hashes_col(F.col("_text")),
-            "_n": F.size(TH.tokens_col(F.col("_text"))),
-        },
+        {"_toks": TH.tokens_col(F.col("_text"))},
     )
+    hashes = f"transform(_toks, t -> {TH.token_hash_sql('t')})"
     return base.select(
-        "id", TH.simhash_agg_expr("_th", "_n").alias("simhash")
-    )
-
-
-def simhash_neardups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs at Hamming distance ≤ ``max_hamming``.
-
-    Candidates via 4×8-bit band equi-join. By pigeonhole the 4 bands
-    guarantee full recall only for Hamming ≤ 3 — hence the default.
-    Passing a larger ``max_hamming`` widens the FILTER but keeps the same
-    4-band candidate set, so recall beyond distance 3 is partial (a pair
-    differing in ≥4 bits may hit all four bands and share none); callers
-    wanting guaranteed radius r need ceil(32/(r+1))-bit bands.
-    """
-    sim = with_simhash(df, id_col, text_col)
-    # one explode instead of a 4-way self-union: the fingerprint subtree is
-    # evaluated once per document, not once per band replica
-    bands = sim.select(
-        "id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
-    ).withColumn(
-        "band_val",
-        F.expr("shiftright(simhash, band * 8)").bitwiseAND(F.lit(0xFF)),
-    )
-
-    left = bands.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a")
-    )
-    right = bands.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b")
-    )
-    return (
-        left.join(right, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", TH.hamming32_col(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        "id", F.expr(TH.simhash_agg_sql(hashes, "size(_toks)")).alias("simhash")
     )
 
 

@@ -559,10 +559,3 @@ def decode_jpeg(data: bytes, tables: bytes | None = None) -> np.ndarray:
         out = _ycbcr_to_rgb(out)
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
-
-def psnr(a: np.ndarray, b: np.ndarray, peak: float = 255.0) -> float:
-    """Peak signal-to-noise ratio in dB (the reference's lossy gate unit)."""
-    mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(peak * peak / mse)

@@ -12,7 +12,7 @@ import pytest
 
 from rio_color_spark.operators import media
 from rio_color_spark.sources import avi
-from rio_color_spark.sources.jpeg import psnr
+from rio_color_spark.functions.utils import psnr
 
 
 def _smooth_clip(nf=4, h=48, w=40):

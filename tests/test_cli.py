@@ -284,8 +284,21 @@ def test_table_merge_cli(spark, tmp_path, capsys):
     assert df.count() == 60
     assert df.filter("lang = 'xx'").count() == 20
 
+    # --set: matched rows get the assignment over the pre-merge target row
+    assert main(["table", "merge", base, src1, "--on", "doc_id",
+                 "--set", "n_chars=n_chars+1", "-j", "2"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["matched_rows"] == 20 and out["inserted_rows"] == 0
+    df = SnapshotTable(base).read(spark)
+    assert df.count() == 60
+    assert df.filter("doc_id >= 40 AND n_chars = doc_id * 2 + 1").count() == 20
+    assert df.filter("doc_id < 40 AND n_chars = doc_id").count() == 40
+
     with pytest.raises(SystemExit) as e:
         main(["table", "merge", base, src1])  # no --on
+    assert e.value.code == 2
+    with pytest.raises(SystemExit) as e:
+        main(["table", "merge", base, src1, "--on", "doc_id", "--set", "oops"])
     assert e.value.code == 2
 
 

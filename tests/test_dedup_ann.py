@@ -15,6 +15,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+import twins
 from rio_color_spark.operators import ann as ANN
 from rio_color_spark.operators import dedup as DD
 
@@ -121,14 +122,8 @@ def test_brute_force_topk_requires_bounded_queries(embs):
     assert out.count() == 5 * 3
 
 
-def test_simhash_neardups_default_radius_is_guaranteed(docs):
-    """Default max_hamming equals the 4-band pigeonhole guarantee (3)."""
-    out = DD.simhash_neardups(docs)
-    assert out.filter(F.col("hamming") > 3).count() == 0
-
-
 def test_jvm_hashing_matches_python_twins(spark):
-    """The JVM Column MinHash/SimHash (the execution path — zero Python
+    """The JVM MinHash/SimHash (the execution path — zero Python
     crossings) matches the NumPy reference twins value-for-value, including
     the whitespace edge cases where Python .strip() and SQL trim diverge
     (trim removes ONLY spaces — the oracle contract)."""
@@ -145,10 +140,10 @@ def test_jvm_hashing_matches_python_twins(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mh = {r["doc_id"]: [r[f"mh{j}"] for j in range(16)] for r in DD.with_minhash(df).collect()}
     for i, t in rows:
-        assert mh[i] == DD._minhash_sig_py(t), (i, t)
+        assert mh[i] == twins.minhash_sig_py(t), (i, t)
     sh = {r["id"]: r["simhash"] for r in DD.with_simhash(df).collect()}
     for i, t in rows:
-        assert sh[i] == DD._simhash_py(t), (i, t)
+        assert sh[i] == twins.simhash_py(t), (i, t)
 
 
 def test_dedup_paths_have_no_python_stage(docs):
@@ -158,7 +153,6 @@ def test_dedup_paths_have_no_python_stage(docs):
         DD.with_minhash(docs),
         DD.with_simhash(docs),
         DD.minhash_lsh_pairs(docs, jaccard_threshold=0.0),
-        DD.simhash_neardups(docs),
         DD.ngram_jaccard_pairs(docs.withColumn("grp", F.col("doc_id") % 5), group_col="grp"),
     ):
         plan = _plan(out)
@@ -192,14 +186,16 @@ def test_simhash_agg_equals_reference_column(spark, docs):
     from rio_color_spark.functions import texthash as TH
 
     base = docs.select(
+        "doc_id", TH.tokens_col(F.col("text")).alias("toks")
+    ).select(
         "doc_id",
-        TH.token_hashes_col(F.col("text")).alias("th"),
-        F.size(TH.tokens_col(F.col("text"))).alias("n"),
+        F.expr(f"transform(toks, t -> {TH.token_hash_sql('t')})").alias("th"),
+        F.size("toks").alias("n"),
     )
     out = base.select(
         "doc_id",
-        TH.simhash_agg_expr("th", "n").alias("one_pass"),
-        TH.simhash_col(F.col("th")).alias("ref"),
+        F.expr(TH.simhash_agg_sql("th", "n")).alias("one_pass"),
+        twins.simhash_col(F.col("th")).alias("ref"),
     ).collect()
     assert len(out) > 0
     for r in out:

@@ -6,6 +6,7 @@
   shuffled (no Exchange between the fact scan and the join)
 - chunk scans read only their own files (pruning at planning time)
 - the LSH self-joins run their bucket UDF once, behind a reused exchange
+- the dedup hashes tokenize each document once
 
 These are the properties that keep the flagship pipeline viable at 100 TB;
 value correctness is gated elsewhere (oracles + resume tests).
@@ -146,3 +147,15 @@ def test_lsh_pairs_tokenizes_once_via_reused_exchanges(spark):
     assert any("Exchange hashpartitioning(band#" in line and "band_sig#" in line
                for line in reused)
     assert any("Exchange RoundRobinPartitioning(" in line for line in reused)
+
+
+def test_simhash_tokenizes_once(spark):
+    """with_simhash splits each document once: the token hashes and the
+    token count both read the one materialized token array."""
+    import __spark_entry__ as E
+    from test_oracle_parity import SF
+
+    df = E.q_simhash(spark, SF)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert final.count("split(trim(lower(_text") == 1

@@ -114,7 +114,7 @@ def test_jpeg_in_tiff_roundtrip_psnr40(tmp_path):
     """Reference tests/test_cli.py:121-169 asserts compress=jpeg lands in
     the container; the engine's lossy gate is PSNR>=40dB on decoded
     pixels (BASELINE north rule)."""
-    from rio_color_spark.sources.jpeg import psnr
+    from rio_color_spark.functions.utils import psnr
 
     arr, prof = T.read_tiff(f"{REF}/rgb8.tif")
     p = T.apply_creation_options(prof, {"compress": "jpeg"})
@@ -198,7 +198,7 @@ def test_planar_roundtrip_tiled_and_stripped(tmp_path):
     # JPEG stream (libtiff's SEPARATE+JPEG shape); lossy, so PSNR-pinned.
     # No JFIF color transform per-plane, so it need not match chunky-JPEG
     # bytes — only the decoded raster quality.
-    from rio_color_spark.sources.jpeg import psnr
+    from rio_color_spark.functions.utils import psnr
 
     pj = T.apply_creation_options(p, {"compress": "jpeg"})
     assert pj.planar == 2
@@ -296,7 +296,7 @@ def test_creation_options_change_container(spark, tmp_path):
     """Reference test_creation_opts: --co compress=X demonstrably lands
     in the file — including the reference's literal compress=jpeg
     contract (tests/test_cli.py:128,137,146,169) at PSNR>=40dB."""
-    from rio_color_spark.sources.jpeg import psnr
+    from rio_color_spark.functions.utils import psnr
 
     tbl = str(tmp_path / "tbl")
     TB.ingest_tiff(spark, f"{REF}/rgb8.tif", tbl)
