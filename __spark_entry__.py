@@ -1135,7 +1135,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     n = _t(spark, "/root/testdata/sf0.001", "documents").count()
     images = images_df(spark, int(n))
-    colored = index_and_color(images, FLAGSHIP_OPS, zoom=12, level=12)
+    colored = index_and_color(images, FLAGSHIP_OPS)
     return colored.select(
         "image_id", "caption", "fmt", "w", "h", "tile_x", "tile_y", "cell_id"
     )

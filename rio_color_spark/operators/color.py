@@ -246,23 +246,21 @@ INDEX_COLS_SCHEMA = (
     "tile_xyz long, cell_id long"
 )
 
+#: XYZ tile zoom and hierarchical cell level of the fused index columns
+TILE_ZOOM = 12
+CELL_LEVEL = 12
 
-def index_and_color(
-    df: DataFrame,
-    ops_string: str,
-    zoom: int = 12,
-    level: int = 12,
-    out_dtype: str | None = None,
-    packed=None,
-) -> DataFrame:
+
+def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
     """Spatial index + fused color chain (+ optional PIP) in ONE Python crossing.
 
     Chaining with_spatial_index's cell UDF stage in front of the color
     ``mapInPandas`` puts TWO Python worker sets in every task pipeline —
     at local[32] that is 64 concurrent heavy workers and it collapses
     throughput (measured 25-174 s vs 4 s). This operator computes lon/lat,
-    tiles, cells (NumPy kernels) and the color chain in the same batch
-    loop: one worker set, one Arrow round-trip, same values.
+    tiles at :data:`TILE_ZOOM`, cells at :data:`CELL_LEVEL` (NumPy
+    kernels) and the color chain in the same batch loop: one worker set,
+    one Arrow round-trip, same values. Payloads keep their input dtype.
 
     ``packed`` (a functions.pip.PackedPolygons dimension set) additionally
     computes ``poly_ids: array<string>`` — the containing polygons per
@@ -278,8 +276,6 @@ def index_and_color(
     from rio_color_spark.sources.images import lonlat_from_phash
 
     parse_ops_spec(ops_string)
-    if out_dtype is not None:
-        np.iinfo(np.dtype(out_dtype))
 
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
     schema = f"{schema}, {INDEX_COLS_SCHEMA}"
@@ -289,35 +285,18 @@ def index_and_color(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fused = compile_chain(ops_string)
         for pdf in batches:
-            out = _transform_batch(pdf, fused, out_dtype)
+            out = _transform_batch(pdf, fused, None)
             lon, lat = lonlat_from_phash(pdf["phash"].to_numpy())
-            tx, ty = tilemod.tile_xy(lon, lat, zoom)
+            tx, ty = tilemod.tile_xy(lon, lat, TILE_ZOOM)
             out["lon"] = lon
             out["lat"] = lat
             out["tile_x"] = tx.astype(np.int32)
             out["tile_y"] = ty.astype(np.int32)
-            out["tile_z"] = np.int32(zoom)
-            out["tile_xyz"] = tilemod.pack_tile(tx, ty, zoom)
-            out["cell_id"] = cellmod.encode_cell(lon, lat, level)
+            out["tile_z"] = np.int32(TILE_ZOOM)
+            out["tile_xyz"] = tilemod.pack_tile(tx, ty, TILE_ZOOM)
+            out["cell_id"] = cellmod.encode_cell(lon, lat, CELL_LEVEL)
             if packed is not None:
                 out["poly_ids"] = pip_multi(lon, lat, packed)
             yield out
 
     return df.mapInPandas(run, schema=schema)
-
-
-def atmos(
-    df: DataFrame,
-    haze: float,
-    contrast: float,
-    bias: float,
-    out_dtype: str | None = None,
-) -> DataFrame:
-    """Atmospheric correction operator (reference workers.py:9-18).
-
-    Composed from the same fused-chain machinery via the canonical opstring
-    (equivalence pinned by the reference tests/test_operations.py:200-205).
-    """
-    from rio_color_spark.functions.operations import simple_atmo_opstring
-
-    return color_correct(df, simple_atmo_opstring(haze, contrast, bias), out_dtype)

@@ -19,6 +19,8 @@ against live in tests/twins.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,45 +49,62 @@ def _materialize(df: DataFrame, cols: dict) -> DataFrame:
     return out.select("*", *[F.col(f"_m.{n}").alias(n) for n in cols]).drop("_m")
 
 
+def _scan_splits(spark, sizes: list[int]) -> int:
+    """How many scan partitions Spark plans for files of ``sizes`` bytes.
+
+    Spark's own rule (``FilePartition``): the split size is
+    ``min(maxPartitionBytes, max(openCostInBytes, Σ(size + openCost) /
+    parallelism))``, every file is cut into splits of at most that size,
+    and the splits, largest first, are packed next-fit with the open cost
+    charged per split. The byte settings are Spark's own parse of the conf
+    values ("128m", "1gb", ...).
+    """
+    jss = spark._jsparkSession
+    conf = jss.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    parallelism = min_parts.get() if min_parts.isDefined() else jss.leafNodeDefaultParallelism()
+    total = sum(size + open_cost for size in sizes)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // parallelism))
+    n, current = 0, 0
+    for length in sorted(
+        (min(split, size - off) for size in sizes for off in range(0, size, split)),
+        reverse=True,
+    ):
+        if current and current + length > split:
+            n, current = n + 1, 0
+        current += length + open_cost
+    return n + (current > 0)
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Parallelism guard for heavy per-row map stages.
 
-    A scan that planned fewer splits than the session's shuffle parallelism
-    (e.g. a single-file table in local tests — parquet can't split below a
-    file) is re-spread with a round-robin repartition so the tokenize/hash
-    map stage uses every core. A well-split table — the 100-TB case, where
-    the scan plans thousands of splits — passes through untouched: no
-    shuffle is ever added at scale.
+    A scan that plans fewer partitions than the session's shuffle
+    parallelism (a single-file table — parquet can't split below a file —
+    or many tiny files that Spark packs into a few splits) is re-spread
+    with a round-robin repartition so the tokenize/hash map stage uses
+    every core. A well-split table — the 100-TB case, where the scan plans
+    thousands of splits — passes through untouched: no shuffle is ever
+    added at scale.
 
-    The probe reads the scan's file list + local file sizes (driver
-    metadata, ~85 ms) instead of ``df.rdd.getNumPartitions()`` (a full
-    physical planning + RDD conversion, ~200 ms of serial driver time per
-    query build); the RDD probe remains the fallback for non-local files.
+    The probe reads driver metadata only (the scan's file list, local file
+    sizes and :func:`_scan_splits`) instead of ``df.rdd.getNumPartitions()``
+    (a full physical planning + RDD conversion per query build); the RDD
+    probe remains the fallback for tables without local files.
     """
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         files = df.inputFiles()
     except Exception:
-        files = None
-    if files:
-        if len(files) >= target:
-            return df
-        try:
-            # Spark's own parse of the conf value ("128m", "1gb", ...)
-            mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-            import os
-
-            est = 0
-            for f in files:
-                local = f.removeprefix("file:").lstrip("/")
-                est += -(-os.path.getsize("/" + local) // mpb)
-            return df.repartition(target) if est < target else df
-        except OSError:
-            pass  # non-local paths: fall through to the RDD probe
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+        files = []
+    try:
+        sizes = [os.path.getsize("/" + f.removeprefix("file:").lstrip("/")) for f in files]
+    except OSError:
+        sizes = []  # non-local paths: fall back to the RDD probe
+    n = _scan_splits(spark, sizes) if sizes else df.rdd.getNumPartitions()
+    return df.repartition(target) if n < target else df
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

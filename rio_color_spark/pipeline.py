@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 from rio_color_spark.functions.pip import PackedPolygons
 from rio_color_spark.operators.color import index_and_color
-from rio_color_spark.operators.knn import knn_join
 from rio_color_spark.sources.catalog import CheckpointedWriter
+from rio_color_spark.sources.images import PAYLOAD_WRITE_OPTIONS
 
 #: the reference README's canonical example chain (README.md:29-47)
 FLAGSHIP_OPS = "gamma b 1.85, gamma rg 1.95, sigmoidal rgb 35 0.13, saturation 1.15"
@@ -163,24 +163,14 @@ def run_pipeline(
     out_base: str,
     packed: PackedPolygons,
     ops: str = FLAGSHIP_OPS,
-    zoom: int = 12,
-    level: int = 12,
     n_chunks: int = 4,
-    knn_k: int = 0,
-    knn_level: int = 4,
-    fail_after: int | None = None,
-    write_options: dict | None = None,
     snapshot_base: str | None = None,
 ) -> CheckpointedWriter:
     """Run (or resume) the pipeline; returns the writer for readback.
 
     ``images`` may be a parquet path (preferred: file-stripe chunking, one
-    scan per input byte) or a DataFrame. ``fail_after`` simulates a crash
-    after N chunk commits (resume tests). ``write_options`` are creation
-    options applied to every chunk write (e.g. compression codec); the
-    default is lz4 without dictionary encoding (see below), and
-    ``write_options={}`` restores the session's codec and dictionary
-    defaults.
+    scan per input byte) or a DataFrame. Every chunk is written with
+    :data:`~rio_color_spark.sources.images.PAYLOAD_WRITE_OPTIONS`.
 
     ``snapshot_base`` additionally maintains a
     :class:`~rio_color_spark.sources.snapshots.SnapshotTable` over the
@@ -193,20 +183,7 @@ def run_pipeline(
     the next run (any committed chunk missing from the log is re-added;
     any chunk already in the log is skipped).
     """
-    # default codec for pipeline outputs: lz4. The dominant output bytes
-    # are colored pixel payloads (incompressible), where the session's
-    # zstd default costs ~2x the write wall for a ~1% size win (measured:
-    # guide §6 "measure both"); callers needing archival ratios pass
-    # write_options={"compression": "zstd"} (the CLI's --co does exactly
-    # that, so explicit creation options are untouched).
-    if write_options is None:
-        write_options = {
-            "compression": "lz4",
-            # unique binary payloads defeat dictionary encoding — it
-            # buffers + hashes every value, then falls back to plain pages
-            "parquet.enable.dictionary": "false",
-        }
-    writer = CheckpointedWriter(out_base, write_options)
+    writer = CheckpointedWriter(out_base, PAYLOAD_WRITE_OPTIONS)
     readers, fps = chunk_plan(spark, images, n_chunks)
 
     done = writer.committed()
@@ -230,25 +207,20 @@ def run_pipeline(
             if path:
                 snap.commit_chunk(k, path, rec.get("stripe_md5"))
 
-    completed = 0
     for k in range(n_chunks):
         if k in done:
             continue
         part = readers[k]()
         # job 1: index + PIP + color fused — exactly ONE Python worker set
         # per task (see operators/color.index_and_color)
-        colored = index_and_color(part, ops, zoom=zoom, level=level, packed=packed)
+        colored = index_and_color(part, ops, packed=packed)
         paths = {"images": writer.write_data(colored, "images", k)}
 
         # job 2: assignments from the WRITTEN output — bytes pruned at the
         # scan, poly_ids exploded JVM-side; zero Python stages. The written
         # schema is colored.schema — passing it skips footer inference
         # (another fixed driver-side cost that taxes the N-vs-4N ratio)
-        meta = spark.read.schema(colored.schema).parquet(paths["images"]).select(
-            "image_id", "lon", "lat", "tile_x", "tile_y", "tile_z",
-            "tile_xyz", "cell_id", "poly_ids",
-        )
-        assignments = meta.select(
+        assignments = spark.read.schema(colored.schema).parquet(paths["images"]).select(
             "image_id",
             F.explode("poly_ids").alias("poly_id"),
             "cell_id",
@@ -256,23 +228,11 @@ def run_pipeline(
         )
         paths["assignments"] = writer.write_data(assignments, "assignments", k)
 
-        if knn_k:
-            knn_meta = meta.withColumn(
-                "cell_id",
-                F.shiftright(F.col("cell_id"), 2 * (level - knn_level)),
-            )
-            paths["knn"] = writer.write_data(
-                knn_join(knn_meta, k=knn_k, level=knn_level), "knn", k
-            )
-
         writer.commit_chunk(
             k, paths, extra={"stripe_md5": fps[k]} if fps[k] else None
         )
         if snap:
             snap.commit_chunk(k, paths["images"], fps[k] or None)
-        completed += 1
-        if fail_after is not None and completed >= fail_after:
-            raise RuntimeError(f"simulated crash after {completed} chunks")
     return writer
 
 

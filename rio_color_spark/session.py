@@ -2,8 +2,8 @@
 
 Arrow is the JVM↔Python wire for every pixel operator, so the session pins
 the Arrow batch size (the analogue of the reference's 32×32 block windows —
-cli.py:81-83 — which bounded memory per work unit) and enables AQE for
-runtime re-planning of the spatial joins.
+cli.py:81-83 — which bounded memory per work unit). Only settings that
+differ from Spark's defaults are written here (tests/test_session.py).
 """
 
 from __future__ import annotations
@@ -20,14 +20,15 @@ from pyspark.sql import SparkSession
 #: retry-capable local master form; every engine session uses it.
 LOCAL_TASK_RETRIES = 4
 
-_PLAIN_LOCAL = re.compile(r"local\[(\d+|\*)\]$")
+#: ``local``, ``local[N|*]`` or ``local[N|*,F]``: group 1 the cores, 2 the retries
+_LOCAL = re.compile(r"local(?:\[(\d+|\*)(,\d+)?\])?")
 
 
 def _retryable_master(master: str) -> str:
     """``local[N]`` → ``local[N,F]`` so task failures retry instead of
     failing the job (cluster masters pass through untouched)."""
-    m = _PLAIN_LOCAL.fullmatch(master)
-    if m:
+    m = _LOCAL.fullmatch(master)
+    if m and m.group(1) and not m.group(2):
         return f"local[{m.group(1)},{LOCAL_TASK_RETRIES}]"
     return master
 
@@ -40,6 +41,20 @@ def driver_memory(phys_bytes: int | None = None) -> str:
     if phys_bytes is None:
         phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, phys_bytes // 2 // 2**30)}g"
+
+
+def shuffle_partitions(master: str, host_cores: int | None = None) -> int | None:
+    """``spark.sql.shuffle.partitions`` that fits a local master: two per
+    core (Spark's tuning guide suggests 2-3 tasks per core), where
+    ``local[*]`` has the host's cores. None for a cluster master, which
+    keeps Spark's own setting."""
+    m = _LOCAL.fullmatch(master)
+    if not m:
+        return None
+    cores = m.group(1) or "1"
+    if cores == "*":
+        cores = host_cores or len(os.sched_getaffinity(0))
+    return 2 * int(cores)
 
 
 #: rows per Arrow batch crossing into Python workers. At the default 32×32
@@ -61,19 +76,19 @@ _WORKER_ENV_PINS = {
 
 
 def get_spark(
-    app_name: str = "rio_color_spark",
-    master: str | None = None,
-    shuffle_partitions: int = 32,
+    app_name: str = "rio_color_spark", master: str | None = None
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with the engine's tuning applied.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the
     env var is unset). On a real cluster, pass ``master=None`` and let
-    spark-submit supply it.
+    spark-submit supply it. Shuffle partitions follow the master's cores
+    (:func:`shuffle_partitions`).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    partitions = shuffle_partitions(master)
     master = _retryable_master(master)
 
     # local-mode python workers inherit the driver env
@@ -83,33 +98,11 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", driver_memory())
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # binary image payloads compress poorly and dictionary-encode worse
-        .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.ui.enabled", "false")
-        # scan-split size. MEASURED on the 100k-image pipeline (r3): 16 MiB
-        # splits of a 256-file input made one ~390-row task per file — each
-        # task crossed into Python with a single undersized Arrow batch and
-        # per-task overhead dominated (local[8] 22.0 s). Packing ~3-7 files
-        # per split fills the 2048-row Arrow batches and amortizes the
-        # worker round-trip: 64 MiB → 13.2 s, 128 MiB → 10.8 s at local[8]
-        # (and 36.5 s vs 77.7 s at local[2]). 128 MiB is also the standard
-        # cluster setting. Never lower it below the parquet row-group size
-        # (openCostInBytes is the packing knob — see below).
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        # packing knob for many-small-files tables: raising the open cost
-        # toward maxPartitionBytes gives ~one file per split WITHOUT
-        # creating sub-file splits (sub-row-group split planning of zstd
-        # parquet measured 15-25x slower scans on this box: a 3.6 GB scan
-        # took 148 s at 2 MB splits vs 5.9 s at 64 MB)
-        .config("spark.sql.files.openCostInBytes", "4m")
         .config("spark.ui.showConsoleProgress", "false")
         # self-healing for the (rare, local-mode, 1M-scale) wedged-task
         # hazard: a JVM task thread stuck reading from an idle Python worker
@@ -130,6 +123,8 @@ def get_spark(
         .config("spark.python.worker.idleTimeoutSeconds", "600")
         .config("spark.python.worker.killOnIdleTimeout", "true")
     )
+    if partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(partitions))
     # shuffle/spill scratch on tmpfs when available: the sandbox's single
     # virtio disk collapses under concurrent writers (a cluster's shuffle
     # goes to per-node local disks)

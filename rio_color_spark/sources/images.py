@@ -179,23 +179,18 @@ def images_df(spark, n_rows: int, partitions: int | None = None):
     )
 
 
-def write_images(spark, n_rows: int, path: str, partitions: int | None = None):
-    """Materialize the synthetic table to parquet (bench input).
+#: writer options for tables whose ``bytes`` column holds pixel payloads
+#: (the synthetic images table, every pipeline chunk). lz4, not the
+#: session's zstd: the payloads are incompressible (100k rows on tmpfs:
+#: zstd 7.3 s / 375 MB vs lz4 3.0 s / 377 MB). No dictionary for ``bytes``
+#: only: unique payloads make it hash every value, then fall back to plain.
+PAYLOAD_WRITE_OPTIONS = {"compression": "lz4", "parquet.enable.dictionary#bytes": "false"}
 
-    Codec: lz4, not the session's zstd default. The ``bytes`` payload is
-    counter-hash pixels — incompressible — so zstd burns CPU for a 1.6%
-    size win (measured at 100k rows / 256 files on tmpfs: zstd 7.3 s /
-    375 MB vs lz4 3.0 s / 377 MB write; the lz4 scan side is faster too).
-    The text/metadata columns are a rounding error of the bytes.
-    """
-    images_df(spark, n_rows, partitions).write.mode("overwrite").option(
-        "compression", "lz4"
-    ).option(
-        # dictionary encoding buffers and hashes every unique value; the
-        # 3 KB payloads are all unique, so it only burns CPU/memory before
-        # falling back to plain pages (measured ~8% of the write wall)
-        "parquet.enable.dictionary",
-        "false",
+
+def write_images(spark, n_rows: int, path: str, partitions: int | None = None):
+    """Materialize the synthetic table to parquet (bench input)."""
+    images_df(spark, n_rows, partitions).write.mode("overwrite").options(
+        **PAYLOAD_WRITE_OPTIONS
     ).parquet(path)
 
 

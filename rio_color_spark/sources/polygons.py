@@ -19,13 +19,13 @@ def _unit(h: np.ndarray) -> np.ndarray:
     return (h >> np.uint64(11)).astype(np.float64) / 2.0**53
 
 
-def make_polygons(n_polys: int, hot: bool = True) -> list[tuple[str, np.ndarray]]:
+def make_polygons(n_polys: int) -> list[tuple[str, np.ndarray]]:
     """Generate ``n_polys`` deterministic convex rings (lon/lat degrees).
 
     Polygon p is a regular k-gon (k = 3 + hash%6) centered at a
     low-discrepancy point, radius 0.5°..3.0°, rotated by a hashed angle.
-    If ``hot``, polygon 0 is replaced by a 20°-radius octagon at (0, 20) —
-    the hot-cell skew driver.
+    Polygon 0 is instead a 20°-radius octagon at (0, 20) — the hot-cell
+    skew driver.
     """
     out = []
     idx = np.arange(n_polys, dtype=np.uint64)
@@ -33,7 +33,7 @@ def make_polygons(n_polys: int, hot: bool = True) -> list[tuple[str, np.ndarray]
     h2 = splitmix64(idx + np.uint64(0x9E37))
     h3 = splitmix64(idx + np.uint64(0xC2B2))
     for p in range(n_polys):
-        if hot and p == 0:
+        if p == 0:
             k, radius, clon, clat, rot = 8, 20.0, 0.0, 20.0, 0.0
         else:
             k = 3 + int(h1[p] % np.uint64(6))
@@ -49,5 +49,5 @@ def make_polygons(n_polys: int, hot: bool = True) -> list[tuple[str, np.ndarray]
     return out
 
 
-def packed_polygons(n_polys: int, hot: bool = True) -> PackedPolygons:
-    return pack_polygons(make_polygons(n_polys, hot))
+def packed_polygons(n_polys: int) -> PackedPolygons:
+    return pack_polygons(make_polygons(n_polys))

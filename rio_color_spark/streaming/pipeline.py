@@ -43,8 +43,6 @@ def stream_color_correct(
     output_path: str,
     checkpoint_path: str,
     ops: str,
-    zoom: int = 12,
-    level: int = 12,
     available_now: bool = True,
 ):
     """Streaming index + fused color-correct → parquet sink.
@@ -58,7 +56,7 @@ def stream_color_correct(
     # fused index+color: ONE Python worker set per micro-batch task (the
     # with_spatial_index → color_correct chain is two, which collapses at
     # high local parallelism — see operators/color.index_and_color)
-    out = index_and_color(stream, ops, zoom=zoom, level=level)
+    out = index_and_color(stream, ops)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_path)

@@ -83,7 +83,7 @@ def run_all(spark, sf_dir: str, only=None, verbose=True) -> dict[str, list[str]]
 if __name__ == "__main__":
     from rio_color_spark.session import get_spark
 
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+    spark = get_spark("oracle-check")
     res = run_all(spark, "/root/testdata/sf0.01", set(sys.argv[1:]) or None)
     failures = {k: v for k, v in res.items() if v}
     print("\nFAILURES:", failures if failures else "none")

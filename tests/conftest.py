@@ -5,6 +5,6 @@ from rio_color_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("rio_color_spark-tests", shuffle_partitions=8)
+    s = get_spark("rio_color_spark-tests")
     yield s
     s.stop()

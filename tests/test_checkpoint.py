@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import rio_color_spark.pipeline as P
 from rio_color_spark.functions.pip import pack_polygons
 from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
 from rio_color_spark.sources.catalog import CheckpointedWriter
@@ -16,6 +17,21 @@ from rio_color_spark.sources.polygons import make_polygons
 
 def _commit(w, df, chunk, name="data"):
     return w.commit_chunk(chunk, {name: w.write_data(df, name, chunk)})
+
+
+def _crash_after(monkeypatch, n: int) -> None:
+    """Make the run die after committing exactly ``n`` chunks: the
+    pipeline's (n+1)-th chunk build raises before anything is written."""
+    real = P.index_and_color
+    calls = []
+
+    def crashing(*args, **kwargs):
+        calls.append(1)
+        if len(calls) > n:
+            raise RuntimeError(f"simulated crash after {n} chunks")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(P, "index_and_color", crashing)
 
 
 def test_chunked_write_and_lineage(spark, tmp_path):
@@ -33,15 +49,16 @@ def test_chunked_write_and_lineage(spark, tmp_path):
     assert lin.groupBy().sum("n_rows").collect()[0][0] == 40
 
 
-def test_pipeline_resume_equals_uninterrupted(spark, tmp_path):
+def test_pipeline_resume_equals_uninterrupted(spark, tmp_path, monkeypatch):
     """Kill the pipeline mid-run, resume, compare to an uninterrupted run."""
     n = 400
     images = images_df(spark, n)
     packed = pack_polygons(make_polygons(20))
 
     a_base = str(tmp_path / "a")
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_pipeline(spark, images, a_base, packed, n_chunks=4, fail_after=2)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        _crash_after(m, 2)
+        run_pipeline(spark, images, a_base, packed, n_chunks=4)
     assert sorted(CheckpointedWriter(a_base).committed()) == [0, 1]
 
     def part_files():
@@ -138,22 +155,23 @@ def test_writer_creation_options_applied(spark, tmp_path):
     assert w.read(spark, "data").count() == 10
 
 
-def test_resume_rejects_rewritten_source(spark, tmp_path):
+def test_resume_rejects_rewritten_source(spark, tmp_path, monkeypatch):
     """File-striped resume must fail fast when the source layout changed
     between runs (the manifest records each stripe's file-list hash)."""
     src = str(tmp_path / "src")
     images_df(spark, 200, partitions=4).write.mode("overwrite").parquet(src)
     packed = pack_polygons(make_polygons(5))
     base = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_pipeline(spark, src, base, packed, n_chunks=2, fail_after=1)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        _crash_after(m, 1)
+        run_pipeline(spark, src, base, packed, n_chunks=2)
     # rewrite/compact the source: same rows, different file layout
     images_df(spark, 200, partitions=7).write.mode("overwrite").parquet(src)
     with pytest.raises(RuntimeError, match="stripe changed"):
         run_pipeline(spark, src, base, packed, n_chunks=2)
 
 
-def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
+def test_pipeline_snapshot_sink_addfiles(spark, tmp_path, monkeypatch):
     """With snapshot_base, each chunk lands as a metadata-only add-files
     snapshot (zero data copy): per-chunk time travel, idempotent resume,
     and crash-window healing between the two ledgers."""
@@ -165,8 +183,9 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
     base = str(tmp_path / "out")
     snap_base = str(tmp_path / "snap")
 
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_pipeline(spark, images, base, packed, n_chunks=3, fail_after=2,
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        _crash_after(m, 2)
+        run_pipeline(spark, images, base, packed, n_chunks=3,
                      snapshot_base=snap_base)
     t = SnapshotTable(snap_base)
     snaps = t.metadata()["snapshots"]
@@ -200,6 +219,28 @@ def test_pipeline_snapshot_sink_addfiles(spark, tmp_path):
     assert [s["summary"]["pipeline_chunk"]
             for s in t2.metadata()["snapshots"]] == [0, 1, 2]
     assert t2.read(spark).count() == n
+
+
+def test_pipeline_payload_has_no_dictionary(spark, tmp_path):
+    """Chunk writes turn dictionary encoding off for the unique ``bytes``
+    payloads only; the small repeated columns such as ``fmt`` keep it."""
+    import pyarrow.parquet as pq
+
+    packed = pack_polygons(make_polygons(5))
+    w = run_pipeline(spark, images_df(spark, 60), str(tmp_path / "out"), packed,
+                     n_chunks=1)
+    path = w.committed()[0]["paths"]["images"]
+    files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        names = [meta.schema.column(i).name for i in range(meta.num_columns)]
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            col = {n: rg.column(i) for i, n in enumerate(names)}
+            assert not col["bytes"].has_dictionary_page, f
+            assert not any("DICTIONARY" in e for e in col["bytes"].encodings), f
+            assert col["fmt"].has_dictionary_page, f
 
 
 def _sink_chunk(spark, path: str, n: int = 40) -> str:

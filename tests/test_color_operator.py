@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from rio_color_spark.functions.utils import scale_dtype, to_math_type
-from rio_color_spark.operators.color import atmos, color_correct
+from rio_color_spark.operators.color import color_correct
 from rio_color_spark.plans.dsl import parse_operations
 from rio_color_spark.sources import codec
 from rio_color_spark.sources.images import generate_pandas, images_df
@@ -85,9 +85,10 @@ def test_alpha_passthrough_e2e(spark, images):
 
 
 def test_atmos_matches_local(spark, images):
-    from rio_color_spark.functions.operations import simple_atmo
+    from rio_color_spark.functions.operations import simple_atmo, simple_atmo_opstring
 
-    out = {r["image_id"]: r for r in atmos(images, 0.03, 10, 0.15).collect()}
+    ops = simple_atmo_opstring(0.03, 10, 0.15)
+    out = {r["image_id"]: r for r in color_correct(images, ops).collect()}
     src = generate_pandas(np.arange(0, 50))
     for _, row in src.iterrows():
         arr = codec.decode(row["bytes"], row["w"], row["h"], row["fmt"])

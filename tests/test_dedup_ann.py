@@ -218,3 +218,15 @@ def test_spread_accepts_spark_byte_strings(spark, tmp_path, mpb):
     finally:
         spark.conf.set(key, old)
     assert "Repartition" in out._jdf.queryExecution().logical().toString()
+
+
+def test_spread_sees_small_file_packing(spark, tmp_path):
+    """Spark packs many tiny files into a few scan splits (64 files plan 4
+    at ``local[4]``), so the file count alone says nothing: ``_spread``
+    still re-spreads the table across the shuffle parallelism."""
+    src = str(tmp_path / "tiny")
+    spark.range(640).repartition(64).write.parquet(src)
+    df = spark.read.parquet(src)
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(df.inputFiles()) == 64
+    assert DD._spread(df).rdd.getNumPartitions() >= target

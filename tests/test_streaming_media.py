@@ -23,7 +23,7 @@ def test_stream_color_correct_matches_batch(spark, tmp_path):
 
     got = spark.read.parquet(str(tmp_path / "out"))
     # batch twin of the streaming stage (same fused operator)
-    batch = index_and_color(spark.read.parquet(inp), OPS, zoom=12, level=12)
+    batch = index_and_color(spark.read.parquet(inp), OPS)
     assert got.count() == 120
     assert got.exceptAll(batch).isEmpty()
     assert batch.exceptAll(got).isEmpty()
