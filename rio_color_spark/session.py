@@ -4,13 +4,24 @@ Arrow is the JVM↔Python wire for every pixel operator, so the session pins
 the Arrow batch size (the analogue of the reference's 32×32 block windows —
 cli.py:81-83 — which bounded memory per work unit). Only settings that
 differ from Spark's defaults are written here (tests/test_session.py).
+
+Python workers of a local master share the driver's files, so they run
+the driver's own pyspark install: the worker daemon is
+``rio_color_spark._daemon``, which drops Spark's ``pyspark.zip``, py4j zip
+and jar from the workers' ``sys.path`` (:func:`worker_daemon` says when),
+and the package's parent directory leads the workers' ``PYTHONPATH`` so
+they import the package from any working directory
+(:func:`worker_pythonpath`). Cluster masters keep Spark's own daemon and
+path.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 
+import pyspark
 from pyspark.sql import SparkSession
 
 #: task retries for local-mode masters. Spark hard-codes maxTaskFailures=1
@@ -57,6 +68,44 @@ def shuffle_partitions(master: str, host_cores: int | None = None) -> int | None
     return 2 * int(cores)
 
 
+#: the directory that holds the ``rio_color_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_daemon(
+    master: str, pyspark_file: str, pyspark_version: str, jvm_version: str | None
+) -> str | None:
+    """``spark.python.daemon.module`` for a local master whose workers can
+    import the driver's pyspark (``pyspark_file``, a directory install, not
+    inside a zip) and find it the same version as the JVM. None otherwise,
+    which keeps Spark's default daemon and its archives on the workers'
+    path."""
+    if not _LOCAL.fullmatch(master) or pyspark_version != jvm_version:
+        return None
+    if not os.path.isdir(os.path.dirname(pyspark_file)):
+        return None
+    return "rio_color_spark._daemon"
+
+
+def worker_pythonpath(configured: str | None) -> str:
+    """Local workers' ``PYTHONPATH``: the package's parent directory first,
+    then every entry already ``configured``."""
+    rest = [p for p in (configured or "").split(os.pathsep) if p and p != _PACKAGE_PARENT]
+    return os.pathsep.join([_PACKAGE_PARENT, *rest])
+
+
+def _jvm_version() -> str | None:
+    """Spark version of the JVM a new session launches, read from the
+    spark-core jar name (``spark-core_2.13-4.1.2.jar``) under SPARK_HOME."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    for jar in glob.glob(os.path.join(_find_spark_home(), "jars", "spark-core_*.jar")):
+        m = re.fullmatch(r"spark-core_[^-]+-(.+)\.jar", os.path.basename(jar))
+        if m:
+            return m.group(1)
+    return None
+
+
 #: rows per Arrow batch crossing into Python workers. At the default 32×32
 #: uint8 RGB payload (~3 KiB/row) this bounds a batch to ~6 MiB, keeping
 #: per-task memory flat regardless of partition size (the color operator
@@ -64,8 +113,8 @@ def shuffle_partitions(master: str, host_cores: int | None = None) -> int | None
 ARROW_BATCH_ROWS = 2048
 
 #: every elementwise kernel is single-threaded by design — parallelism comes
-#: from Spark tasks. Pin the numeric libraries' thread pools so 32 python
-#: workers don't each spawn their own.
+#: from Spark tasks. Pin the numeric libraries' thread pools so each Python
+#: worker (one per task slot) doesn't spawn a pool as wide as the host.
 _WORKER_ENV_PINS = {
     "OMP_NUM_THREADS": "1",
     "OPENBLAS_NUM_THREADS": "1",
@@ -83,8 +132,22 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the
     env var is unset). On a real cluster, pass ``master=None`` and let
     spark-submit supply it. Shuffle partitions follow the master's cores
-    (:func:`shuffle_partitions`).
+    (:func:`shuffle_partitions`); a local master's Python workers run the
+    driver's pyspark (:func:`worker_daemon`, :func:`worker_pythonpath`).
     """
+    session = _builder(app_name, master).getOrCreate()
+    # every Python function ships the context's executorEnv map
+    # (``sc.environment``), and Spark puts its PYTHONPATH on the workers';
+    # updated here rather than in the builder so that a value configured
+    # elsewhere (spark-defaults.conf, spark-submit --conf) is kept
+    sc = session.sparkContext
+    if _LOCAL.fullmatch(sc.master):
+        sc.environment["PYTHONPATH"] = worker_pythonpath(sc.environment.get("PYTHONPATH"))
+    return session
+
+
+def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
+    """The builder :func:`get_spark` starts a session from."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
@@ -125,6 +188,9 @@ def get_spark(
     )
     if partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(partitions))
+    daemon = worker_daemon(master, pyspark.__file__, pyspark.__version__, _jvm_version())
+    if daemon is not None:
+        builder = builder.config("spark.python.daemon.module", daemon)
     # shuffle/spill scratch on tmpfs when available: the sandbox's single
     # virtio disk collapses under concurrent writers (a cluster's shuffle
     # goes to per-node local disks)
@@ -132,4 +198,4 @@ def get_spark(
         scratch = "/dev/shm/spark-local"
         os.makedirs(scratch, exist_ok=True)
         builder = builder.config("spark.local.dir", scratch)
-    return builder.getOrCreate()
+    return builder

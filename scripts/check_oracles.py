@@ -2,13 +2,14 @@
 compare row count + schema + sorted values exactly (the driver's value-hash
 requires exact equality after column-name sort)."""
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
