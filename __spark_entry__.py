@@ -8,6 +8,7 @@ documented in that module; integer/string outputs are exact.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import numpy as np
@@ -629,7 +630,11 @@ def _golden_frames_values() -> str:
     )
 
 
-REF_TIF = "/root/reference/tests/rgb8.tif"
+#: the in-repo parity raster (written by scripts/make_tiff_fixtures.py); the
+#: golden's ``rgb8:`` image ids come from its file stem
+REF_TIF = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "tests", "fixtures", "rgb8.tif"
+)
 
 
 def _png_gate_rows():
@@ -696,8 +701,9 @@ def _golden_png_values() -> str:
 
 
 def q_tiff_ingest(spark, sf_dir):
-    """Distributed GeoTIFF ingest (reference tests/rgb8.tif, the parity
-    raster): driver parses only the header, executors decode disjoint
+    """Distributed GeoTIFF ingest of the parity raster (tests/fixtures/rgb8.tif:
+    the reference's 438x500, 32x32-LZW-tile shape, written by the engine's
+    own encoder): driver parses only the header, executors decode disjoint
     LZW tile ranges into image-table rows (sources/tiff_bridge.py)."""
     from rio_color_spark.sources import tiff_bridge as TB
 
@@ -711,8 +717,11 @@ def q_tiff_ingest(spark, sf_dir):
 def _golden_tiff_values() -> str:
     """Golden twin for tiff_ingest: whole-raster read + plain NumPy grid
     slicing on the driver — none of the Spark bridge's chunk-range /
-    mapInPandas / per-tile-decode plumbing is shared (the codec itself is
-    pinned against the libtiff-written file by tests/test_tiff.py)."""
+    mapInPandas / per-tile-decode plumbing is shared. The raster is
+    engine-written, so this pins the bridge against the codec, not the
+    codec against libtiff; that interop is checked only by
+    tests/test_tiff.py::test_lzw_matches_libtiff_ratio, where the
+    reference's libtiff-written rasters exist."""
     import hashlib
 
     from rio_color_spark.sources.tiff import read_tiff

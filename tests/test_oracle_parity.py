@@ -2,9 +2,10 @@
 exactly at sf0.001 (the full sf0.01 sweep runs via scripts/check_oracles.py
 and the driver itself)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.check_oracles import run_all
 
