@@ -7,13 +7,13 @@ classic little-endian TIFF. rgba8 carries an unassociated alpha band
 GeoTIFF/GDAL tags 33550, 33922, 34735, 34737 and 42112, so tag
 preservation is checked on real payloads.
 
-Pixel content is smooth and photo-like (products of low-frequency sines
-drawn from a fixed seed), with no per-pixel noise: the lossy JPEG exports
-are held to PSNR >= 40 dB, which real raster content clears at the
-default quality and independent per-pixel noise does not.
+Pixel content is smooth and photo-like: products of low-frequency sines
+drawn from a fixed seed. ``make_raster`` is also the recipe of the rasters
+tests/test_tiff.py writes at test time, which add per-pixel noise.
 
 The files are written by the engine's own encoder (``write_tiff``) and are
-deterministic: running this script again reproduces them byte for byte.
+deterministic: running this script again reproduces them byte for byte
+(tests/test_tiff.py::test_fixture_script_reproduces_fixtures checks it).
 
     python scripts/make_tiff_fixtures.py [OUT_DIR]   # default tests/fixtures
 """
@@ -32,8 +32,10 @@ sys.path.insert(0, ROOT)
 from rio_color_spark.sources import tiff as T  # noqa: E402
 
 WIDTH, HEIGHT = 438, 500
-#: name → (bands, dtype, seed)
-KINDS = {"rgb8": (3, "uint8", 0), "rgb16": (3, "uint16", 1), "rgba8": (4, "uint8", 2)}
+#: kind → (bands, dtype)
+SHAPES = {"rgb8": (3, "uint8"), "rgba8": (4, "uint8"), "rgb16": (3, "uint16")}
+#: kind → seed of the committed fixture
+SEEDS = {"rgb8": 0, "rgb16": 1, "rgba8": 2}
 
 CITATION = b"WGS 84 / Pseudo-Mercator|"
 GDAL_METADATA = (
@@ -68,30 +70,40 @@ def geo_tags() -> dict[int, tuple[int, int, bytes]]:
     }
 
 
-def make_raster(bands: int, dtype: str, seed: int) -> np.ndarray:
+def make_raster(kind: str, seed: int, noise: float = 0.0) -> np.ndarray:
+    """A (bands, 500, 438) raster of smooth sines; ``noise`` > 0 adds
+    independent uniform per-pixel noise of that amplitude to each color band."""
+    bands, dtype = SHAPES[kind]
     hi = np.iinfo(dtype).max
     rng = np.random.default_rng(seed)
     yy, xx = np.mgrid[0:HEIGHT, 0:WIDTH]
     arr = np.empty((bands, HEIGHT, WIDTH), dtype=dtype)
     for b in range(3):
         fx, fy = rng.uniform(0.002, 0.03, 2)
-        smooth = 0.5 + 0.4 * np.sin(xx * fx + b) * np.cos(yy * fy)
-        arr[b] = (np.clip(smooth, 0, 1) * hi).astype(dtype)
+        level = 0.5 + 0.4 * np.sin(xx * fx + b) * np.cos(yy * fy)
+        if noise:
+            level = level + rng.uniform(-noise, noise, (HEIGHT, WIDTH))
+        arr[b] = (np.clip(level, 0, 1) * hi).astype(dtype)
     if bands == 4:  # opaque, with one fully transparent block
         arr[3] = hi
         arr[3, 100:180, 50:300] = 0
     return arr
 
 
+def profile(kind: str, geo: dict | None = None) -> T.TiffProfile:
+    """The reference layout for ``kind``: 32x32 LZW tiles, predictor 1, chunky."""
+    bands, dtype = SHAPES[kind]
+    return T.TiffProfile(
+        width=WIDTH, height=HEIGHT, count=bands, dtype=dtype,
+        extrasamples=(2,) if bands == 4 else (), geo=geo or {},
+    )
+
+
 def main(out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
-    for name, (bands, dtype, seed) in KINDS.items():
-        prof = T.TiffProfile(
-            width=WIDTH, height=HEIGHT, count=bands, dtype=dtype,
-            extrasamples=(2,) if bands == 4 else (), geo=geo_tags(),
-        )
-        path = os.path.join(out_dir, f"{name}.tif")
-        T.write_tiff(path, make_raster(bands, dtype, seed), prof)
+    for kind, seed in SEEDS.items():
+        path = os.path.join(out_dir, f"{kind}.tif")
+        T.write_tiff(path, make_raster(kind, seed), profile(kind, geo_tags()))
         print(f"{path}: {os.path.getsize(path)} bytes")
 
 
