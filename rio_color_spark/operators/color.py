@@ -267,8 +267,8 @@ def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
     image — with the same ray-cast kernel the standalone
     operators/spatial_join path uses, for free inside the same crossing
     (the polygon set rides to executors in the task closure; it is a few
-    KB of packed edges). Downstream, assignments are a pure JVM
-    ``explode(poly_ids)`` projection — no second Python stage.
+    KB of packed edges). Tile assignments are the read-time JVM view
+    ``pipeline.assignments`` (``explode(poly_ids)``), never written.
     """
     from rio_color_spark.functions import cells as cellmod
     from rio_color_spark.functions import tiles as tilemod

@@ -3,15 +3,15 @@
     read images → spatial index (lon/lat, XYZ tiles, cells)
         → PIP assignment (fused, pixel-free poly_ids column)
         → fused color-correct (single mapInPandas)
-        → chunked checkpointed write (images + assignments + lineage)
+        → chunked checkpointed write (images + lineage)
 
 Plan properties at scale:
 
 - **exactly ONE Python crossing per image, ever**: decode, color chain,
   tile/cell encode, and the PIP ray cast all run in the same
-  ``index_and_color`` batch loop (operators/color.py); assignments are a
-  JVM-side ``explode(poly_ids)`` over the already-written chunk output
-  with ``bytes`` pruned at the parquet scan
+  ``index_and_color`` batch loop (operators/color.py); ONE write per
+  chunk: tile assignments are the view :func:`assignments`, a JVM-side
+  ``explode(poly_ids)`` over the committed images, ``bytes`` pruned
 - **no source re-scan**: when the input is a path, chunks are deterministic
   stripes of the source's data FILES (the Parquet-facade analogue of
   Iceberg manifest-level split planning) — chunk k's job reads ONLY chunk
@@ -27,8 +27,11 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from rio_color_spark.functions.pip import PackedPolygons
 from rio_color_spark.operators.color import index_and_color
@@ -90,9 +93,6 @@ def _stripe_schema(spark: SparkSession, first_file: str):
     local = first_file.removeprefix("file://")
     if os.path.isfile(local):
         try:
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
             return from_arrow_schema(pq.read_schema(local))
         except Exception:
             pass  # unusual footer types: let Spark's own inference decide
@@ -166,7 +166,9 @@ def run_pipeline(
     n_chunks: int = 4,
     snapshot_base: str | None = None,
 ) -> CheckpointedWriter:
-    """Run (or resume) the pipeline; returns the writer for readback.
+    """Run (or resume) the pipeline; returns the writer for readback of
+    the one data output per chunk, ``images`` (tile assignments are the
+    :func:`assignments` view over it; the chunk records count both).
 
     ``images`` may be a parquet path (preferred: file-stripe chunking, one
     scan per input byte) or a DataFrame. Every chunk is written with
@@ -211,29 +213,29 @@ def run_pipeline(
         if k in done:
             continue
         part = readers[k]()
-        # job 1: index + PIP + color fused — exactly ONE Python worker set
-        # per task (see operators/color.index_and_color)
+        # the chunk's one job: index + PIP + color fused — exactly ONE
+        # Python worker set per task (see operators/color.index_and_color)
         colored = index_and_color(part, ops, packed=packed)
-        paths = {"images": writer.write_data(colored, "images", k)}
-
-        # job 2: assignments from the WRITTEN output — bytes pruned at the
-        # scan, poly_ids exploded JVM-side; zero Python stages. The written
-        # schema is colored.schema — passing it skips footer inference
-        # (another fixed driver-side cost that taxes the N-vs-4N ratio)
-        assignments = spark.read.schema(colored.schema).parquet(paths["images"]).select(
-            "image_id",
-            F.explode("poly_ids").alias("poly_id"),
-            "cell_id",
-            "tile_xyz",
-        )
-        paths["assignments"] = writer.write_data(assignments, "assignments", k)
-
+        path = writer.write_data(colored, "images", k)
+        # rows of the assignments view: summed poly_ids lengths, read on
+        # the driver as that one column (no Spark job)
+        poly_ids = pq.read_table(path, columns=["poly_ids"])["poly_ids"]
+        n_assign = pc.sum(pc.list_value_length(poly_ids)).as_py() or 0
         writer.commit_chunk(
-            k, paths, extra={"stripe_md5": fps[k]} if fps[k] else None
+            k, {"images": path}, extra={"stripe_md5": fps[k]} if fps[k] else None,
+            derived_counts={"assignments": n_assign},
         )
         if snap:
-            snap.commit_chunk(k, paths["images"], fps[k] or None)
+            snap.commit_chunk(k, path, fps[k] or None)
     return writer
+
+
+def assignments(images: DataFrame) -> DataFrame:
+    """Tile assignments, a view over committed images such as
+    ``writer.read(spark, "images")``: one row per (image, containing polygon)."""
+    return images.select(
+        "image_id", F.explode("poly_ids").alias("poly_id"), "cell_id", "tile_xyz"
+    )
 
 
 class _SnapshotSink:
@@ -250,9 +252,6 @@ class _SnapshotSink:
         needs no active SparkSession and works from any thread). The handle
         is kept only once open or create succeeded, so a failed create is
         retried on the next call."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         from rio_color_spark.sources.snapshots import SnapshotTable
 
         if self._tbl is None:

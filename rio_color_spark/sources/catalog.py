@@ -73,21 +73,15 @@ class CheckpointedWriter:
 
     def lineage_df(self, spark: SparkSession) -> DataFrame:
         """The manifest as a queryable lineage table: one row per
-        (chunk, output name) with row count, path, lineage id, commit time
-        — the Parquet-facade analogue of Iceberg's metadata tables."""
-        rows = []
-        for rec in self.committed().values():
-            for name, path in rec["paths"].items():
-                rows.append(
-                    (
-                        int(rec["chunk"]),
-                        name,
-                        path,
-                        int(rec["counts"][name]),
-                        rec["lineage_id"],
-                        float(rec["committed_at"]),
-                    )
-                )
+        (chunk, counted output) with row count, path (null for a derived
+        count), lineage id, commit time — the Parquet-facade analogue of
+        Iceberg's metadata tables."""
+        rows = [
+            (int(rec["chunk"]), name, rec["paths"].get(name), int(n),
+             rec["lineage_id"], float(rec["committed_at"]))
+            for rec in self.committed().values()
+            for name, n in rec["counts"].items()
+        ]
         return spark.createDataFrame(
             rows,
             "chunk int, name string, path string, n_rows long, "
@@ -121,10 +115,14 @@ class CheckpointedWriter:
         return spark.read.parquet(path).count()
 
     def commit_chunk(
-        self, chunk: int, paths: dict[str, str], extra: dict | None = None
+        self, chunk: int, paths: dict[str, str], extra: dict | None = None,
+        derived_counts: dict[str, int] | None = None,
     ) -> dict:
-        """Count the written outputs (parquet footers) and commit atomically."""
+        """Count the written outputs (parquet footers) and commit atomically.
+        ``derived_counts`` (rows of views over the outputs, which have no
+        path) are recorded in ``counts`` as given."""
         counts = {name: self._count_rows(p) for name, p in paths.items()}
+        counts.update(derived_counts or {})
         record = {
             "chunk": chunk,
             "counts": counts,

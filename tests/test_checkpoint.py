@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 import rio_color_spark.pipeline as P
 from rio_color_spark.functions.pip import pack_polygons
-from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
+from rio_color_spark.pipeline import FLAGSHIP_OPS, assignments, run_pipeline
 from rio_color_spark.sources.catalog import CheckpointedWriter
 from rio_color_spark.sources.images import images_df
 from rio_color_spark.sources.polygons import make_polygons
@@ -77,10 +77,12 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path, monkeypatch):
     b_base = str(tmp_path / "b")
     run_pipeline(spark, images, b_base, packed, n_chunks=4)  # uninterrupted
 
+    # one data output per chunk: assignments are a view, not a write
+    assert sorted(os.listdir(a_base)) == ["_manifest", "images"]
+
     wa, wb = CheckpointedWriter(a_base), CheckpointedWriter(b_base)
-    for name in ("images", "assignments"):
-        da = wa.read(spark, name)
-        db = wb.read(spark, name)
+    ia, ib = wa.read(spark, "images"), wb.read(spark, "images")
+    for da, db in ((ia, ib), (assignments(ia), assignments(ib))):
         assert da.count() == db.count()
         assert da.exceptAll(db).isEmpty()
         assert db.exceptAll(da).isEmpty()
@@ -118,7 +120,10 @@ def test_pipeline_file_chunking_single_scan(spark, tmp_path):
 def test_fused_pip_matches_standalone_join(spark, tmp_path):
     """index_and_color(packed=...)'s poly_ids == the standalone
     point_in_polygon_join's pair set (bbox candidates vs tile-cover
-    candidates, same ray-cast kernel)."""
+    candidates, same ray-cast kernel); the pipeline's ``assignments`` view
+    over its committed images is set-equal to that join on
+    (image_id, poly_id, cell_id, tile_xyz), and the chunk records and the
+    lineage table count its rows."""
     from rio_color_spark.operators.color import index_and_color
     from rio_color_spark.operators.spatial import with_spatial_index
     from rio_color_spark.operators.spatial_join import point_in_polygon_join
@@ -133,14 +138,23 @@ def test_fused_pip_matches_standalone_join(spark, tmp_path):
         for pid in r["poly_ids"]
     }
     idx = with_spatial_index(images.drop("bytes"), zoom=12, level=12)
-    want = {
-        (r["image_id"], r["poly_id"])
-        for r in point_in_polygon_join(idx, packed, zoom=12)
-        .select("image_id", "poly_id")
-        .collect()
+    keys = ["image_id", "poly_id", "cell_id", "tile_xyz"]
+    joined = {
+        tuple(r) for r in point_in_polygon_join(idx, packed, zoom=12)
+        .select(*keys).collect()
     }
+    want = {(image_id, poly_id) for image_id, poly_id, _, _ in joined}
     assert got == want
     assert len(got) > 0
+
+    w = run_pipeline(spark, images, str(tmp_path / "out"), packed, n_chunks=3)
+    view = assignments(w.read(spark, "images")).select(*keys).collect()
+    assert len(view) == len(joined)  # no duplicate rows
+    assert {tuple(r) for r in view} == joined
+    assert sum(r["counts"]["assignments"] for r in w.committed().values()) == len(view)
+    lin = w.lineage_df(spark).filter("name = 'assignments'")
+    assert lin.filter("path IS NULL").count() == lin.count() == 3
+    assert lin.groupBy().sum("n_rows").collect()[0][0] == len(view)
 
 
 def test_writer_creation_options_applied(spark, tmp_path):

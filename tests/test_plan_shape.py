@@ -1,7 +1,8 @@
 """Physical-plan guards for the pipeline's scale properties:
 
-- the assignments read-back prunes ``bytes`` at the parquet scan (the
-  60-byte metadata path never pays for pixel payloads)
+- the ``assignments`` view over the committed images prunes ``bytes`` at
+  the parquet scan (the 60-byte metadata path never pays for pixel
+  payloads)
 - the PIP join broadcasts the polygon cover — the fact side is never
   shuffled (no Exchange between the fact scan and the join)
 - chunk scans read only their own files (pruning at planning time)
@@ -18,7 +19,7 @@ import pytest
 from rio_color_spark.functions.pip import pack_polygons
 from rio_color_spark.operators.spatial import with_spatial_index
 from rio_color_spark.operators.spatial_join import point_in_polygon_join
-from rio_color_spark.pipeline import FLAGSHIP_OPS, run_pipeline
+from rio_color_spark.pipeline import FLAGSHIP_OPS, assignments, run_pipeline
 from rio_color_spark.sources.images import images_df
 from rio_color_spark.sources.polygons import make_polygons
 
@@ -28,17 +29,15 @@ def _plan(df) -> str:
 
 
 def test_assignments_scan_prunes_bytes(spark, tmp_path):
-    """The written chunk parquet is re-read for assignments with bytes
-    pruned: ReadSchema of that scan must not contain the pixel column."""
+    """The engine's assignments view over the committed images reads them
+    with bytes pruned: ReadSchema of that scan must not contain the pixel
+    column."""
     src = str(tmp_path / "src")
     images_df(spark, 200).write.parquet(src)
     packed = pack_polygons(make_polygons(10))
     w = run_pipeline(spark, src, str(tmp_path / "out"), packed, n_chunks=2)
 
-    meta = spark.read.parquet(w.committed()[0]["paths"]["images"]).select(
-        "image_id", "lon", "lat", "tile_xyz", "cell_id", "poly_ids"
-    )
-    plan = _plan(meta)
+    plan = _plan(assignments(w.read(spark, "images")))
     assert "ReadSchema" in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "bytes" not in read_schema
