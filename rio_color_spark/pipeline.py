@@ -20,12 +20,18 @@ Plan properties at scale:
   chunking, which re-scans the (in-memory/small) source per chunk.
 - the ONLY wide dependency in the whole job is the parquet write's file
   layout; everything else is narrow map work
+- **chunks run concurrently, commit in order**: each chunk's write is its
+  own Spark job, submitted from a thread pool so that a chunk's few tasks
+  do not leave the other cores idle; both ledgers commit on the calling
+  thread in chunk order, and a failed chunk lets the others finish and
+  commit before its error is raised (see :func:`run_pipeline`)
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -174,6 +180,15 @@ def run_pipeline(
     scan per input byte) or a DataFrame. Every chunk is written with
     :data:`~rio_color_spark.sources.images.PAYLOAD_WRITE_OPTIONS`.
 
+    Chunks not yet committed run concurrently: their plans are built on
+    the calling thread in chunk order, and their writes run as concurrent
+    Spark jobs from ``min(pending chunks, defaultParallelism)`` threads
+    (serial at ``local[1]``). Each chunk commits on the calling thread, in
+    chunk order, after its write. If a chunk fails, the run still waits
+    for every submitted chunk and commits those that succeeded, then
+    raises the first error by chunk; a planning error stops further chunks
+    from being submitted. A resume then runs only the uncommitted chunks.
+
     ``snapshot_base`` additionally maintains a
     :class:`~rio_color_spark.sources.snapshots.SnapshotTable` over the
     colored-images output: each chunk's already-written parquet files are
@@ -209,25 +224,46 @@ def run_pipeline(
             if path:
                 snap.commit_chunk(k, path, rec.get("stripe_md5"))
 
-    for k in range(n_chunks):
-        if k in done:
-            continue
-        part = readers[k]()
-        # the chunk's one job: index + PIP + color fused — exactly ONE
-        # Python worker set per task (see operators/color.index_and_color)
-        colored = index_and_color(part, ops, packed=packed)
-        path = writer.write_data(colored, "images", k)
-        # rows of the assignments view: summed poly_ids lengths, read on
-        # the driver as that one column (no Spark job)
-        poly_ids = pq.read_table(path, columns=["poly_ids"])["poly_ids"]
-        n_assign = pc.sum(pc.list_value_length(poly_ids)).as_py() or 0
-        writer.commit_chunk(
-            k, {"images": path}, extra={"stripe_md5": fps[k]} if fps[k] else None,
-            derived_counts={"assignments": n_assign},
-        )
-        if snap:
-            snap.commit_chunk(k, path, fps[k] or None)
+    pending = [k for k in range(n_chunks) if k not in done]
+    errors: dict[int, Exception] = {}
+    workers = max(1, min(len(pending), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(workers, thread_name_prefix="chunk") as pool:
+        futures = {}
+        for k in pending:
+            try:
+                part = readers[k]()
+                # the chunk's one job: index + PIP + color fused — exactly ONE
+                # Python worker set per task (see operators/color.index_and_color)
+                colored = index_and_color(part, ops, packed=packed)
+            except Exception as e:  # plan no further chunks; drain the rest
+                errors[k] = e
+                break
+            futures[k] = pool.submit(_write_chunk, writer, colored, k)
+        # commits: this thread, chunk order, every chunk whose write succeeded
+        for k, fut in futures.items():
+            try:
+                path, n_assign = fut.result()
+                writer.commit_chunk(
+                    k, {"images": path},
+                    extra={"stripe_md5": fps[k]} if fps[k] else None,
+                    derived_counts={"assignments": n_assign},
+                )
+                if snap:
+                    snap.commit_chunk(k, path, fps[k] or None)
+            except Exception as e:
+                errors[k] = e
+    if errors:
+        raise errors[min(errors)]
     return writer
+
+
+def _write_chunk(writer: CheckpointedWriter, colored: DataFrame, k: int):
+    """(path, assignment rows) of chunk ``k``'s one write; runs on a pool
+    thread. The rows of the assignments view are the summed ``poly_ids``
+    lengths, read on the driver as that one column (no Spark job)."""
+    path = writer.write_data(colored, "images", k)
+    poly_ids = pq.read_table(path, columns=["poly_ids"])["poly_ids"]
+    return path, pc.sum(pc.list_value_length(poly_ids)).as_py() or 0
 
 
 def assignments(images: DataFrame) -> DataFrame:

@@ -8,6 +8,9 @@ already atomic, and the lineage table is a regular Iceberg table). This
 container has no Iceberg jars (SURVEY.md §7), so the facade provides the
 same contract over plain Parquet:
 
+- the base is a local directory (a ``file:`` URI is taken as its path;
+  any other ``scheme://`` base raises ``ValueError``), so the manifest and
+  the data always share one directory
 - each named output lands under ``<base>/<name>/chunk=<k>/``
   (:meth:`CheckpointedWriter.write_data`; overwrite semantics, so a re-run
   of a half-written chunk is idempotent)
@@ -31,6 +34,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,6 +47,12 @@ class CheckpointedWriter:
         data write (the facade analogue of GDAL creation options /
         Iceberg table properties — reference cli.py:85 ``--co``), e.g.
         ``{"compression": "zstd"}``."""
+        if base_path.startswith("file:"):
+            base_path = unquote(urlsplit(base_path).path)
+        elif "://" in base_path:
+            # the manifest is written with local file calls: a remote base
+            # would split it from the data Spark writes
+            raise ValueError(f"CheckpointedWriter needs a local base: {base_path!r}")
         self.base = base_path.rstrip("/")
         self.write_options = dict(write_options or {})
         self.manifest_dir = os.path.join(self.base, "_manifest")
@@ -98,21 +108,15 @@ class CheckpointedWriter:
 
     @staticmethod
     def _count_rows(path: str) -> int:
-        """Row count of a written parquet dir from footers only.
+        """Row count of a written parquet dir from its footers, read on the
+        driver via pyarrow (milliseconds, no Spark job)."""
+        import pyarrow.parquet as pq
 
-        Local paths read footers driver-side via pyarrow (milliseconds, no
-        Spark job); non-local paths fall back to a metadata-only Spark count.
-        """
-        if os.path.isdir(path):
-            import pyarrow.parquet as pq
-
-            return sum(
-                pq.read_metadata(os.path.join(path, f)).num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        spark = SparkSession.getActiveSession()
-        return spark.read.parquet(path).count()
+        return sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
 
     def commit_chunk(
         self, chunk: int, paths: dict[str, str], extra: dict | None = None,

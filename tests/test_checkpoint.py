@@ -21,7 +21,8 @@ def _commit(w, df, chunk, name="data"):
 
 def _crash_after(monkeypatch, n: int) -> None:
     """Make the run die after committing exactly ``n`` chunks: the
-    pipeline's (n+1)-th chunk build raises before anything is written."""
+    pipeline's (n+1)-th chunk plan raises, so no later chunk is submitted;
+    the run still commits the ``n`` chunks already in flight, then raises."""
     real = P.index_and_color
     calls = []
 
@@ -93,6 +94,92 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path, monkeypatch):
     assert len(out) == n
     for r in out:
         assert r["caption"] == src[r["image_id"]]
+
+
+def test_pipeline_failed_chunk_keeps_later_commits(spark, tmp_path, monkeypatch):
+    """A chunk whose write fails does not abandon the chunks around it: the
+    run commits every other chunk, raises the failure, and a resume
+    rewrites only the failed chunk and equals an uninterrupted run."""
+    images = images_df(spark, 400)
+    packed = pack_polygons(make_polygons(20))
+    a_base = str(tmp_path / "a")
+    real = CheckpointedWriter.write_data
+
+    def failing(self, df, name, chunk):
+        if chunk == 1:
+            raise RuntimeError("simulated write failure in chunk 1")
+        return real(self, df, name, chunk)
+
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="chunk 1"):
+        m.setattr(CheckpointedWriter, "write_data", failing)
+        run_pipeline(spark, images, a_base, packed, n_chunks=4)
+    assert sorted(CheckpointedWriter(a_base).committed()) == [0, 2, 3]
+
+    def part_files():
+        root = os.path.join(a_base, "images")
+        return {d: sorted(os.listdir(os.path.join(root, d))) for d in os.listdir(root)}
+
+    before = part_files()
+    assert sorted(before) == ["chunk=0", "chunk=2", "chunk=3"]
+    run_pipeline(spark, images, a_base, packed, n_chunks=4)  # resume
+    after = part_files()
+    assert sorted(after) == ["chunk=0", "chunk=1", "chunk=2", "chunk=3"]
+    assert {d: after[d] for d in before} == before
+    assert sorted(CheckpointedWriter(a_base).committed()) == [0, 1, 2, 3]
+
+    b_base = str(tmp_path / "b")
+    run_pipeline(spark, images, b_base, packed, n_chunks=4)  # uninterrupted
+    ia = CheckpointedWriter(a_base).read(spark, "images")
+    ib = CheckpointedWriter(b_base).read(spark, "images")
+    for da, db in ((ia, ib), (assignments(ia), assignments(ib))):
+        assert da.count() == db.count()
+        assert da.exceptAll(db).isEmpty()
+        assert db.exceptAll(da).isEmpty()
+
+
+def test_pipeline_chunks_run_concurrently(spark, tmp_path, monkeypatch):
+    """Two chunk writes are in flight at once: each waits at a two-party
+    barrier before writing, which only a concurrent run can pass. Both
+    commits still run on the calling thread, in chunk order."""
+    import threading
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs at least 2 cores")
+    barrier = threading.Barrier(2, timeout=60)
+    real_write = CheckpointedWriter.write_data
+    real_commit = CheckpointedWriter.commit_chunk
+    commits = []
+
+    def meeting(self, df, name, chunk):
+        barrier.wait()
+        return real_write(self, df, name, chunk)
+
+    def recording(self, chunk, *a, **k):
+        commits.append((chunk, threading.current_thread() is threading.main_thread()))
+        return real_commit(self, chunk, *a, **k)
+
+    monkeypatch.setattr(CheckpointedWriter, "write_data", meeting)
+    monkeypatch.setattr(CheckpointedWriter, "commit_chunk", recording)
+    base = str(tmp_path / "out")
+    w = run_pipeline(spark, images_df(spark, 40), base,
+                     pack_polygons(make_polygons(5)), n_chunks=2)
+    assert sorted(w.committed()) == [0, 1]
+    assert commits == [(0, True), (1, True)]
+    assert w.read(spark, "images").count() == 40
+
+
+def test_writer_base_is_local(spark, tmp_path, monkeypatch):
+    """A ``file://`` base keeps its manifest beside its data; a remote
+    ``scheme://`` base is refused before anything is created."""
+    monkeypatch.chdir(tmp_path)
+    out = tmp_path / "out"
+    w = CheckpointedWriter(out.as_uri())
+    _commit(w, spark.range(5), 0)
+    assert sorted(os.listdir(out)) == ["_manifest", "data"]
+    assert w.read(spark, "data").count() == 5
+    with pytest.raises(ValueError, match="local base"):
+        CheckpointedWriter("s3://b/x")
+    assert os.listdir(tmp_path) == ["out"]
 
 
 def test_pipeline_file_chunking_single_scan(spark, tmp_path):
