@@ -13,6 +13,9 @@ and the package's parent directory leads the workers' ``PYTHONPATH`` so
 they import the package from any working directory
 (:func:`worker_pythonpath`). Cluster masters keep Spark's own daemon and
 path.
+
+A local master's driver JVM runs C1-compiled code only
+(:data:`LOCAL_DRIVER_JAVA_OPTIONS`).
 """
 
 from __future__ import annotations
@@ -112,6 +115,18 @@ def _jvm_version() -> str | None:
 #: further cache-blocks the math inside each batch — see operators/color.py).
 ARROW_BATCH_ROWS = 2048
 
+#: default JVM options of a local master's driver, which also runs every
+#: task. C1 only: with C2, compilation took 1-4 CPU seconds per one-second
+#: pipeline job over a session's first ~30 s, on cores the tasks and Python
+#: workers already filled, so each job's time tracked the warm-up (perfbench
+#: ``pipeline`` repetitions fell ~35% across a 25 s window; with C1 only,
+#: ~10%, from a faster start). The kernels run in Python workers
+#: and native codecs; the JVM's share of a task is data movement, where
+#: C2's peak code gains little. Passed as ``spark.driver.defaultJavaOptions``
+#: so that a configured ``spark.driver.extraJavaOptions`` follows and can
+#: override it.
+LOCAL_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+
 #: every elementwise kernel is single-threaded by design — parallelism comes
 #: from Spark tasks. Pin the numeric libraries' thread pools so each Python
 #: worker (one per task slot) doesn't spawn a pool as wide as the host.
@@ -188,6 +203,8 @@ def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
     )
     if partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(partitions))
+    if _LOCAL.fullmatch(master):
+        builder = builder.config("spark.driver.defaultJavaOptions", LOCAL_DRIVER_JAVA_OPTIONS)
     daemon = worker_daemon(master, pyspark.__file__, pyspark.__version__, _jvm_version())
     if daemon is not None:
         builder = builder.config("spark.python.daemon.module", daemon)

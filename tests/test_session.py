@@ -13,6 +13,7 @@ import pyspark
 import pytest
 
 from rio_color_spark.session import (
+    LOCAL_DRIVER_JAVA_OPTIONS,
     _PACKAGE_PARENT,
     _builder,
     _jvm_version,
@@ -89,6 +90,17 @@ def test_get_spark_restates_no_sql_default(spark):
         if chosen.getConf(entry) == internal.SQLConf().getConf(entry):
             restated.append(key)
     assert restated == []
+
+
+def test_local_driver_jvm_runs_c1_only(spark):
+    """A local master's driver JVM starts with the C1-only JIT option (it
+    also runs every task); the builder passes it as Spark's default driver
+    options, so configured extra options still follow it."""
+    assert spark.sparkContext.master.startswith("local")
+    options = _builder("jit", master="local[4]")._options
+    assert options["spark.driver.defaultJavaOptions"] == LOCAL_DRIVER_JAVA_OPTIONS
+    runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert LOCAL_DRIVER_JAVA_OPTIONS in list(runtime.getInputArguments())
 
 
 _DIRECTORY_INSTALL = pyspark.__file__
