@@ -619,10 +619,10 @@ class TiffChunkWriter:
     """Streaming single-writer container assembly: pre-compressed chunk
     payloads arrive in ANY order via :meth:`add`; pixel data is appended
     immediately and the IFD is written at the file TAIL by :meth:`close`
-    (the header's IFD pointer is patched last). Driver memory is bounded
-    by O(one payload) + O(8 bytes × n_chunks) of offset bookkeeping —
-    this is what lets the Spark export path stream a raster of any size
-    through ``toLocalIterator`` instead of ``collect()``.
+    (the header's IFD pointer is patched last). The writer holds
+    O(one payload) + O(8 bytes × n_chunks) of offset bookkeeping, so the
+    Spark sink can add a raster of any size one collected wave of
+    partitions at a time instead of collecting the whole raster.
 
     Classic TIFF (version 42) offsets are 32-bit; :meth:`close` raises if
     the file outgrew 4 GiB — write with ``prof.bigtiff=True`` (or

@@ -21,7 +21,9 @@ fixtures the same JPEG exports check only what lands in the container.
 
 from __future__ import annotations
 
+import contextlib
 import filecmp
+import math
 import os
 import subprocess
 import sys
@@ -475,25 +477,145 @@ def test_color_correct_tiff_equals_chain_replay(spark, rasters, tmp_path, kind, 
     assert os.listdir(tmp_path) == ["out.tif"]
 
 
+MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+
+
+@contextlib.contextmanager
+def _max_partition_bytes(spark, value: int):
+    """Run the block with ``spark.sql.files.maxPartitionBytes`` at ``value``."""
+    old = spark.conf.get(MAX_PARTITION_BYTES, None)
+    spark.conf.set(MAX_PARTITION_BYTES, str(value))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(MAX_PARTITION_BYTES)
+        else:
+            spark.conf.set(MAX_PARTITION_BYTES, old)
+
+
+def _multi_wave_split(spark, arr: np.ndarray) -> int:
+    """A maxPartitionBytes that cuts ``arr`` into more than two waves."""
+    return arr.nbytes // (2 * spark.sparkContext.defaultParallelism + 1)
+
+
+def _jobs_of(spark, group: str, fn) -> list:
+    """Run ``fn`` under job group ``group``; the group's jobs in id order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _result_tasks(spark, job_id: int) -> int:
+    """Tasks of a job's result stage (its highest stage id)."""
+    st = spark.sparkContext.statusTracker()
+    return st.getStageInfo(max(st.getJobInfo(job_id).stageIds)).numTasks
+
+
+def _one_wave_tif(spark, src: str, dst: str) -> None:
+    """``color_correct_tiff``'s plan collected in ONE job, payloads added
+    in partition order: the container a single wave would write."""
+    from rio_color_spark.operators.color import color_correct
+
+    df, prof = TB.tiff_rows(spark, src)
+    p = TB._profile_for_fmt(prof, codec.fmt_for_dtype(prof.np_dtype, prof.count))
+    enc = TB._encode_same_grid(color_correct(df, OPS), p)
+    with T.TiffChunkWriter(dst, p) as writer:
+        for row in enc.collect():
+            writer.add(row["index"], bytes(row["payload"]))
+
+
+def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
+    """A raster of at most ``defaultParallelism`` partitions runs the
+    repartition's shuffle-map job plus ONE collect wave, not one job per
+    partition."""
+    src, _ = rasters["rgb8"]
+    par = spark.sparkContext.defaultParallelism
+    n_parts = TB.tiff_rows(spark, src)[0].rdd.getNumPartitions()
+    assert n_parts <= par
+    jobs = _jobs_of(spark, "tiff-one-wave", lambda: TB.color_correct_tiff(
+        spark, src, str(tmp_path / "out.tif"), OPS
+    ))
+    assert 0 < len(jobs) <= 1 + math.ceil(n_parts / par)
+
+
+def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
+    """Below ``maxPartitionBytes`` of decoded pixels per partition the sink
+    runs waves of at most ``defaultParallelism`` tasks; the container is
+    the replay's pixels and the one-wave container byte for byte."""
+    src, arr = rasters["rgb8"]
+    par = spark.sparkContext.defaultParallelism
+    n_chunks = len(TB.read_structure(src)[1])
+    split = _multi_wave_split(spark, arr)
+    out, ref = str(tmp_path / "out.tif"), str(tmp_path / "one_wave.tif")
+    with _max_partition_bytes(spark, split):
+        n_parts = TB.tiff_rows(spark, src)[0].rdd.getNumPartitions()
+        assert n_parts == min(n_chunks, max(par, -(-arr.nbytes // split)))
+        assert n_parts > 2 * par
+        jobs = _jobs_of(spark, "tiff-multi-wave", lambda: TB.color_correct_tiff(
+            spark, src, out, OPS
+        ))
+        _one_wave_tif(spark, src, ref)
+    waves = [min(par, n_parts - s) for s in range(0, n_parts, par)]
+    assert len(jobs) == 1 + len(waves)
+    assert [_result_tasks(spark, j) for j in jobs[1:]] == waves
+    got, _ = T.read_tiff(out)
+    assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))
+    assert filecmp.cmp(out, ref, shallow=False)
+
+
+def _corrupt(path: str, chunk: T.ChunkRef) -> None:
+    with open(path, "r+b") as f:
+        f.seek(chunk.offset)
+        f.write(bytes(chunk.nbytes))
+
+
 def test_corrupt_tile_leaves_no_partial_output(spark, rasters, tmp_path):
     """A decode error surfaces while the container is being written; the
-    writer drops its partial file and ``dst`` never appears."""
+    writer drops its partial file and ``dst`` never appears. Two cases: a
+    corrupt middle tile in a one-wave run, and a corrupt tile in the last
+    partition of a multi-wave run, whose error arrives after the earlier
+    waves' payloads were added."""
+    import pyspark.sql.functions as F
+
     _, arr = rasters["rgb8"]
-    src = str(tmp_path / "deflate.tif")
-    T.write_tiff(src, arr.copy(), T.TiffProfile(
-        width=438, height=500, count=3, dtype="uint8",
-        compression=T.COMPRESSION_DEFLATE,
-    ))
-    _, chunks = TB.read_structure(src)
-    victim = chunks[len(chunks) // 2]
-    with open(src, "r+b") as f:
-        f.seek(victim.offset)
-        f.write(bytes(victim.nbytes))
-    out_dir = tmp_path / "out"
-    out_dir.mkdir()
-    with pytest.raises(Exception, match="while decompressing data"):
-        TB.color_correct_tiff(spark, src, str(out_dir / "out.tif"), OPS)
-    assert os.listdir(out_dir) == []
+
+    def deflate_source(name: str) -> tuple[str, list[T.ChunkRef]]:
+        src = str(tmp_path / f"{name}.tif")
+        T.write_tiff(src, arr.copy(), T.TiffProfile(
+            width=438, height=500, count=3, dtype="uint8",
+            compression=T.COMPRESSION_DEFLATE,
+        ))
+        return src, TB.read_structure(src)[1]
+
+    def fails_cleanly(src: str, name: str) -> None:
+        out_dir = tmp_path / name
+        out_dir.mkdir()
+        with pytest.raises(Exception, match="while decompressing data"):
+            TB.color_correct_tiff(spark, src, str(out_dir / "out.tif"), OPS)
+        assert os.listdir(out_dir) == []
+
+    src, chunks = deflate_source("middle")
+    _corrupt(src, chunks[len(chunks) // 2])
+    fails_cleanly(src, "out_middle")
+
+    src, chunks = deflate_source("last")
+    par = spark.sparkContext.defaultParallelism
+    with _max_partition_bytes(spark, _multi_wave_split(spark, arr)):
+        df = TB.tiff_rows(spark, src)[0]
+        n_parts = df.rdd.getNumPartitions()
+        last = df.where(F.spark_partition_id() == n_parts - 1).select("image_id").collect()
+        _corrupt(src, chunks[max(int(r[0].rsplit(":", 1)[1]) for r in last)])
+        jobs = _jobs_of(spark, "tiff-late-failure", lambda: fails_cleanly(src, "out_last"))
+    st = spark.sparkContext.statusTracker()
+    done = [j for j in jobs if st.getJobInfo(j).status == "SUCCEEDED"]
+    # the shuffle-map job and every wave before the last one
+    assert len(done) == math.ceil(n_parts / par) > 1
 
 
 def test_cli_via_tables_equals_direct_tif(spark, rasters, tmp_path):
