@@ -12,18 +12,19 @@ Spark-first shape — a ``.tif`` is a lazy DataFrame source and a sink:
   and decodes its own disjoint tile ranges (``mapInPandas``) and emits
   image-table rows. A 100 GB (Big)TIFF on a shared filesystem reads as a
   fully parallel scan — pixel data never passes through the driver.
-  Partitions are sized as Spark sizes file-scan splits: at least one per
-  core, and none over ``spark.sql.files.maxPartitionBytes`` of decoded
-  pixels.
+  There is at least one partition per core, and as many more as keep
+  a partition's even share of the decoded pixels within
+  ``spark.sql.files.maxPartitionBytes``.
 - **sink** (:func:`write_tiff_rows`) — tasks encode + compress their
   tiles (the CPU-heavy step); the driver collects the opaque compressed
-  payloads in waves of ``defaultParallelism`` partitions (one Spark job
-  per wave, its tasks running at once) and adds each wave, in partition
-  order, to :class:`tiff.TiffChunkWriter` (tail-written IFD, any arrival
-  order). The driver holds one wave at a time: about
-  ``defaultParallelism × maxPartitionBytes`` of payloads from a
-  :func:`tiff_rows` source, whatever the raster size. A single .tif has
-  one writer by construction — the same constraint rasterio has.
+  payloads in waves (one Spark job per wave, its tasks running at once)
+  and adds each wave, in partition order, to :class:`tiff.TiffChunkWriter`
+  (tail-written IFD, any arrival order). A wave is at most
+  ``defaultParallelism`` partitions, and no more than put half of
+  ``spark.driver.maxResultSize`` of uncompressed payloads in it at an
+  even spread, so the driver holds one bounded wave at a time whatever
+  the raster size. A single
+  .tif has one writer by construction — the same constraint rasterio has.
   Containers past 4 GiB need ``--co bigtiff=yes``.
 - ``rio color in.tif out.tif`` (:func:`color_correct_tiff`) is source →
   ``color_correct`` → sink: one Spark plan, no intermediate table.
@@ -55,7 +56,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.core.rdd import RDD, _load_from_socket
 from pyspark.sql import DataFrame, SparkSession
 
 from rio_color_spark.sources import codec
@@ -174,9 +174,10 @@ def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProf
             "nbytess": [[c.nbytes for c in g] for g in groups],
         }
     )
-    # Spark's file-scan rule: at least one partition per core, and no
-    # partition over maxPartitionBytes of decoded pixels, so the sink's
-    # waves hold a bounded share of the raster whatever its size
+    # at least one partition per core, and enough more that an even share
+    # of the decoded pixels is within maxPartitionBytes (the round-robin
+    # spread adds a few chunks): a sink wave of these partitions is a
+    # bounded share of the raster whatever its size
     decoded = prof.width * prof.height * prof.count * prof.np_dtype.itemsize
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     n_parts = max(1, min(len(groups), max(
@@ -376,12 +377,9 @@ def write_tiff_rows(
     single GeoTIFF.
 
     Chunk compression runs on executors. The driver runs the encode plan
-    in waves of ``defaultParallelism`` partitions, one Spark job each, and
+    in waves of :func:`_wave_length` partitions, one Spark job each, and
     adds each wave's payloads to the container in partition order before
     it runs the next; its peak hold is one wave of compressed chunks.
-    A wave from a :func:`tiff_rows` source is about ``defaultParallelism
-    × maxPartitionBytes`` of decoded pixels; a re-grid wave is
-    ``defaultParallelism`` of its shuffle's partitions.
 
     Creation options (``--co compress=deflate``, ``blockxsize``,
     ``bigtiff=yes`` …) override the preserved profile, the reference's
@@ -398,24 +396,35 @@ def write_tiff_rows(
     else:
         enc = _encode_regrid(df, in_prof, out_prof)
     rdd = enc.rdd
-    n_parts, wave = rdd.getNumPartitions(), rdd.context.defaultParallelism
+    sc, n_parts = rdd.context, rdd.getNumPartitions()
+    raw = sum(sw * sh for *_, sw, sh in T._chunk_grid(out_prof))
+    wave = _wave_length(
+        sc.defaultParallelism, n_parts,
+        raw * out_prof.count * out_prof.np_dtype.itemsize, _result_limit(sc),
+    )
     with T.TiffChunkWriter(tif_path, out_prof) as writer:
         for start in range(0, n_parts, wave):
-            wave_ids = list(range(start, min(start + wave, n_parts)))
-            for index, payload in _run_wave(rdd, wave_ids):
+            ids = list(range(start, min(start + wave, n_parts)))
+            for index, payload in sc.runJob(rdd, lambda rows: rows, ids):
                 writer.add(index, bytes(payload))
 
 
-def _run_wave(rdd: RDD, partitions: list[int]) -> Iterator:
-    """The rows of ``rdd``'s ``partitions`` in partition order, from ONE
-    Spark job whose tasks run at once: ``SparkContext.runJob`` without its
-    Python pass. That pass maps every partition through a Python function,
-    so each task would start one more Python worker only to unpickle the
-    rows and pickle them again (+0.4 s on a session's first ``scene``
-    repetition at ``local[4]`` on 4 cores)."""
-    sc = rdd.context
-    sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd._jrdd, partitions)
-    return _load_from_socket(sock_info, rdd._jrdd_deserializer)
+def _result_limit(sc) -> int:
+    """``spark.driver.maxResultSize`` in bytes (0: no limit)."""
+    return sc._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+
+
+def _wave_length(parallelism: int, n_parts: int, payload_bytes: int, limit: int) -> int:
+    """Partitions per sink wave: at most one per core, and at most as many
+    as fit half of ``limit`` (Spark's per-job cap on collected bytes; 0 =
+    none) when the container's uncompressed ``payload_bytes`` spread evenly
+    over ``n_parts``. The other half absorbs uneven partitions (a re-grid
+    shuffle hashes chunks to partitions) and codec expansion. Never below
+    one partition per job."""
+    if limit <= 0:
+        return parallelism
+    per_part = max(1, -(-payload_bytes // max(1, n_parts)))
+    return max(1, min(parallelism, limit // 2 // per_part))
 
 
 def table_rows(

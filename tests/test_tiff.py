@@ -548,15 +548,24 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
     """Below ``maxPartitionBytes`` of decoded pixels per partition the sink
     runs waves of at most ``defaultParallelism`` tasks; the container is
     the replay's pixels and the one-wave container byte for byte."""
+    import pyspark.sql.functions as F
+
     src, arr = rasters["rgb8"]
     par = spark.sparkContext.defaultParallelism
-    n_chunks = len(TB.read_structure(src)[1])
     split = _multi_wave_split(spark, arr)
     out, ref = str(tmp_path / "out.tif"), str(tmp_path / "one_wave.tif")
     with _max_partition_bytes(spark, split):
-        n_parts = TB.tiff_rows(spark, src)[0].rdd.getNumPartitions()
-        assert n_parts == min(n_chunks, max(par, -(-arr.nbytes // split)))
+        df = TB.tiff_rows(spark, src)[0]
+        n_parts = df.rdd.getNumPartitions()
         assert n_parts > 2 * par
+        per_part = df.groupBy(F.spark_partition_id()).agg(
+            F.sum(F.col("w") * F.col("h") * arr.shape[0] * arr.itemsize)
+        ).collect()
+        # the round-robin spread of `par` metadata slices leaves a partition
+        # at most one 32² tile per slice above its even share
+        tile = 32 * 32 * arr.shape[0] * arr.itemsize
+        assert len(per_part) == n_parts
+        assert max(r[1] for r in per_part) <= split + par * tile
         jobs = _jobs_of(spark, "tiff-multi-wave", lambda: TB.color_correct_tiff(
             spark, src, out, OPS
         ))
@@ -566,6 +575,48 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
     assert [_result_tasks(spark, j) for j in jobs[1:]] == waves
     got, _ = T.read_tiff(out)
     assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))
+    assert filecmp.cmp(out, ref, shallow=False)
+
+
+def test_sink_wave_length():
+    """A wave is at most one partition per core and at most half of the
+    result limit of evenly spread payloads; never empty."""
+    gib = 1 << 30
+    # 2 GiB over a re-grid shuffle of 8 partitions at 4 cores: 256 MiB each
+    assert TB._wave_length(4, 8, 2 * gib, gib) == 2
+    assert TB._wave_length(4, 8, 2 * gib, 0) == 4  # no limit
+    assert TB._wave_length(4, 8, 8 * gib, gib) == 1  # a partition over the limit
+    assert TB._wave_length(4, 4, 7 << 20, gib) == 4  # the core cap
+    assert TB._wave_length(16, 64, 8 * gib, gib) == 4  # 128 MiB partitions
+
+
+def test_tiff_sink_regrid_waves_fit_result_limit(spark, rasters, tmp_path, monkeypatch):
+    """A re-grid sink over a shuffle of ``2 × defaultParallelism``
+    partitions, under a result limit whose half holds two of its
+    partitions' payloads but not three, collects waves of two tasks and
+    writes the container of a run without that limit byte for byte."""
+    src, arr = rasters["rgb8"]
+    par = spark.sparkContext.defaultParallelism
+    co = {"blockxsize": "64", "blockysize": "64"}
+    out, ref = str(tmp_path / "out.tif"), str(tmp_path / "ref.tif")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_parts == 2 * par
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep the shuffle's 2P partitions
+    try:
+        TB.color_correct_tiff(spark, src, ref, OPS, creation_options=co)
+        # half this limit is 2.5 partitions' share of the source pixels;
+        # 64² tiles pad the 438×500 raster by under 5%, so two partitions
+        # of uncompressed payload fit in it and three do not
+        monkeypatch.setattr(TB, "_result_limit", lambda sc: 5 * arr.nbytes // n_parts)
+        jobs = _jobs_of(spark, "tiff-regrid-waves", lambda: TB.color_correct_tiff(
+            spark, src, out, OPS, creation_options=co
+        ))
+    finally:
+        spark.conf.set(key, old)
+    tasks = [_result_tasks(spark, j) for j in jobs]
+    assert tasks[-(n_parts // 2):] == [2] * (n_parts // 2)
     assert filecmp.cmp(out, ref, shallow=False)
 
 
