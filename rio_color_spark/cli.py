@@ -253,12 +253,16 @@ def _run(src: str, dst: str, ops: str, out_dtype, jobs: int, co: dict) -> None:
     table with its optional manifest) → ``color_correct`` → sink (a .tif,
     whose --co are GDAL-style container creation options as in reference
     cli.py:81-121; or a parquet table, whose --co are parquet writer
-    options, with a manifest holding the output profile)."""
+    options, with a manifest holding the output profile). A .tif → .tif
+    run is ``color_correct_tiff``, one Python pass per tile."""
     from rio_color_spark.operators.color import color_correct
     from rio_color_spark.sources import codec
     from rio_color_spark.sources import tiff_bridge as TB
 
     with _session(jobs) as spark:
+        if TB.is_tiff_path(src) and TB.is_tiff_path(dst):
+            TB.color_correct_tiff(spark, src, dst, ops, out_dtype, co)
+            return
         if TB.is_tiff_path(src):
             df, prof = TB.tiff_rows(spark, src)
         else:

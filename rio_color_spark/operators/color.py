@@ -218,6 +218,32 @@ def _transform_batch(
     return out_pdf
 
 
+def _validate(ops_string: str, out_dtype: str | None) -> None:
+    """validate-early on the driver (bad DSL fails before any task launches)"""
+    parse_ops_spec(ops_string)
+    if out_dtype is not None:
+        np.iinfo(np.dtype(out_dtype))  # must be an integer dtype
+
+
+def color_chunks(chunks, ops_string: str, out_dtype: str | None = None):
+    """The fused chain over a chunk stream (``sources.tiff_bridge``): every
+    ``(index, (C, h, w) array)`` pair comes out colored and rescaled to
+    ``out_dtype`` (None keeps its dtype). Same driver-side validation,
+    kernels and fail-fast ValueErrors as :func:`color_correct`, but no
+    DataFrame stage of its own: it runs inside its consumer's Python pass."""
+    _validate(ops_string, out_dtype)
+
+    def stream(batches):
+        fused = compile_chain(ops_string)  # compiled once per task
+        for pairs in chunks(batches):
+            yield (
+                (idx, _apply_slabbed(arr, fused, np.dtype(out_dtype or arr.dtype)))
+                for idx, arr in pairs
+            )
+
+    return stream
+
+
 def color_correct(
     df: DataFrame, ops_string: str, out_dtype: str | None = None
 ) -> DataFrame:
@@ -226,11 +252,7 @@ def color_correct(
     ``out_dtype`` rescales the output payload (None keeps the input dtype),
     matching the reference CLI's ``--out-dtype`` (cli.py:36-39).
     """
-    # validate-early on the driver (bad DSL fails before any task launches)
-    parse_ops_spec(ops_string)
-    if out_dtype is not None:
-        np.iinfo(np.dtype(out_dtype))  # must be an integer dtype
-
+    _validate(ops_string, out_dtype)
     schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -139,19 +139,18 @@ def read_structure(tif_path: str) -> tuple[T.TiffProfile, list[T.ChunkRef]]:
         return T.read_ifd_fetch(T.file_fetch(f, prefix))
 
 
-def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProfile]:
-    """GeoTIFF → lazy image-table DataFrame (one row per tile/strip) and
-    its container profile. Only the structure parse runs now; tile reads
-    and decodes run on executors when the DataFrame is consumed."""
+def _tiff_chunks(spark: SparkSession, tif_path: str):
+    """GeoTIFF → (chunk-metadata DataFrame, profile, chunk stream).
+
+    Only the structure parse runs now. The DataFrame has one row per
+    SPATIAL chunk: a planar (band-separate) source contributes `count`
+    byte ranges per row (one per band, plane order), which the stream
+    decodes and stacks — the same full-band chunks as a chunky source.
+    The chunk stream turns one task's metadata batches into, per batch,
+    a generator of ``(chunk index, (count, h, w) array)`` pairs in row
+    order: each task reads and decodes its own disjoint byte ranges."""
     tif_path = os.path.abspath(tif_path)
     prof, chunks = read_structure(tif_path)
-    fmt = codec.fmt_for_dtype(prof.np_dtype, prof.count)
-    stem = os.path.splitext(os.path.basename(tif_path))[0]
-
-    # one row per SPATIAL chunk: a planar (band-separate) source
-    # contributes `count` byte ranges per row (one per band, plane order);
-    # the executor decodes each plane and stacks — same full-band output
-    # rows as a chunky source, no extra shuffle
     if prof.planar == 2:
         per_plane = len(chunks) // prof.count
         groups = [
@@ -185,34 +184,52 @@ def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProf
     )))
     meta_df = spark.createDataFrame(meta, schema=_CHUNK_META_SCHEMA).repartition(n_parts)
 
-    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(f, pdf: pd.DataFrame) -> Iterator[tuple[int, np.ndarray]]:
+        for r in pdf.itertuples(index=False):
+            planar = len(r.offsets) > 1
+            planes = []
+            for pi, (off, nb) in enumerate(zip(r.offsets, r.nbytess)):
+                f.seek(int(off))
+                raw = f.read(int(nb))
+                ch = T.ChunkRef(
+                    r.index, r.row0, r.col0, r.width, r.height,
+                    r.stored_width, r.stored_height, int(off),
+                    int(nb), plane=pi if planar else -1,
+                )
+                planes.append(T.decode_chunk(raw, prof, ch))
+            yield int(r.index), (
+                planes[0] if len(planes) == 1 else np.concatenate(planes, axis=0)
+            )
+
+    def stream(batches: Iterator[pd.DataFrame]):
         with open(tif_path, "rb") as f:
             for pdf in batches:
-                out = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
-                for r in pdf.itertuples(index=False):
-                    planar = len(r.offsets) > 1
-                    planes = []
-                    for pi, (off, nb) in enumerate(zip(r.offsets, r.nbytess)):
-                        f.seek(int(off))
-                        raw = f.read(int(nb))
-                        ch = T.ChunkRef(
-                            r.index, r.row0, r.col0, r.width, r.height,
-                            r.stored_width, r.stored_height, int(off),
-                            int(nb), plane=pi if planar else -1,
-                        )
-                        planes.append(T.decode_chunk(raw, prof, ch))
-                    arr = (
-                        planes[0] if len(planes) == 1
-                        else np.concatenate(planes, axis=0)
-                    )
-                    out["image_id"].append(f"{stem}:{r.index:06d}")
-                    out["bytes"].append(codec.encode(arr, fmt))
-                    out["w"].append(int(r.width))
-                    out["h"].append(int(r.height))
-                    out["fmt"].append(fmt)
-                    out["caption"].append(tif_path)
-                    out["phash"].append(int(phash_for(np.array([r.index]))[0]))
-                yield pd.DataFrame(out)
+                yield decode(f, pdf)
+
+    return meta_df, prof, stream
+
+
+def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProfile]:
+    """GeoTIFF → lazy image-table DataFrame (one row per tile/strip) and
+    its container profile. Only the structure parse runs now; tile reads
+    and decodes run on executors when the DataFrame is consumed."""
+    meta_df, prof, chunks = _tiff_chunks(spark, tif_path)
+    tif_path = os.path.abspath(tif_path)
+    fmt = codec.fmt_for_dtype(prof.np_dtype, prof.count)
+    stem = os.path.splitext(os.path.basename(tif_path))[0]
+
+    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pairs in chunks(batches):
+            out = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")}
+            for idx, arr in pairs:
+                out["image_id"].append(f"{stem}:{idx:06d}")
+                out["bytes"].append(codec.encode(arr, fmt))
+                out["w"].append(arr.shape[2])
+                out["h"].append(arr.shape[1])
+                out["fmt"].append(fmt)
+                out["caption"].append(tif_path)
+                out["phash"].append(int(phash_for(np.array([idx]))[0]))
+            yield pd.DataFrame(out)
 
     return meta_df.mapInPandas(decode_rows, schema=IMAGES_SCHEMA), prof
 
@@ -235,39 +252,43 @@ def ingest_tiff(spark: SparkSession, tif_path: str, table_path: str) -> None:
 
 
 def _planar_payloads(
-    arr: np.ndarray, p: T.TiffProfile, sw: int, sh: int,
-    spatial_idx: int, per_plane: int,
+    arr: np.ndarray, p: T.TiffProfile, grid: list, spatial_idx: int,
 ) -> list[tuple[int, bytes]]:
-    """(global chunk index, payload) pairs for one full-band pixel block:
-    one pair for chunky output; `count` plane-major pairs (index =
-    plane * per_plane + spatial) for planar (INTERLEAVE=BAND) output."""
+    """(global chunk index, payload) pairs for one full-band pixel block
+    at ``grid[spatial_idx]`` (``grid`` is ``p``'s chunk grid): one pair for
+    chunky output; `count` plane-major pairs (index = plane * len(grid) +
+    spatial) for planar (INTERLEAVE=BAND) output."""
+    sw, sh = grid[spatial_idx][4:]
     if p.planar == 2:
         return [
-            (pl * per_plane + spatial_idx,
+            (pl * len(grid) + spatial_idx,
              T.encode_chunk(arr[pl : pl + 1], p, sw, sh))
             for pl in range(arr.shape[0])
         ]
     return [(spatial_idx, T.encode_chunk(arr, p, sw, sh))]
 
 
-def _encode_same_grid(df: DataFrame, p: T.TiffProfile) -> DataFrame:
-    """Image-table rows → (index, payload): the source grid IS the target
-    grid, so every row encodes independently (no shuffle at all)."""
+def _table_chunks(batches: Iterator[pd.DataFrame]):
+    """The chunk stream of image-table rows (see :func:`_tiff_chunks`):
+    the chunk index is the ``image_id`` suffix."""
+    for pdf in batches:
+        yield (
+            (int(r.image_id.rsplit(":", 1)[1]), codec.decode(r.bytes, r.w, r.h, r.fmt))
+            for r in pdf.itertuples(index=False)
+        )
+
+
+def _encode_same_grid(df: DataFrame, chunks, p: T.TiffProfile) -> DataFrame:
+    """``df`` → (index, payload): the source grid IS the target grid, so
+    every chunk encodes independently in the same Python pass that
+    ``chunks`` produces it in (no shuffle at all)."""
 
     def encode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        per_plane = len(T._chunk_grid(p))
-        for pdf in batches:
+        grid = T._chunk_grid(p)
+        for pairs in chunks(batches):
             idxs, payloads = [], []
-            for r in pdf.itertuples(index=False):
-                idx = int(r.image_id.rsplit(":", 1)[1])
-                arr = codec.decode(r.bytes, r.w, r.h, r.fmt)
-                if p.tiled:
-                    sw, sh = p.tile_width, p.tile_height
-                else:
-                    sw, sh = p.width, r.h
-                for gi, payload in _planar_payloads(
-                    arr, p, sw, sh, idx, per_plane
-                ):
+            for idx, arr in pairs:
+                for gi, payload in _planar_payloads(arr, p, grid, idx):
                     idxs.append(gi)
                     payloads.append(payload)
             yield pd.DataFrame({"index": idxs, "payload": payloads})
@@ -275,11 +296,13 @@ def _encode_same_grid(df: DataFrame, p: T.TiffProfile) -> DataFrame:
     return df.mapInPandas(encode_rows, schema="index int, payload binary")
 
 
-def _encode_regrid(df: DataFrame, pin: T.TiffProfile, pout: T.TiffProfile) -> DataFrame:
-    """Image-table rows on the SOURCE grid → (index, payload) on the
-    TARGET grid, fully distributed:
+def _encode_regrid(
+    df: DataFrame, chunks, pin: T.TiffProfile, pout: T.TiffProfile
+) -> DataFrame:
+    """``df``, whose chunk stream ``chunks`` yields chunks on the SOURCE
+    grid → (index, payload) on the TARGET grid, fully distributed:
 
-    1. ``mapInPandas``: decode each source chunk, slice it along target
+    1. ``mapInPandas``: produce each source chunk, slice it along target
        chunk boundaries, emit (target index, placement, raw pixel block)
     2. one shuffle co-locates each target chunk's pieces
     3. ``applyInPandas`` per target chunk: assemble the valid region,
@@ -299,11 +322,9 @@ def _encode_regrid(df: DataFrame, pin: T.TiffProfile, pout: T.TiffProfile) -> Da
         else:
             tw, th = pout.width, (pout.rows_per_strip or pout.height)
             across = 1
-        for pdf in batches:
+        for pairs in chunks(batches):
             out = {k: [] for k in ("tgt", "y0", "x0", "h", "w", "block")}
-            for r in pdf.itertuples(index=False):
-                idx = int(r.image_id.rsplit(":", 1)[1])
-                arr = codec.decode(r.bytes, r.w, r.h, r.fmt)
+            for idx, arr in pairs:
                 r0, c0 = in_grid[idx][0], in_grid[idx][1]
                 h, w = arr.shape[1], arr.shape[2]
                 ty0, ty1 = r0 // th, (r0 + h - 1) // th
@@ -328,8 +349,7 @@ def _encode_regrid(df: DataFrame, pin: T.TiffProfile, pout: T.TiffProfile) -> Da
                         out["h"].append(b - a)
                         out["w"].append(d - c)
                         out["block"].append(sub.tobytes())
-                yield pd.DataFrame(out)
-                out = {k: [] for k in ("tgt", "y0", "x0", "h", "w", "block")}
+            yield pd.DataFrame(out)
 
     pieces = df.mapInPandas(
         split_rows, schema="tgt int, y0 int, x0 int, h int, w int, block binary"
@@ -338,13 +358,13 @@ def _encode_regrid(df: DataFrame, pin: T.TiffProfile, pout: T.TiffProfile) -> Da
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         out_grid = T._chunk_grid(pout)
         tgt = int(key[0])
-        _r0, _c0, vw, vh, sw, sh = out_grid[tgt]
+        _r0, _c0, vw, vh, _sw, _sh = out_grid[tgt]
         dt = pout.np_dtype
         tile = np.zeros((pout.count, vh, vw), dtype=dt)
         for r in pdf.itertuples(index=False):
             blk = np.frombuffer(r.block, dtype=dt).reshape(pout.count, r.h, r.w)
             tile[:, r.y0 : r.y0 + r.h, r.x0 : r.x0 + r.w] = blk
-        pairs = _planar_payloads(tile, pout, sw, sh, tgt, len(out_grid))
+        pairs = _planar_payloads(tile, pout, out_grid, tgt)
         return pd.DataFrame(
             {"index": [i for i, _ in pairs],
              "payload": [pl for _, pl in pairs]}
@@ -388,13 +408,27 @@ def write_tiff_rows(
     distributed re-grid path. An error in any upstream stage leaves
     ``tif_path`` untouched.
     """
-    in_prof = _profile_for_fmt(prof, fmt)
+    _write_chunks(df, _table_chunks, _profile_for_fmt(prof, fmt), tif_path,
+                  creation_options)
+
+
+def _write_chunks(
+    df: DataFrame, chunks, in_prof: T.TiffProfile, tif_path: str,
+    creation_options: dict[str, str] | None,
+) -> None:
+    """``df``, whose chunk stream ``chunks`` yields pixel chunks on
+    ``in_prof``'s grid → single GeoTIFF (see :func:`write_tiff_rows`)."""
     out_prof = T.apply_creation_options(in_prof, creation_options or {})
     grid_fields = ("tiled", "tile_width", "tile_height", "rows_per_strip")
     if all(getattr(out_prof, k) == getattr(in_prof, k) for k in grid_fields):
-        enc = _encode_same_grid(df, out_prof)
+        enc = _encode_same_grid(df, chunks, out_prof)
     else:
-        enc = _encode_regrid(df, in_prof, out_prof)
+        enc = _encode_regrid(df, chunks, in_prof, out_prof)
+    _collect(enc, out_prof, tif_path)
+
+
+def _collect(enc: DataFrame, out_prof: T.TiffProfile, tif_path: str) -> None:
+    """(index, payload) rows → the container at ``tif_path``, in waves."""
     rdd = enc.rdd
     sc, n_parts = rdd.context, rdd.getNumPartitions()
     raw = sum(sw * sh for *_, sw, sh in T._chunk_grid(out_prof))
@@ -469,14 +503,17 @@ def color_correct_tiff(
     out_dtype: str | None = None,
     creation_options: dict[str, str] | None = None,
 ) -> None:
-    """End-to-end ``rio color SRC.tif DST.tif OPS`` twin: one Spark plan
-    of distributed tile decode → fused color chain → distributed encode,
-    streamed into the container on the driver."""
-    from rio_color_spark.operators.color import color_correct
+    """End-to-end ``rio color SRC.tif DST.tif OPS`` twin in one Python
+    crossing per chunk, the reference worker loop's read → chain → write:
+    each task reads and decodes its tiles, runs the fused color chain on
+    them and encodes the result in one pass over the chunk metadata; the
+    driver streams the payloads into the container. A re-grid adds its
+    shuffle and assembly pass behind that one."""
+    from rio_color_spark.operators.color import color_chunks
 
-    df, prof = tiff_rows(spark, src_tif)
+    meta_df, prof, chunks = _tiff_chunks(spark, src_tif)
     fmt = codec.fmt_for_dtype(out_dtype or prof.np_dtype, prof.count)
-    write_tiff_rows(
-        color_correct(df, ops_string, out_dtype=out_dtype), prof, fmt,
-        dst_tif, creation_options,
+    _write_chunks(
+        meta_df, color_chunks(chunks, ops_string, out_dtype),
+        _profile_for_fmt(prof, fmt), dst_tif, creation_options,
     )

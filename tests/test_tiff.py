@@ -517,17 +517,12 @@ def _result_tasks(spark, job_id: int) -> int:
     return st.getStageInfo(max(st.getJobInfo(job_id).stageIds)).numTasks
 
 
-def _one_wave_tif(spark, src: str, dst: str) -> None:
-    """``color_correct_tiff``'s plan collected in ONE job, payloads added
-    in partition order: the container a single wave would write."""
-    from rio_color_spark.operators.color import color_correct
-
-    df, prof = TB.tiff_rows(spark, src)
-    p = TB._profile_for_fmt(prof, codec.fmt_for_dtype(prof.np_dtype, prof.count))
-    enc = TB._encode_same_grid(color_correct(df, OPS), p)
-    with T.TiffChunkWriter(dst, p) as writer:
-        for row in enc.collect():
-            writer.add(row["index"], bytes(row["payload"]))
+def _one_wave_tif(spark, src: str, dst: str, monkeypatch) -> None:
+    """``color_correct_tiff`` with its plan collected in ONE job, payloads
+    added in partition order: the container a single wave would write."""
+    with monkeypatch.context() as m:
+        m.setattr(TB, "_wave_length", lambda parallelism, n_parts, *_: n_parts)
+        TB.color_correct_tiff(spark, src, dst, OPS)
 
 
 def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
@@ -544,7 +539,7 @@ def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
     assert 0 < len(jobs) <= 1 + math.ceil(n_parts / par)
 
 
-def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
+def test_tiff_sink_multi_wave(spark, rasters, tmp_path, monkeypatch):
     """Below ``maxPartitionBytes`` of decoded pixels per partition the sink
     runs waves of at most ``defaultParallelism`` tasks; the container is
     the replay's pixels and the one-wave container byte for byte."""
@@ -569,7 +564,7 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
         jobs = _jobs_of(spark, "tiff-multi-wave", lambda: TB.color_correct_tiff(
             spark, src, out, OPS
         ))
-        _one_wave_tif(spark, src, ref)
+        _one_wave_tif(spark, src, ref, monkeypatch)
     waves = [min(par, n_parts - s) for s in range(0, n_parts, par)]
     assert len(jobs) == 1 + len(waves)
     assert [_result_tasks(spark, j) for j in jobs[1:]] == waves
