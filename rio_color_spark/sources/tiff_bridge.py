@@ -70,15 +70,6 @@ MANIFEST = "_tiff_profile.json"
 #: demand through tiff.file_fetch — never silently truncated.
 _HEADER_BYTES = 4 << 20
 
-#: one row per SPATIAL chunk; planar (band-separate) sources carry one
-#: (offset, nbytes) pair per band in plane order — chunky sources one pair
-_CHUNK_META_SCHEMA = (
-    "index int, row0 int, col0 int, width int, height int, "
-    "stored_width int, stored_height int, offsets array<long>, "
-    "nbytess array<long>"
-)
-
-
 def _profile_to_json(prof: T.TiffProfile) -> str:
     return json.dumps(
         {
@@ -140,80 +131,60 @@ def read_structure(tif_path: str) -> tuple[T.TiffProfile, list[T.ChunkRef]]:
 
 
 def _tiff_chunks(spark: SparkSession, tif_path: str):
-    """GeoTIFF → (chunk-metadata DataFrame, profile, chunk stream).
+    """GeoTIFF → (chunk-id DataFrame, profile, chunk stream).
 
-    Only the structure parse runs now. The DataFrame has one row per
-    SPATIAL chunk: a planar (band-separate) source contributes `count`
-    byte ranges per row (one per band, plane order), which the stream
-    decodes and stacks — the same full-band chunks as a chunky source.
-    The chunk stream turns one task's metadata batches into, per batch,
-    a generator of ``(chunk index, (count, h, w) array)`` pairs in row
-    order: each task reads and decodes its own disjoint byte ranges."""
+    Only the structure parse runs now. The DataFrame is ``spark.range``
+    over the SPATIAL chunk indices, split into contiguous index ranges,
+    so partitions hold neighbouring chunks and a sink adds them in index
+    order. The chunk stream turns one task's id batches into, per batch,
+    a generator of ``(chunk index, (count, h, w) array)`` pairs in id
+    order: each task reads and decodes its own disjoint byte ranges. A
+    planar (band-separate) source has `count` byte ranges per spatial
+    chunk (one per band), decoded and stacked into the same full-band
+    chunks as a chunky source's."""
     tif_path = os.path.abspath(tif_path)
     prof, chunks = read_structure(tif_path)
-    if prof.planar == 2:
-        per_plane = len(chunks) // prof.count
-        groups = [
-            [chunks[p * per_plane + s] for p in range(prof.count)]
-            for s in range(per_plane)
-        ]
-    else:
-        groups = [[c] for c in chunks]
-
-    meta = pd.DataFrame(
-        {
-            "index": [g[0].index for g in groups],
-            "row0": [g[0].row0 for g in groups],
-            "col0": [g[0].col0 for g in groups],
-            "width": [g[0].width for g in groups],
-            "height": [g[0].height for g in groups],
-            "stored_width": [g[0].stored_width for g in groups],
-            "stored_height": [g[0].stored_height for g in groups],
-            "offsets": [[c.offset for c in g] for g in groups],
-            "nbytess": [[c.nbytes for c in g] for g in groups],
-        }
-    )
+    n_planes = prof.count if prof.planar == 2 else 1
+    n = len(chunks) // n_planes
+    # chunks are plane-major (TIFF 6.0): row s holds spatial chunk s's
+    # byte range in each band
+    offsets = np.array([c.offset for c in chunks], np.int64).reshape(n_planes, n).T
+    nbytes = np.array([c.nbytes for c in chunks], np.int64).reshape(n_planes, n).T
     # at least one partition per core, and enough more that an even share
-    # of the decoded pixels is within maxPartitionBytes (the round-robin
-    # spread adds a few chunks): a sink wave of these partitions is a
+    # of the decoded pixels is within maxPartitionBytes (a contiguous
+    # split adds at most one chunk): a sink wave of these partitions is a
     # bounded share of the raster whatever its size
     decoded = prof.width * prof.height * prof.count * prof.np_dtype.itemsize
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n_parts = max(1, min(len(groups), max(
+    n_parts = max(1, min(n, max(
         spark.sparkContext.defaultParallelism, -(-decoded // split)
     )))
-    meta_df = spark.createDataFrame(meta, schema=_CHUNK_META_SCHEMA).repartition(n_parts)
+    ids = spark.range(n, numPartitions=n_parts)
 
-    def decode(f, pdf: pd.DataFrame) -> Iterator[tuple[int, np.ndarray]]:
-        for r in pdf.itertuples(index=False):
-            planar = len(r.offsets) > 1
+    def decode(f, grid, pdf: pd.DataFrame) -> Iterator[tuple[int, np.ndarray]]:
+        for s in pdf["id"].tolist():
             planes = []
-            for pi, (off, nb) in enumerate(zip(r.offsets, r.nbytess)):
-                f.seek(int(off))
-                raw = f.read(int(nb))
-                ch = T.ChunkRef(
-                    r.index, r.row0, r.col0, r.width, r.height,
-                    r.stored_width, r.stored_height, int(off),
-                    int(nb), plane=pi if planar else -1,
-                )
-                planes.append(T.decode_chunk(raw, prof, ch))
-            yield int(r.index), (
-                planes[0] if len(planes) == 1 else np.concatenate(planes, axis=0)
-            )
+            for p in range(n_planes):
+                off, nb = int(offsets[s, p]), int(nbytes[s, p])
+                f.seek(off)
+                ch = T.ChunkRef(s, *grid[s], off, nb, plane=p if n_planes > 1 else -1)
+                planes.append(T.decode_chunk(f.read(nb), prof, ch))
+            yield s, planes[0] if n_planes == 1 else np.concatenate(planes, axis=0)
 
     def stream(batches: Iterator[pd.DataFrame]):
+        grid = T._chunk_grid(prof)
         with open(tif_path, "rb") as f:
             for pdf in batches:
-                yield decode(f, pdf)
+                yield decode(f, grid, pdf)
 
-    return meta_df, prof, stream
+    return ids, prof, stream
 
 
 def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProfile]:
     """GeoTIFF → lazy image-table DataFrame (one row per tile/strip) and
     its container profile. Only the structure parse runs now; tile reads
     and decodes run on executors when the DataFrame is consumed."""
-    meta_df, prof, chunks = _tiff_chunks(spark, tif_path)
+    ids, prof, chunks = _tiff_chunks(spark, tif_path)
     tif_path = os.path.abspath(tif_path)
     fmt = codec.fmt_for_dtype(prof.np_dtype, prof.count)
     stem = os.path.splitext(os.path.basename(tif_path))[0]
@@ -231,7 +202,7 @@ def tiff_rows(spark: SparkSession, tif_path: str) -> tuple[DataFrame, T.TiffProf
                 out["phash"].append(int(phash_for(np.array([idx]))[0]))
             yield pd.DataFrame(out)
 
-    return meta_df.mapInPandas(decode_rows, schema=IMAGES_SCHEMA), prof
+    return ids.mapInPandas(decode_rows, schema=IMAGES_SCHEMA), prof
 
 
 def write_table(
@@ -511,9 +482,9 @@ def color_correct_tiff(
     shuffle and assembly pass behind that one."""
     from rio_color_spark.operators.color import color_chunks
 
-    meta_df, prof, chunks = _tiff_chunks(spark, src_tif)
+    ids, prof, chunks = _tiff_chunks(spark, src_tif)
     fmt = codec.fmt_for_dtype(out_dtype or prof.np_dtype, prof.count)
     _write_chunks(
-        meta_df, color_chunks(chunks, ops_string, out_dtype),
+        ids, color_chunks(chunks, ops_string, out_dtype),
         _profile_for_fmt(prof, fmt), dst_tif, creation_options,
     )

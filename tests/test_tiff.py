@@ -526,9 +526,8 @@ def _one_wave_tif(spark, src: str, dst: str, monkeypatch) -> None:
 
 
 def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
-    """A raster of at most ``defaultParallelism`` partitions runs the
-    repartition's shuffle-map job plus ONE collect wave, not one job per
-    partition."""
+    """A raster of at most ``defaultParallelism`` partitions runs exactly
+    ONE Spark job: one collect wave, no shuffle ahead of it."""
     src, _ = rasters["rgb8"]
     par = spark.sparkContext.defaultParallelism
     n_parts = TB.tiff_rows(spark, src)[0].rdd.getNumPartitions()
@@ -536,13 +535,15 @@ def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
     jobs = _jobs_of(spark, "tiff-one-wave", lambda: TB.color_correct_tiff(
         spark, src, str(tmp_path / "out.tif"), OPS
     ))
-    assert 0 < len(jobs) <= 1 + math.ceil(n_parts / par)
+    assert len(jobs) == 1
+    assert _result_tasks(spark, jobs[0]) == n_parts
 
 
 def test_tiff_sink_multi_wave(spark, rasters, tmp_path, monkeypatch):
     """Below ``maxPartitionBytes`` of decoded pixels per partition the sink
-    runs waves of at most ``defaultParallelism`` tasks; the container is
-    the replay's pixels and the one-wave container byte for byte."""
+    runs waves of at most ``defaultParallelism`` tasks; partitions hold
+    contiguous chunk ranges; the container is the replay's pixels and the
+    one-wave container byte for byte."""
     import pyspark.sql.functions as F
 
     src, arr = rasters["rgb8"]
@@ -553,24 +554,84 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path, monkeypatch):
         df = TB.tiff_rows(spark, src)[0]
         n_parts = df.rdd.getNumPartitions()
         assert n_parts > 2 * par
-        per_part = df.groupBy(F.spark_partition_id()).agg(
-            F.sum(F.col("w") * F.col("h") * arr.shape[0] * arr.itemsize)
-        ).collect()
-        # the round-robin spread of `par` metadata slices leaves a partition
-        # at most one 32² tile per slice above its even share
-        tile = 32 * 32 * arr.shape[0] * arr.itemsize
+        idx = F.substring_index("image_id", ":", -1).cast("int")
+        per_part = sorted(df.groupBy(F.spark_partition_id()).agg(
+            F.min(idx), F.max(idx), F.count("*"),
+            F.sum(F.col("w") * F.col("h") * arr.shape[0] * arr.itemsize),
+        ).collect())
         assert len(per_part) == n_parts
-        assert max(r[1] for r in per_part) <= split + par * tile
+        # contiguous index ranges, in partition order, sizes within one chunk
+        assert [r[1] for r in per_part] == [0] + [r[2] + 1 for r in per_part[:-1]]
+        assert all(r[3] == r[2] - r[1] + 1 for r in per_part)
+        assert max(r[3] for r in per_part) - min(r[3] for r in per_part) <= 1
+        # so a partition holds at most one 32² tile above its even share
+        tile = 32 * 32 * arr.shape[0] * arr.itemsize
+        assert max(r[4] for r in per_part) <= split + tile
         jobs = _jobs_of(spark, "tiff-multi-wave", lambda: TB.color_correct_tiff(
             spark, src, out, OPS
         ))
         _one_wave_tif(spark, src, ref, monkeypatch)
     waves = [min(par, n_parts - s) for s in range(0, n_parts, par)]
-    assert len(jobs) == 1 + len(waves)
-    assert [_result_tasks(spark, j) for j in jobs[1:]] == waves
+    assert [_result_tasks(spark, j) for j in jobs] == waves
     got, _ = T.read_tiff(out)
     assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))
     assert filecmp.cmp(out, ref, shallow=False)
+
+
+def test_tiff_output_bytes_independent_of_partitioning(spark, rasters, tmp_path):
+    """Two ``maxPartitionBytes`` settings (4 and more than 8 partitions at
+    ``local[4]``) write the same container byte for byte: chunks reach the
+    writer in index order whatever the split."""
+    src, arr = rasters["rgb16"]
+    outs = []
+    for split in (1 << 30, _multi_wave_split(spark, arr)):
+        outs.append(str(tmp_path / f"out_{split}.tif"))
+        with _max_partition_bytes(spark, split):
+            TB.color_correct_tiff(spark, src, outs[-1], OPS)
+    assert filecmp.cmp(*outs, shallow=False)
+
+
+def _sunk_plans(spark, monkeypatch, src: str, dst: str, co: dict) -> list[str]:
+    """Physical plans of the encode DataFrames ``color_correct_tiff`` sinks."""
+    plans = []
+    real = TB._collect
+
+    def record(enc, *args):
+        plans.append(enc._jdf.queryExecution().executedPlan().toString())
+        return real(enc, *args)
+
+    monkeypatch.setattr(TB, "_collect", record)
+    TB.color_correct_tiff(spark, src, dst, OPS, creation_options=co)
+    return plans
+
+
+def test_color_correct_tiff_plan_shape(spark, rasters, tmp_path, monkeypatch):
+    """Same grid: decode → color → encode is ONE Python-eval node and the
+    plan has no Exchange. Re-grid: one ``mapInPandas`` (decode → color →
+    split) ahead of the shuffle and one ``applyInPandas``."""
+    src, _ = rasters["rgb8"]
+    dst = str(tmp_path / "out.tif")
+    (plan,) = _sunk_plans(spark, monkeypatch, src, dst, {})
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
+    assert "Python" not in plan.replace("MapInPandas", "")
+    co = {"blockxsize": "64", "blockysize": "64"}
+    (plan,) = _sunk_plans(spark, monkeypatch, src, dst, co)
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_color_correct_tiff_domain_error_fails_fast(spark, rasters, tmp_path):
+    """A chain that passes driver validation but violates an op's domain
+    (sigmoidal bias > 1) raises the op's ValueError from the fused task
+    and leaves no ``dst``."""
+    src, _ = rasters["rgb8"]
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    with pytest.raises(Exception, match="ValueError: bias must be"):
+        TB.color_correct_tiff(spark, src, str(out_dir / "out.tif"), "sigmoidal rgb 5 1.5")
+    assert os.listdir(out_dir) == []
 
 
 def test_sink_wave_length():
@@ -660,8 +721,10 @@ def test_corrupt_tile_leaves_no_partial_output(spark, rasters, tmp_path):
         jobs = _jobs_of(spark, "tiff-late-failure", lambda: fails_cleanly(src, "out_last"))
     st = spark.sparkContext.statusTracker()
     done = [j for j in jobs if st.getJobInfo(j).status == "SUCCEEDED"]
-    # the shuffle-map job and every wave before the last one
-    assert len(done) == math.ceil(n_parts / par) > 1
+    # one job per wave; every wave before the last one succeeded
+    n_waves = math.ceil(n_parts / par)
+    assert len(jobs) == n_waves > 1
+    assert len(done) == n_waves - 1
 
 
 def test_cli_via_tables_equals_direct_tif(spark, rasters, tmp_path):
@@ -696,7 +759,7 @@ def _cli(*argv: str) -> subprocess.CompletedProcess:
 
 def test_cli_color_tif_j1_j2_equal(tmp_path):
     """Reference test_color_cli/test_atmos_cli: -j1 and -j2 outputs are
-    pixel-identical (determinism across parallelism)."""
+    identical (determinism across parallelism), here byte for byte."""
     o1, o2 = str(tmp_path / "j1.tif"), str(tmp_path / "j2.tif")
     r1 = _cli("color", "-d", "uint8", "-j", "1", f"{REF}/rgb8.tif", o1,
               "gamma 3 1.85", "gamma 1,2 1.95")
@@ -704,9 +767,7 @@ def test_cli_color_tif_j1_j2_equal(tmp_path):
     r2 = _cli("color", "-d", "uint8", "-j", "2", f"{REF}/rgb8.tif", o2,
               "gamma 3 1.85", "gamma 1,2 1.95")
     assert r2.returncode == 0, r2.stderr[-2000:]
-    a1, _ = T.read_tiff(o1)
-    a2, _ = T.read_tiff(o2)
-    assert np.array_equal(a1, a2)
+    assert filecmp.cmp(o1, o2, shallow=False)
 
 
 def test_cli_ingest_export_subcommands(tmp_path):
