@@ -8,13 +8,17 @@ Spark-first shape — a ``.tif`` is a lazy DataFrame source and a sink:
 - **source** (:func:`tiff_rows`) — the DRIVER parses only the TIFF
   structure (header, IFD, tag payloads — wherever they live in the file;
   libtiff writes them at the tail) through a range-read fetch, turning
-  the raster into a DataFrame of chunk byte-ranges; each TASK then reads
-  and decodes its own disjoint tile ranges (``mapInPandas``) and emits
-  image-table rows. A 100 GB (Big)TIFF on a shared filesystem reads as a
-  fully parallel scan — pixel data never passes through the driver.
-  There is at least one partition per core, and as many more as keep
-  a partition's even share of the decoded pixels within
-  ``spark.sql.files.maxPartitionBytes``.
+  the raster into a ``spark.range`` of chunk indices split into
+  contiguous ranges; each TASK then reads and decodes its own disjoint
+  tile ranges (``mapInPandas``) and emits image-table rows. A 100 GB
+  (Big)TIFF on a shared filesystem reads as a fully parallel scan —
+  pixel data never passes through the driver. There is at least one
+  partition per core, and as many more as keep a partition's even share
+  of the decoded pixels within ``spark.sql.files.maxPartitionBytes``.
+- **chunk streams** — the decode loop of the source and the first stage
+  of the sink are generators over ``(chunk index, pixel array)`` pairs,
+  so a source, the color chain and a sink compose inside ONE Python pass
+  instead of one ``mapInPandas`` stage each.
 - **sink** (:func:`write_tiff_rows`) — tasks encode + compress their
   tiles (the CPU-heavy step); the driver collects the opaque compressed
   payloads in waves (one Spark job per wave, its tasks running at once)
@@ -26,8 +30,11 @@ Spark-first shape — a ``.tif`` is a lazy DataFrame source and a sink:
   the raster size. A single
   .tif has one writer by construction — the same constraint rasterio has.
   Containers past 4 GiB need ``--co bigtiff=yes``.
-- ``rio color in.tif out.tif`` (:func:`color_correct_tiff`) is source →
-  ``color_correct`` → sink: one Spark plan, no intermediate table.
+- ``rio color in.tif out.tif`` (:func:`color_correct_tiff`) is read →
+  decode → color chain → encode in ONE Python crossing per chunk (the
+  reference worker loop's single pass), no intermediate table. Chunks
+  reach the container in index order, so the output bytes do not depend
+  on the partition count.
 - **re-tiling** — when creation options change the chunk grid
   (blockxsize/blockysize/tiled), pixel blocks are re-gridded on
   executors: each source chunk splits into target-aligned pieces,
@@ -294,8 +301,8 @@ def _encode_regrid(
             tw, th = pout.width, (pout.rows_per_strip or pout.height)
             across = 1
         for pairs in chunks(batches):
-            out = {k: [] for k in ("tgt", "y0", "x0", "h", "w", "block")}
             for idx, arr in pairs:
+                out = {k: [] for k in ("tgt", "y0", "x0", "h", "w", "block")}
                 r0, c0 = in_grid[idx][0], in_grid[idx][1]
                 h, w = arr.shape[1], arr.shape[2]
                 ty0, ty1 = r0 // th, (r0 + h - 1) // th
@@ -320,7 +327,7 @@ def _encode_regrid(
                         out["h"].append(b - a)
                         out["w"].append(d - c)
                         out["block"].append(sub.tobytes())
-            yield pd.DataFrame(out)
+                yield pd.DataFrame(out)  # one source chunk's pieces
 
     pieces = df.mapInPandas(
         split_rows, schema="tgt int, y0 int, x0 int, h int, w int, block binary"
@@ -329,7 +336,7 @@ def _encode_regrid(
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         out_grid = T._chunk_grid(pout)
         tgt = int(key[0])
-        _r0, _c0, vw, vh, _sw, _sh = out_grid[tgt]
+        vw, vh = out_grid[tgt][2:4]
         dt = pout.np_dtype
         tile = np.zeros((pout.count, vh, vw), dtype=dt)
         for r in pdf.itertuples(index=False):
