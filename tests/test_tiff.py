@@ -517,14 +517,6 @@ def _result_tasks(spark, job_id: int) -> int:
     return st.getStageInfo(max(st.getJobInfo(job_id).stageIds)).numTasks
 
 
-def _one_wave_tif(spark, src: str, dst: str, monkeypatch) -> None:
-    """``color_correct_tiff`` with its plan collected in ONE job, payloads
-    added in partition order: the container a single wave would write."""
-    with monkeypatch.context() as m:
-        m.setattr(TB, "_wave_length", lambda parallelism, n_parts, *_: n_parts)
-        TB.color_correct_tiff(spark, src, dst, OPS)
-
-
 def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
     """A raster of at most ``defaultParallelism`` partitions runs exactly
     ONE Spark job: one collect wave, no shuffle ahead of it."""
@@ -539,17 +531,20 @@ def test_tiff_sink_one_wave_job_count(spark, rasters, tmp_path):
     assert _result_tasks(spark, jobs[0]) == n_parts
 
 
-def test_tiff_sink_multi_wave(spark, rasters, tmp_path, monkeypatch):
+def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
     """Below ``maxPartitionBytes`` of decoded pixels per partition the sink
     runs waves of at most ``defaultParallelism`` tasks; partitions hold
-    contiguous chunk ranges; the container is the replay's pixels and the
-    one-wave container byte for byte."""
+    contiguous chunk ranges; the container is the replay's pixels and,
+    byte for byte, the container of a one-wave run at the session's own
+    ``maxPartitionBytes``: the bytes do not depend on the partition
+    count."""
     import pyspark.sql.functions as F
 
     src, arr = rasters["rgb8"]
     par = spark.sparkContext.defaultParallelism
     split = _multi_wave_split(spark, arr)
     out, ref = str(tmp_path / "out.tif"), str(tmp_path / "one_wave.tif")
+    TB.color_correct_tiff(spark, src, ref, OPS)
     with _max_partition_bytes(spark, split):
         df = TB.tiff_rows(spark, src)[0]
         n_parts = df.rdd.getNumPartitions()
@@ -570,25 +565,11 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path, monkeypatch):
         jobs = _jobs_of(spark, "tiff-multi-wave", lambda: TB.color_correct_tiff(
             spark, src, out, OPS
         ))
-        _one_wave_tif(spark, src, ref, monkeypatch)
     waves = [min(par, n_parts - s) for s in range(0, n_parts, par)]
     assert [_result_tasks(spark, j) for j in jobs] == waves
     got, _ = T.read_tiff(out)
     assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))
     assert filecmp.cmp(out, ref, shallow=False)
-
-
-def test_tiff_output_bytes_independent_of_partitioning(spark, rasters, tmp_path):
-    """Two ``maxPartitionBytes`` settings (4 and more than 8 partitions at
-    ``local[4]``) write the same container byte for byte: chunks reach the
-    writer in index order whatever the split."""
-    src, arr = rasters["rgb16"]
-    outs = []
-    for split in (1 << 30, _multi_wave_split(spark, arr)):
-        outs.append(str(tmp_path / f"out_{split}.tif"))
-        with _max_partition_bytes(spark, split):
-            TB.color_correct_tiff(spark, src, outs[-1], OPS)
-    assert filecmp.cmp(*outs, shallow=False)
 
 
 def _sunk_plans(spark, monkeypatch, src: str, dst: str, co: dict) -> list[str]:
@@ -624,12 +605,14 @@ def test_color_correct_tiff_plan_shape(spark, rasters, tmp_path, monkeypatch):
 
 def test_color_correct_tiff_domain_error_fails_fast(spark, rasters, tmp_path):
     """A chain that passes driver validation but violates an op's domain
-    (sigmoidal bias > 1) raises the op's ValueError from the fused task
-    and leaves no ``dst``."""
+    (sigmoidal bias > 1) fails the fused task with the op's ValueError,
+    which the driver raises as a PythonException, and leaves no ``dst``."""
+    from pyspark.errors import PythonException
+
     src, _ = rasters["rgb8"]
     out_dir = tmp_path / "out"
     out_dir.mkdir()
-    with pytest.raises(Exception, match="ValueError: bias must be"):
+    with pytest.raises(PythonException, match="ValueError: bias must be"):
         TB.color_correct_tiff(spark, src, str(out_dir / "out.tif"), "sigmoidal rgb 5 1.5")
     assert os.listdir(out_dir) == []
 
