@@ -1,9 +1,9 @@
 """Vectorized colorspace conversions (RGB / XYZ / LAB / LCH / LUV).
 
 Numeric semantics pinned to the reference's Cython kernel
-(/root/reference/rio_color/colorspace.pyx), re-derived as whole-array NumPy
-expressions — the per-pixel ``for i/for j`` loops (colorspace.pyx:90-98,
-120-132) become ~10 array ops per conversion hop. Behavioral pins:
+(rio_color/colorspace.pyx), re-derived as NumPy array passes
+— the per-pixel ``for i/for j`` loops (colorspace.pyx:90-98, 120-132) become
+~10 in-place ufunc passes per conversion hop. Behavioral pins:
 
 - sRGB companding piecewise (colorspace.pyx:265-277, compile-time flag
   ``SRGB_COMPAND=True`` at colorspace.pyx:255)
@@ -58,32 +58,127 @@ def _srgb_inverse_compand(c):
         return np.where(c <= 0.04045, c / 12.92, ((c + 0.055) / 1.055) ** 2.4)
 
 
-def _linear_rgb_to_xyz(rl, gl, bl):
-    """linear-RGB → XYZ with the reference's in-stage X/xn, Z/zn norm."""
-    x = (rl * 0.4124564 + gl * 0.3575761 + bl * 0.1804375) / _XN
-    y = rl * 0.2126729 + gl * 0.7151522 + bl * 0.0721750
-    z = (rl * 0.0193339 + gl * 0.1191920 + bl * 0.9503041) / _ZN
-    return x, y, z
+#: the linear-RGB → XYZ and XYZ → linear-RGB matrix rows (colorspace.pyx)
+_RGB_TO_XYZ = (
+    (0.4124564, 0.3575761, 0.1804375),
+    (0.2126729, 0.7151522, 0.0721750),
+    (0.0193339, 0.1191920, 0.9503041),
+)
+_XYZ_TO_RGB = (
+    (3.2404542, -1.5371385, -0.4985314),
+    (-0.9692660, 1.8760108, 0.0415560),
+    (0.0556434, -0.2040259, 1.0572252),
+)
+#: slope of the LAB → XYZ toe, folded left to right as 3 * δ * δ
+_TOE = 3 * _DELTA * _DELTA
+
+# The conversion legs below work in place on caller-owned float64 buffers
+# (``t`` a scratch array, ``m`` a bool mask of the same shape): no leg
+# allocates, so a slab's whole working set stays cache-resident. Each keeps
+# the reference formula's IEEE op sequence — operand order of every add,
+# division where it divides, t*t*t where it cubes — and a branch writes
+# the taken side over the other with np.copyto(where=), which selects the
+# same values np.where would. The transcendental ufuncs (cbrt, power) run
+# strictly in place: NumPy's SIMD loops fall back to scalar libm, whose
+# last bit can differ, when the output buffer merely touches the input's.
+
+
+def _mix_into(dst, t, u, v, w, row):
+    """dst = u·row[0] + v·row[1] + w·row[2], summed left to right.
+    ``dst`` must not alias ``v`` or ``w``."""
+    np.multiply(u, row[0], out=dst)
+    np.add(dst, np.multiply(v, row[1], out=t), out=dst)
+    np.add(dst, np.multiply(w, row[2], out=t), out=dst)
+
+
+def _linear_rgb_to_xyz_into(rl, gl, bl, x, y, z, t):
+    """linear-RGB → XYZ into ``x, y, z``, with the reference's in-stage
+    X/xn, Z/zn norm."""
+    for dst, row in zip((x, y, z), _RGB_TO_XYZ):
+        _mix_into(dst, t, rl, gl, bl, row)
+    np.divide(x, _XN, out=x)
+    np.divide(z, _ZN, out=z)
+
+
+def _xyz_to_lab_(x, y, z, t, m):
+    """XYZ → LAB in place; returns the buffers as (L, a, b).
+
+    np.cbrt == pow(v, 1/3) to float ulps and runs ~1.8x faster (SIMD cube
+    root vs scalar libm pow); the ulp delta is far inside the oracle twins'
+    6/7-digit rounding and the reference-golden tolerances."""
+    for v in (x, y, z):
+        np.greater(v, _T0, out=m)
+        np.logical_not(m, out=m)  # the toe where v > T0 fails, NaN included
+        np.multiply(v, _ALPHA, out=t)
+        np.add(t, _BINTERCEPT, out=t)
+        np.cbrt(v, out=v)
+        np.copyto(v, t, where=m)
+    np.subtract(x, y, out=x)
+    np.multiply(x, 500, out=x)  # a = 500 (fx - fy)
+    np.subtract(y, z, out=z)
+    np.multiply(z, 200, out=z)  # b = 200 (fy - fz)
+    np.multiply(y, 116, out=y)
+    np.subtract(y, 16, out=y)  # L = 116 fy - 16
+    return y, x, z
+
+
+def _lab_to_xyz_(L, a, b, t, m):
+    """LAB → XYZ in place; returns the buffers as (x, y, z).
+
+    t*t*t == t**3 within 1 ulp at ~2.3x the speed (two multiplies vs a
+    scalar libm pow pass); rounding on both oracle sides absorbs it."""
+    np.add(L, 16, out=L)
+    np.divide(L, 116.0, out=L)  # ty = (L + 16) / 116
+    np.divide(a, 500.0, out=a)
+    np.add(L, a, out=a)  # tx = ty + a / 500
+    np.divide(b, 200.0, out=b)
+    np.subtract(L, b, out=b)  # tz = ty - b / 200
+    for v in (a, L, b):
+        np.greater(v, _DELTA, out=m)
+        np.multiply(v, v, out=t)
+        np.multiply(t, v, out=t)
+        np.subtract(v, _BINTERCEPT, out=v)
+        np.multiply(v, _TOE, out=v)
+        np.copyto(v, t, where=m)
+    return a, L, b
+
+
+def _xyz_to_rgb_into(x, y, z, r, g, b, t, m):
+    """XYZ → sRGB into ``r, g, b``; ``x`` and ``z`` are rescaled in place.
+
+    The hard clamp for float drift (colorspace.pyx:411-423) lets NaN pass
+    through untouched, matching the C comparison chain's NaN behavior."""
+    np.multiply(x, _XN, out=x)
+    np.multiply(z, _ZN, out=z)
+    for dst, row in zip((r, g, b), _XYZ_TO_RGB):
+        _mix_into(dst, t, x, y, z, row)
+        np.less_equal(dst, 0.0031308, out=m)
+        np.multiply(dst, 12.92, out=t)
+        with np.errstate(invalid="ignore"):  # negative bases take the toe
+            np.power(dst, 1 / 2.4, out=dst)
+        np.multiply(dst, 1.055, out=dst)
+        np.subtract(dst, 0.055, out=dst)
+        np.copyto(dst, t, where=m)
+        np.clip(dst, 0.0, 1.0, out=dst)
+
+
+def _work(one, two, three):
+    """Float64 copies of three channels plus a scratch array and a mask:
+    the in-place legs' operands when a route must keep its inputs."""
+    one, two, three = (np.array(v, dtype=np.float64) for v in (one, two, three))
+    return one, two, three, np.empty_like(one), np.empty(one.shape, dtype=bool)
 
 
 def _rgb_to_xyz(r, g, b):
     # sRGB inverse companding, then linear-RGB → XYZ
-    return _linear_rgb_to_xyz(
-        _srgb_inverse_compand(r),
-        _srgb_inverse_compand(g),
-        _srgb_inverse_compand(b),
-    )
+    rl, gl, bl = (_srgb_inverse_compand(c) for c in (r, g, b))
+    x, y, z, t = (np.empty(np.shape(rl)) for _ in range(4))
+    _linear_rgb_to_xyz_into(rl, gl, bl, x, y, z, t)
+    return x, y, z
 
 
 def _xyz_to_lab(x, y, z):
-    # np.cbrt == pow(t, 1/3) to float ulps and runs ~1.8x faster (SIMD
-    # cube root vs scalar libm pow); the ulp delta is far inside the
-    # oracle twins' 6/7-digit rounding and the reference-golden tolerances
-    with np.errstate(invalid="ignore"):
-        fx = np.where(x > _T0, np.cbrt(x), _ALPHA * x + _BINTERCEPT)
-        fy = np.where(y > _T0, np.cbrt(y), _ALPHA * y + _BINTERCEPT)
-        fz = np.where(z > _T0, np.cbrt(z), _ALPHA * z + _BINTERCEPT)
-    return 116 * fy - 16, 500 * (fx - fy), 200 * (fy - fz)
+    return _xyz_to_lab_(*_work(x, y, z))
 
 
 def _lab_to_lch(L, a, b):
@@ -97,31 +192,14 @@ def _lch_to_lab(L, C, H):
 
 
 def _lab_to_xyz(L, a, b):
-    tx = (L + 16) / 116.0 + a / 500.0
-    ty = (L + 16) / 116.0
-    tz = (L + 16) / 116.0 - b / 200.0
-    # t*t*t == t**3 within 1 ulp at ~2.3x the speed (two multiplies vs a
-    # scalar libm pow pass); rounding on both oracle sides absorbs it
-    with np.errstate(invalid="ignore"):
-        x = np.where(tx > _DELTA, tx * tx * tx, 3 * _DELTA * _DELTA * (tx - _BINTERCEPT))
-        y = np.where(ty > _DELTA, ty * ty * ty, 3 * _DELTA * _DELTA * (ty - _BINTERCEPT))
-        z = np.where(tz > _DELTA, tz * tz * tz, 3 * _DELTA * _DELTA * (tz - _BINTERCEPT))
-    return x, y, z
+    return _lab_to_xyz_(*_work(L, a, b))
 
 
 def _xyz_to_rgb(x, y, z):
-    x = x * _XN
-    z = z * _ZN
-    rlin = x * 3.2404542 + y * -1.5371385 + z * -0.4985314
-    glin = x * -0.9692660 + y * 1.8760108 + z * 0.0415560
-    blin = x * 0.0556434 + y * -0.2040259 + z * 1.0572252
-    with np.errstate(invalid="ignore"):
-        r = np.where(rlin <= 0.0031308, 12.92 * rlin, 1.055 * rlin ** (1 / 2.4) - 0.055)
-        g = np.where(glin <= 0.0031308, 12.92 * glin, 1.055 * glin ** (1 / 2.4) - 0.055)
-        b = np.where(blin <= 0.0031308, 12.92 * blin, 1.055 * blin ** (1 / 2.4) - 0.055)
-    # hard clamp for float drift (colorspace.pyx:411-423); NaN passes through
-    # np.clip untouched, matching the C comparison chain's NaN behavior
-    return np.clip(r, 0.0, 1.0), np.clip(g, 0.0, 1.0), np.clip(b, 0.0, 1.0)
+    x, y, z, t, m = _work(x, y, z)
+    r, g, b = (np.empty(x.shape) for _ in range(3))
+    _xyz_to_rgb_into(x, y, z, r, g, b, t, m)
+    return r, g, b
 
 
 def _xyz_to_luv(x, y, z):
@@ -243,36 +321,46 @@ def convert_arr(arr: np.ndarray, src, dst) -> np.ndarray:
     return out
 
 
-def saturate_rgb(arr: np.ndarray, satmult: float) -> np.ndarray:
+def saturate_rgb(arr: np.ndarray, satmult: float, out=None) -> np.ndarray:
     """RGB → LCH, scale chroma by ``satmult``, LCH → RGB — computed via
     the LAB shortcut: C = hypot(a, b) and H = atan2(b, a), so scaling C
     with H fixed is EXACTLY (a, b) → (satmult·a, satmult·b); the
     LAB→LCH→LAB legs cancel algebraically. This removes four
-    transcendental passes (sqrt, atan2, cos, sin) per image versus the
-    reference's literal per-pixel LCH loop (colorspace.pyx:103-134) —
-    measured 3.5 s of a 9.8 s local[8] flagship-pipeline window — while
-    agreeing with it to float ulps (pinned in tests/test_colorspace.py).
+    transcendental passes (sqrt, atan2, cos, sin) per pixel versus the
+    reference's literal per-pixel LCH loop (colorspace.pyx:103-134),
+    while agreeing with it to float ulps (pinned in
+    tests/test_colorspace.py).
+
+    Companding each band, then :func:`saturate_rgb_from_linear`. The
+    result goes to ``out`` (a new (3, H, W) float64 array when None);
+    ``out`` may be ``arr`` itself.
     """
     _check_arr(arr)
     return saturate_rgb_from_linear(
-        _srgb_inverse_compand(arr[0]),
-        _srgb_inverse_compand(arr[1]),
-        _srgb_inverse_compand(arr[2]),
-        satmult,
+        *(_srgb_inverse_compand(arr[i]) for i in range(3)), satmult, out=out
     )
 
 
-def saturate_rgb_from_linear(rl, gl, bl, satmult: float) -> np.ndarray:
-    """:func:`saturate_rgb` over already-inverse-companded linear channels.
+def saturate_rgb_from_linear(rl, gl, bl, satmult: float, out=None) -> np.ndarray:
+    """:func:`saturate_rgb` over already-inverse-companded linear channels:
+    linear RGB → XYZ → LAB, (a, b) · satmult, LAB → XYZ → sRGB, clip.
 
     Split out so the quantized-input LUT path (operators/color.py) can fold
-    the three companding ``pow(x, 2.4)`` passes into its per-band tables;
-    the op sequence from the linear channels onward is byte-identical to
-    :func:`saturate_rgb` (which now delegates here)."""
-    L, a, b = _xyz_to_lab(*_linear_rgb_to_xyz(rl, gl, bl))
-    r, g, bb = convert_channels(
-        L, a * satmult, b * satmult, ColorSpace.lab, ColorSpace.rgb
-    )
-    out = np.empty((3,) + np.shape(rl), dtype=np.float64)
-    out[0], out[1], out[2] = r, g, bb
+    the three companding ``pow(x, 2.4)`` passes into its per-band tables.
+    One in-place pass over four scratch channels and a mask: the result is
+    written to ``out`` (a new ``(3,) + rl.shape`` float64 array when None),
+    which may alias ``rl, gl, bl`` — they are read in full before ``out``
+    is written. Same op sequence, so the same bits, as the whole-array
+    form in tests/twins.py."""
+    shape = np.shape(rl)
+    if out is None:
+        out = np.empty((3,) + shape, dtype=np.float64)
+    x, y, z, t = (np.empty(shape) for _ in range(4))
+    m = np.empty(shape, dtype=bool)
+    _linear_rgb_to_xyz_into(rl, gl, bl, x, y, z, t)
+    L, a, b = _xyz_to_lab_(x, y, z, t, m)
+    np.multiply(a, satmult, out=a)
+    np.multiply(b, satmult, out=b)
+    x, y, z = _lab_to_xyz_(L, a, b, t, m)
+    _xyz_to_rgb_into(x, y, z, out[0], out[1], out[2], t, m)
     return out

@@ -1,9 +1,10 @@
 """Reference formulations the tests compare the engine against.
 
 The engine (rio_color_spark/) keeps one form per primitive: SQL-text hash
-builders, Column tile math, NumPy cell encoding. These are the second
-forms — NumPy MinHash/SimHash, a per-bit Column SimHash, the inverse tile
-and cell maps — and none of them is on an execution path; tests assert the
+builders, Column tile math, NumPy cell encoding, the in-place saturation
+kernel. These are the second forms — NumPy MinHash/SimHash, a per-bit
+Column SimHash, the inverse tile and cell maps, the whole-array saturation
+sequence — and none of them is on an execution path; tests assert the
 engine matches them value for value.
 """
 
@@ -18,6 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from rio_color_spark.functions import cells as C
+from rio_color_spark.functions import colorspace as CS
 from rio_color_spark.functions import texthash as TH
 
 _WS = re.compile(TH.WS_REGEX)
@@ -111,3 +113,87 @@ def cell_center_lonlat(cell, level: int = C.DEFAULT_LEVEL):
     lon = np.degrees(np.arctan2(y, x))
     lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
     return lon, lat
+
+
+# -- saturation ---------------------------------------------------------------
+#
+# The whole-array form of colorspace.saturate_rgb_from_linear: every hop
+# allocates its results, branches are np.where over both sides. The op
+# sequence (operand order of every add and multiply, division vs
+# reciprocal, t*t*t vs t**3) is the one the engine's in-place kernel must
+# reproduce bit for bit.
+
+
+def srgb_inverse_compand(c):
+    with np.errstate(invalid="ignore"):
+        return np.where(c <= 0.04045, c / 12.92, ((c + 0.055) / 1.055) ** 2.4)
+
+
+def linear_rgb_to_xyz(rl, gl, bl):
+    x = (rl * 0.4124564 + gl * 0.3575761 + bl * 0.1804375) / CS._XN
+    y = rl * 0.2126729 + gl * 0.7151522 + bl * 0.0721750
+    z = (rl * 0.0193339 + gl * 0.1191920 + bl * 0.9503041) / CS._ZN
+    return x, y, z
+
+
+def xyz_to_lab(x, y, z):
+    with np.errstate(invalid="ignore"):
+        fx = np.where(x > CS._T0, np.cbrt(x), CS._ALPHA * x + CS._BINTERCEPT)
+        fy = np.where(y > CS._T0, np.cbrt(y), CS._ALPHA * y + CS._BINTERCEPT)
+        fz = np.where(z > CS._T0, np.cbrt(z), CS._ALPHA * z + CS._BINTERCEPT)
+    return 116 * fy - 16, 500 * (fx - fy), 200 * (fy - fz)
+
+
+def lab_to_xyz(L, a, b):
+    d, bi = CS._DELTA, CS._BINTERCEPT
+    tx = (L + 16) / 116.0 + a / 500.0
+    ty = (L + 16) / 116.0
+    tz = (L + 16) / 116.0 - b / 200.0
+    with np.errstate(invalid="ignore"):
+        x = np.where(tx > d, tx * tx * tx, 3 * d * d * (tx - bi))
+        y = np.where(ty > d, ty * ty * ty, 3 * d * d * (ty - bi))
+        z = np.where(tz > d, tz * tz * tz, 3 * d * d * (tz - bi))
+    return x, y, z
+
+
+def xyz_to_rgb(x, y, z):
+    x = x * CS._XN
+    z = z * CS._ZN
+    rlin = x * 3.2404542 + y * -1.5371385 + z * -0.4985314
+    glin = x * -0.9692660 + y * 1.8760108 + z * 0.0415560
+    blin = x * 0.0556434 + y * -0.2040259 + z * 1.0572252
+    with np.errstate(invalid="ignore"):
+        r = np.where(rlin <= 0.0031308, 12.92 * rlin, 1.055 * rlin ** (1 / 2.4) - 0.055)
+        g = np.where(glin <= 0.0031308, 12.92 * glin, 1.055 * glin ** (1 / 2.4) - 0.055)
+        b = np.where(blin <= 0.0031308, 12.92 * blin, 1.055 * blin ** (1 / 2.4) - 0.055)
+    return np.clip(r, 0.0, 1.0), np.clip(g, 0.0, 1.0), np.clip(b, 0.0, 1.0)
+
+
+def saturate_rgb_from_linear(rl, gl, bl, satmult: float) -> np.ndarray:
+    """Linear RGB → XYZ → LAB, (a, b) · satmult, LAB → XYZ → sRGB, clip."""
+    L, a, b = xyz_to_lab(*linear_rgb_to_xyz(rl, gl, bl))
+    r, g, bb = xyz_to_rgb(*lab_to_xyz(L, a * satmult, b * satmult))
+    out = np.empty((3,) + np.shape(rl), dtype=np.float64)
+    out[0], out[1], out[2] = r, g, bb
+    return out
+
+
+def saturate_rgb(arr: np.ndarray, satmult: float) -> np.ndarray:
+    """(3, ...) sRGB in [0, 1] → saturated sRGB (the float-path twin)."""
+    return saturate_rgb_from_linear(
+        *(srgb_inverse_compand(arr[i]) for i in range(3)), satmult
+    )
+
+
+def apply_chain(ops_string: str, arr: np.ndarray) -> np.ndarray:
+    """A DSL chain over a float (C, H, W) array, op by op, with every
+    saturation run by the twin above instead of the engine kernel."""
+    from rio_color_spark.plans.dsl import parse_ops_spec
+
+    out = arr.copy()
+    for spec in parse_ops_spec(ops_string):
+        if spec.rgb_op:
+            out[0:3] = saturate_rgb(out[0:3], spec.kwargs["proportion"])
+        else:
+            spec.apply_into(out, out)
+    return out
