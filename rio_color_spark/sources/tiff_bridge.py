@@ -137,6 +137,24 @@ def read_structure(tif_path: str) -> tuple[T.TiffProfile, list[T.ChunkRef]]:
         return T.read_ifd_fetch(T.file_fetch(f, prefix))
 
 
+def _partition_count(
+    spark: SparkSession, decoded: int, n_chunks: int, least: int
+) -> int:
+    """Partitions for ``n_chunks`` chunks of ``decoded`` pixel bytes: at
+    least ``least``, and enough more that an even share is within
+    ``spark.sql.files.maxPartitionBytes``, so a sink wave of them is a
+    bounded share of the raster whatever its size; at most one per chunk."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, min(n_chunks, max(least, -(-decoded // split))))
+
+
+def _payload_bytes(prof: T.TiffProfile) -> int:
+    """Uncompressed bytes of every chunk of ``prof``'s grid (edge chunks
+    padded to the full chunk size, as they are encoded)."""
+    raw = sum(sw * sh for *_, sw, sh in T._chunk_grid(prof))
+    return raw * prof.count * prof.np_dtype.itemsize
+
+
 def _tiff_chunks(spark: SparkSession, tif_path: str):
     """GeoTIFF → (chunk-id DataFrame, profile, chunk stream).
 
@@ -157,15 +175,9 @@ def _tiff_chunks(spark: SparkSession, tif_path: str):
     # byte range in each band
     offsets = np.array([c.offset for c in chunks], np.int64).reshape(n_planes, n).T
     nbytes = np.array([c.nbytes for c in chunks], np.int64).reshape(n_planes, n).T
-    # at least one partition per core, and enough more that an even share
-    # of the decoded pixels is within maxPartitionBytes (a contiguous
-    # split adds at most one chunk): a sink wave of these partitions is a
-    # bounded share of the raster whatever its size
+    # a contiguous split adds at most one chunk to a partition's even share
     decoded = prof.width * prof.height * prof.count * prof.np_dtype.itemsize
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n_parts = max(1, min(n, max(
-        spark.sparkContext.defaultParallelism, -(-decoded // split)
-    )))
+    n_parts = _partition_count(spark, decoded, n, spark.sparkContext.defaultParallelism)
     ids = spark.range(n, numPartitions=n_parts)
 
     def decode(f, grid, pdf: pd.DataFrame) -> Iterator[tuple[int, np.ndarray]]:
@@ -282,7 +294,12 @@ def _encode_regrid(
 
     1. ``mapInPandas``: produce each source chunk, slice it along target
        chunk boundaries, emit (target index, placement, raw pixel block)
-    2. one shuffle co-locates each target chunk's pieces
+    2. one shuffle co-locates each target chunk's pieces. Where the
+       source's partition rule (:func:`_partition_count`) asks for more
+       partitions for the target's payload bytes than
+       ``spark.sql.shuffle.partitions``, the shuffle takes that many, so a
+       partition stays a bounded share of the raster whatever its size;
+       below it, Spark's own shuffle (which AQE may coalesce) stands
     3. ``applyInPandas`` per target chunk: assemble the valid region,
        ``encode_chunk``
 
@@ -348,6 +365,13 @@ def _encode_regrid(
              "payload": [pl for _, pl in pairs]}
         )
 
+    spark = df.sparkSession
+    n_parts = _partition_count(
+        spark, _payload_bytes(pout), len(T._chunk_grid(pout)),
+        spark.sparkContext.defaultParallelism,
+    )
+    if n_parts > int(spark.conf.get("spark.sql.shuffle.partitions")):
+        pieces = pieces.repartition(n_parts, "tgt")  # the groupBy reuses it
     return pieces.groupBy("tgt").applyInPandas(
         assemble, schema="index int, payload binary"
     )
@@ -409,10 +433,8 @@ def _collect(enc: DataFrame, out_prof: T.TiffProfile, tif_path: str) -> None:
     """(index, payload) rows → the container at ``tif_path``, in waves."""
     rdd = enc.rdd
     sc, n_parts = rdd.context, rdd.getNumPartitions()
-    raw = sum(sw * sh for *_, sw, sh in T._chunk_grid(out_prof))
     wave = _wave_length(
-        sc.defaultParallelism, n_parts,
-        raw * out_prof.count * out_prof.np_dtype.itemsize, _result_limit(sc),
+        sc.defaultParallelism, n_parts, _payload_bytes(out_prof), _result_limit(sc)
     )
     with T.TiffChunkWriter(tif_path, out_prof) as writer:
         for start in range(0, n_parts, wave):

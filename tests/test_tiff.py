@@ -629,6 +629,51 @@ def test_sink_wave_length():
     assert TB._wave_length(16, 64, 8 * gib, gib) == 4  # 128 MiB partitions
 
 
+def _regrid64(arr: np.ndarray) -> tuple[int, int]:
+    """(padded payload bytes, chunk count) of ``arr`` re-gridded to 64² tiles."""
+    rows, cols = -(-arr.shape[1] // 64), -(-arr.shape[2] // 64)
+    return arr.shape[0] * rows * cols * 64 * 64 * arr.itemsize, rows * cols
+
+
+def _regrid_partitions(spark, monkeypatch, src: str, dst: str, co: dict) -> int:
+    """Run a re-grid ``color_correct_tiff``; the partitions of the encode
+    DataFrame it sinks."""
+    parts = []
+    real = TB._collect
+
+    def record(enc, *args):
+        parts.append(enc.rdd.getNumPartitions())
+        return real(enc, *args)
+
+    monkeypatch.setattr(TB, "_collect", record)
+    TB.color_correct_tiff(spark, src, dst, OPS, creation_options=co)
+    monkeypatch.setattr(TB, "_collect", real)
+    return parts[0]
+
+
+def test_regrid_shuffle_sized_by_bytes(spark, rasters, tmp_path, monkeypatch):
+    """A small raster's re-grid shuffle is Spark's own (at most
+    ``spark.sql.shuffle.partitions``, which AQE may coalesce). With a lower
+    ``maxPartitionBytes`` it takes as many more partitions as keep a
+    partition's even share of the payload within it. The pixels written do
+    not depend on the count (the tile order in the container does: tiles
+    arrive in hash-partition order)."""
+    src, arr = rasters["rgb8"]
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    co = {"blockxsize": "64", "blockysize": "64"}
+    ref, out = str(tmp_path / "ref.tif"), str(tmp_path / "out.tif")
+    payload, n_chunks = _regrid64(arr)
+    assert _regrid_partitions(spark, monkeypatch, src, ref, co) <= shuffle
+    split = payload // (2 * shuffle)
+    with _max_partition_bytes(spark, split):
+        n = _regrid_partitions(spark, monkeypatch, src, out, co)
+    assert n == min(n_chunks, -(-payload // split)) > shuffle
+    got, prof = T.read_tiff(out)
+    assert np.array_equal(got, T.read_tiff(ref)[0])
+    assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))
+    assert (prof.tile_width, prof.tile_height) == (64, 64)
+
+
 def test_tiff_sink_regrid_waves_fit_result_limit(spark, rasters, tmp_path, monkeypatch):
     """A re-grid sink over a shuffle of ``2 × defaultParallelism``
     partitions, under a result limit whose half holds two of its
