@@ -137,15 +137,15 @@ def read_structure(tif_path: str) -> tuple[T.TiffProfile, list[T.ChunkRef]]:
         return T.read_ifd_fetch(T.file_fetch(f, prefix))
 
 
-def _partition_count(
-    spark: SparkSession, decoded: int, n_chunks: int, least: int
-) -> int:
+def _partition_count(spark: SparkSession, decoded: int, n_chunks: int) -> int:
     """Partitions for ``n_chunks`` chunks of ``decoded`` pixel bytes: at
-    least ``least``, and enough more that an even share is within
+    least one per core, and enough more that an even share is within
     ``spark.sql.files.maxPartitionBytes``, so a sink wave of them is a
     bounded share of the raster whatever its size; at most one per chunk."""
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return max(1, min(n_chunks, max(least, -(-decoded // split))))
+    return max(1, min(n_chunks, max(
+        spark.sparkContext.defaultParallelism, -(-decoded // split)
+    )))
 
 
 def _payload_bytes(prof: T.TiffProfile) -> int:
@@ -177,8 +177,7 @@ def _tiff_chunks(spark: SparkSession, tif_path: str):
     nbytes = np.array([c.nbytes for c in chunks], np.int64).reshape(n_planes, n).T
     # a contiguous split adds at most one chunk to a partition's even share
     decoded = prof.width * prof.height * prof.count * prof.np_dtype.itemsize
-    n_parts = _partition_count(spark, decoded, n, spark.sparkContext.defaultParallelism)
-    ids = spark.range(n, numPartitions=n_parts)
+    ids = spark.range(n, numPartitions=_partition_count(spark, decoded, n))
 
     def decode(f, grid, pdf: pd.DataFrame) -> Iterator[tuple[int, np.ndarray]]:
         for s in pdf["id"].tolist():
@@ -366,10 +365,7 @@ def _encode_regrid(
         )
 
     spark = df.sparkSession
-    n_parts = _partition_count(
-        spark, _payload_bytes(pout), len(T._chunk_grid(pout)),
-        spark.sparkContext.defaultParallelism,
-    )
+    n_parts = _partition_count(spark, _payload_bytes(pout), len(T._chunk_grid(pout)))
     if n_parts > int(spark.conf.get("spark.sql.shuffle.partitions")):
         pieces = pieces.repartition(n_parts, "tgt")  # the groupBy reuses it
     return pieces.groupBy("tgt").applyInPandas(

@@ -1,5 +1,6 @@
 """The round-7 LUT fast path (operators/color._luts_for / _apply_slabbed)
-must be BIT-IDENTICAL to the reference per-slab float path for every
+must be BIT-IDENTICAL to the exact float path (the chain op by op,
+saturation by the whole-array twin) for every
 (chain, band count, dtype) shape the engine serves, including the
 saturation compand fold and the fail-fast fallback."""
 

@@ -572,13 +572,15 @@ def test_tiff_sink_multi_wave(spark, rasters, tmp_path):
     assert filecmp.cmp(out, ref, shallow=False)
 
 
-def _sunk_plans(spark, monkeypatch, src: str, dst: str, co: dict) -> list[str]:
-    """Physical plans of the encode DataFrames ``color_correct_tiff`` sinks."""
+def _sunk_plans(spark, monkeypatch, src: str, dst: str, co: dict) -> list[tuple[str, int]]:
+    """(physical plan, partition count) of each encode DataFrame
+    ``color_correct_tiff`` sinks."""
     plans = []
     real = TB._collect
 
     def record(enc, *args):
-        plans.append(enc._jdf.queryExecution().executedPlan().toString())
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+        plans.append((plan, enc.rdd.getNumPartitions()))
         return real(enc, *args)
 
     monkeypatch.setattr(TB, "_collect", record)
@@ -592,12 +594,12 @@ def test_color_correct_tiff_plan_shape(spark, rasters, tmp_path, monkeypatch):
     split) ahead of the shuffle and one ``applyInPandas``."""
     src, _ = rasters["rgb8"]
     dst = str(tmp_path / "out.tif")
-    (plan,) = _sunk_plans(spark, monkeypatch, src, dst, {})
+    ((plan, _),) = _sunk_plans(spark, monkeypatch, src, dst, {})
     assert plan.count("MapInPandas") == 1
     assert "Exchange" not in plan
     assert "Python" not in plan.replace("MapInPandas", "")
     co = {"blockxsize": "64", "blockysize": "64"}
-    (plan,) = _sunk_plans(spark, monkeypatch, src, dst, co)
+    ((plan, _),) = _sunk_plans(spark, monkeypatch, src, dst, co)
     assert plan.count("MapInPandas") == 1
     assert plan.count("FlatMapGroupsInPandas") == 1
     assert plan.count("Exchange hashpartitioning") == 1
@@ -635,22 +637,6 @@ def _regrid64(arr: np.ndarray) -> tuple[int, int]:
     return arr.shape[0] * rows * cols * 64 * 64 * arr.itemsize, rows * cols
 
 
-def _regrid_partitions(spark, monkeypatch, src: str, dst: str, co: dict) -> int:
-    """Run a re-grid ``color_correct_tiff``; the partitions of the encode
-    DataFrame it sinks."""
-    parts = []
-    real = TB._collect
-
-    def record(enc, *args):
-        parts.append(enc.rdd.getNumPartitions())
-        return real(enc, *args)
-
-    monkeypatch.setattr(TB, "_collect", record)
-    TB.color_correct_tiff(spark, src, dst, OPS, creation_options=co)
-    monkeypatch.setattr(TB, "_collect", real)
-    return parts[0]
-
-
 def test_regrid_shuffle_sized_by_bytes(spark, rasters, tmp_path, monkeypatch):
     """A small raster's re-grid shuffle is Spark's own (at most
     ``spark.sql.shuffle.partitions``, which AQE may coalesce). With a lower
@@ -663,11 +649,13 @@ def test_regrid_shuffle_sized_by_bytes(spark, rasters, tmp_path, monkeypatch):
     co = {"blockxsize": "64", "blockysize": "64"}
     ref, out = str(tmp_path / "ref.tif"), str(tmp_path / "out.tif")
     payload, n_chunks = _regrid64(arr)
-    assert _regrid_partitions(spark, monkeypatch, src, ref, co) <= shuffle
+    ((_, n),) = _sunk_plans(spark, monkeypatch, src, ref, co)
+    assert n <= shuffle
     split = payload // (2 * shuffle)
     with _max_partition_bytes(spark, split):
-        n = _regrid_partitions(spark, monkeypatch, src, out, co)
+        ((plan, n),) = _sunk_plans(spark, monkeypatch, src, out, co)
     assert n == min(n_chunks, -(-payload // split)) > shuffle
+    assert plan.count("Exchange") == 1
     got, prof = T.read_tiff(out)
     assert np.array_equal(got, T.read_tiff(ref)[0])
     assert np.array_equal(got, scale_dtype(compile_chain(OPS)(to_math_type(arr)), arr.dtype))

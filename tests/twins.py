@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from rio_color_spark.functions import cells as C
 from rio_color_spark.functions import colorspace as CS
 from rio_color_spark.functions import texthash as TH
+from rio_color_spark.plans.dsl import parse_ops_spec
 
 _WS = re.compile(TH.WS_REGEX)
 
@@ -188,8 +189,6 @@ def saturate_rgb(arr: np.ndarray, satmult: float) -> np.ndarray:
 def apply_chain(ops_string: str, arr: np.ndarray) -> np.ndarray:
     """A DSL chain over a float (C, H, W) array, op by op, with every
     saturation run by the twin above instead of the engine kernel."""
-    from rio_color_spark.plans.dsl import parse_ops_spec
-
     out = arr.copy()
     for spec in parse_ops_spec(ops_string):
         if spec.rgb_op:
