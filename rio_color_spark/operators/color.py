@@ -28,6 +28,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from rio_color_spark.functions import colorspace
 from rio_color_spark.functions.utils import scale_dtype, to_math_type
@@ -267,17 +270,24 @@ def color_correct(
     return df.mapInPandas(run, schema=schema)
 
 
-INDEX_COLS_SCHEMA = (
-    "lon double, lat double, tile_x int, tile_y int, tile_z int, "
-    "tile_xyz long, cell_id long"
-)
+#: the fused index columns, appended to every input column
+INDEX_FIELDS = [
+    StructField(name, t())
+    for name, t in (
+        ("lon", DoubleType), ("lat", DoubleType), ("tile_x", IntegerType),
+        ("tile_y", IntegerType), ("tile_z", IntegerType), ("tile_xyz", LongType),
+        ("cell_id", LongType),
+    )
+]
 
 #: XYZ tile zoom and hierarchical cell level of the fused index columns
 TILE_ZOOM = 12
 CELL_LEVEL = 12
 
 
-def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
+def index_and_color(
+    df: DataFrame, ops_string: str, packed=None, sink: bool = False
+) -> DataFrame:
     """Spatial index + fused color chain (+ optional PIP) in ONE Python crossing.
 
     Chaining with_spatial_index's cell UDF stage in front of the color
@@ -295,6 +305,14 @@ def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
     (the polygon set rides to executors in the task closure; it is a few
     KB of packed edges). Tile assignments are the read-time JVM view
     ``pipeline.assignments`` (``explode(poly_ids)``), never written.
+
+    ``sink=True`` returns the file-sink form, a task-written plan for
+    :meth:`~rio_color_spark.sources.catalog.CheckpointedWriter.write_data`:
+    the same batch loop writes its colored batches to the task's own
+    parquet file (:data:`~rio_color_spark.sources.images.PAYLOAD_WRITE_OPTIONS`
+    settings) and returns one
+    :data:`~rio_color_spark.sources.catalog.TASK_FILE_SCHEMA` row, so no
+    pixel row goes back to the JVM.
     """
     from rio_color_spark.functions import cells as cellmod
     from rio_color_spark.functions import tiles as tilemod
@@ -303,10 +321,11 @@ def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
 
     parse_ops_spec(ops_string)
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-    schema = f"{schema}, {INDEX_COLS_SCHEMA}"
+    # built here, not parsed from DDL: a parse is a JVM round trip per plan
+    fields = [StructField(f.name, f.dataType) for f in df.schema] + INDEX_FIELDS
     if packed is not None:
-        schema = f"{schema}, poly_ids array<string>"
+        fields.append(StructField("poly_ids", ArrayType(StringType())))
+    schema = StructType(fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fused = compile_chain(ops_string)
@@ -325,4 +344,18 @@ def index_and_color(df: DataFrame, ops_string: str, packed=None) -> DataFrame:
                 out["poly_ids"] = pip_multi(lon, lat, packed)
             yield out
 
-    return df.mapInPandas(run, schema=schema)
+    if not sink:
+        return df.mapInPandas(run, schema=schema)
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rio_color_spark.sources.catalog import TASK_FILE_SCHEMA, write_task_file
+    from rio_color_spark.sources.images import payload_writer_options
+
+    arrow = to_arrow_schema(schema)
+    options = payload_writer_options(arrow)
+
+    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield write_task_file(run(batches), arrow, options)
+
+    return df.mapInPandas(write, schema=TASK_FILE_SCHEMA)

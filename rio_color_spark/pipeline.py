@@ -3,14 +3,17 @@
     read images → spatial index (lon/lat, XYZ tiles, cells)
         → PIP assignment (fused, pixel-free poly_ids column)
         → fused color-correct (single mapInPandas)
-        → chunked checkpointed write (images + lineage)
+        → task-written parquet files → chunk commit (images + lineage)
 
 Plan properties at scale:
 
 - **exactly ONE Python crossing per image, ever**: decode, color chain,
-  tile/cell encode, and the PIP ray cast all run in the same
-  ``index_and_color`` batch loop (operators/color.py); ONE write per
-  chunk: tile assignments are the view :func:`assignments`, a JVM-side
+  tile/cell encode, the PIP ray cast and the parquet write all run in
+  the same ``index_and_color`` batch loop (operators/color.py): each task
+  writes its own file of the chunk and returns one row (file, rows,
+  assignment rows, bytes), so no pixel row goes back to the JVM and the
+  chunk record takes its counts from those rows. ONE output per chunk:
+  tile assignments are the view :func:`assignments`, a JVM-side
   ``explode(poly_ids)`` over the committed images, ``bytes`` pruned
 - **no source re-scan**: when the input is a path, chunks are deterministic
   stripes of the source's data FILES (the Parquet-facade analogue of
@@ -18,9 +21,9 @@ Plan properties at scale:
   k's files, so resume prunes at the scan and a full run reads each input
   byte once. A plain DataFrame input (no files) falls back to hash
   chunking, which re-scans the (in-memory/small) source per chunk.
-- the ONLY wide dependency in the whole job is the parquet write's file
-  layout; everything else is narrow map work
-- **chunks run concurrently, commit in order**: each chunk's write is its
+- no wide dependency anywhere: a chunk's job is one stage of narrow map
+  work, one task per scan split and one file per task
+- **chunks run concurrently, commit in order**: each chunk is its
   own Spark job, submitted from a thread pool so that a chunk's few tasks
   do not leave the other cores idle; both ledgers commit on the calling
   thread in chunk order, and a failed chunk lets the others finish and
@@ -33,7 +36,6 @@ import hashlib
 import os
 from concurrent.futures import ThreadPoolExecutor
 
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +44,6 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from rio_color_spark.functions.pip import PackedPolygons
 from rio_color_spark.operators.color import index_and_color
 from rio_color_spark.sources.catalog import CheckpointedWriter
-from rio_color_spark.sources.images import PAYLOAD_WRITE_OPTIONS
 
 #: the reference README's canonical example chain (README.md:29-47)
 FLAGSHIP_OPS = "gamma b 1.85, gamma rg 1.95, sigmoidal rgb 35 0.13, saturation 1.15"
@@ -177,8 +178,11 @@ def run_pipeline(
     :func:`assignments` view over it; the chunk records count both).
 
     ``images`` may be a parquet path (preferred: file-stripe chunking, one
-    scan per input byte) or a DataFrame. Every chunk is written with
-    :data:`~rio_color_spark.sources.images.PAYLOAD_WRITE_OPTIONS`.
+    scan per input byte) or a DataFrame. Each chunk's tasks write their own
+    files with the settings of
+    :data:`~rio_color_spark.sources.images.PAYLOAD_WRITE_OPTIONS`
+    (``index_and_color(..., sink=True)``, run by
+    :meth:`CheckpointedWriter.write_data`).
 
     Chunks not yet committed run concurrently: their plans are built on
     the calling thread in chunk order, and their writes run as concurrent
@@ -191,7 +195,7 @@ def run_pipeline(
 
     ``snapshot_base`` additionally maintains a
     :class:`~rio_color_spark.sources.snapshots.SnapshotTable` over the
-    colored-images output: each chunk's already-written parquet files are
+    colored-images output: each chunk's committed parquet files are
     registered via the metadata-only ``add_files`` commit (zero data
     copy), stamped ``pipeline_chunk`` in the snapshot summary. The
     snapshot log then gives the pipeline output atomic visibility,
@@ -200,7 +204,7 @@ def run_pipeline(
     the next run (any committed chunk missing from the log is re-added;
     any chunk already in the log is skipped).
     """
-    writer = CheckpointedWriter(out_base, PAYLOAD_WRITE_OPTIONS)
+    writer = CheckpointedWriter(out_base)
     readers, fps = chunk_plan(spark, images, n_chunks)
 
     done = writer.committed()
@@ -220,9 +224,7 @@ def run_pipeline(
         # heal: chunks whose manifest commit landed but whose snapshot
         # commit didn't (crash in the window between the two ledgers)
         for k, rec in sorted(done.items()):
-            path = (rec.get("paths") or {}).get("images")
-            if path:
-                snap.commit_chunk(k, path, rec.get("stripe_md5"))
+            snap.commit_chunk(k, rec["files"]["images"], rec.get("stripe_md5"))
 
     pending = [k for k in range(n_chunks) if k not in done]
     errors: dict[int, Exception] = {}
@@ -232,38 +234,32 @@ def run_pipeline(
         for k in pending:
             try:
                 part = readers[k]()
-                # the chunk's one job: index + PIP + color fused — exactly ONE
-                # Python worker set per task (see operators/color.index_and_color)
-                colored = index_and_color(part, ops, packed=packed)
+                # the chunk's one job: index + PIP + color + parquet write
+                # fused — exactly ONE Python worker set per task, ONE file
+                # per task (see operators/color.index_and_color)
+                plan = index_and_color(part, ops, packed=packed, sink=True)
             except Exception as e:  # plan no further chunks; drain the rest
                 errors[k] = e
                 break
-            futures[k] = pool.submit(_write_chunk, writer, colored, k)
+            futures[k] = pool.submit(writer.write_data, plan, "images", k)
         # commits: this thread, chunk order, every chunk whose write succeeded
         for k, fut in futures.items():
             try:
-                path, n_assign = fut.result()
-                writer.commit_chunk(
-                    k, {"images": path},
+                written = fut.result()
+                rec = writer.commit_chunk(
+                    k, {"images": written},
                     extra={"stripe_md5": fps[k]} if fps[k] else None,
-                    derived_counts={"assignments": n_assign},
+                    derived_counts={
+                        "assignments": sum(r["assignments"] for r in written[1])
+                    },
                 )
                 if snap:
-                    snap.commit_chunk(k, path, fps[k] or None)
+                    snap.commit_chunk(k, rec["files"]["images"], fps[k] or None)
             except Exception as e:
                 errors[k] = e
     if errors:
         raise errors[min(errors)]
     return writer
-
-
-def _write_chunk(writer: CheckpointedWriter, colored: DataFrame, k: int):
-    """(path, assignment rows) of chunk ``k``'s one write; runs on a pool
-    thread. The rows of the assignments view are the summed ``poly_ids``
-    lengths, read on the driver as that one column (no Spark job)."""
-    path = writer.write_data(colored, "images", k)
-    poly_ids = pq.read_table(path, columns=["poly_ids"])["poly_ids"]
-    return path, pc.sum(pc.list_value_length(poly_ids)).as_py() or 0
 
 
 def assignments(images: DataFrame) -> DataFrame:
@@ -303,12 +299,9 @@ class _SnapshotSink:
             self._tbl = tbl
         return self._tbl
 
-    def commit_chunk(self, k: int, images_path: str, stripe_md5) -> None:
-        files = sorted(
-            os.path.join(images_path, f)
-            for f in os.listdir(images_path)
-            if f.endswith(".parquet")
-        )
+    def commit_chunk(self, k: int, files: list[str], stripe_md5) -> None:
+        """Register chunk ``k``'s committed ``files`` once (a job without
+        tasks commits none)."""
         if not files:
             return
         tbl = self._table(files[0])

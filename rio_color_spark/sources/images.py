@@ -184,7 +184,26 @@ def images_df(spark, n_rows: int, partitions: int | None = None):
 #: session's zstd: the payloads are incompressible (100k rows on tmpfs:
 #: zstd 7.3 s / 375 MB vs lz4 3.0 s / 377 MB). No dictionary for ``bytes``
 #: only: unique payloads make it hash every value, then fall back to plain.
+#: Pipeline chunks are written by their tasks with the same settings as
+#: pyarrow arguments (:func:`payload_writer_options`). pyarrow's ``lz4``
+#: writes the LZ4_RAW codec, Spark's writes Hadoop-framed LZ4; Spark 4
+#: reads both.
 PAYLOAD_WRITE_OPTIONS = {"compression": "lz4", "parquet.enable.dictionary#bytes": "false"}
+
+
+def payload_writer_options(schema) -> dict:
+    """:data:`PAYLOAD_WRITE_OPTIONS` as ``pyarrow.parquet.ParquetWriter``
+    arguments for the ``pyarrow.Schema`` ``schema``: lz4, and dictionary
+    encoding on every leaf column but ``bytes`` (pyarrow names a list's
+    leaf ``<name>.list.element``)."""
+    import pyarrow as pa
+
+    leaves = [
+        f"{f.name}.list.element" if pa.types.is_list(f.type) else f.name
+        for f in schema
+        if f.name != "bytes"
+    ]
+    return {"compression": "lz4", "use_dictionary": leaves}
 
 
 def write_images(spark, n_rows: int, path: str, partitions: int | None = None):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 import rio_color_spark.pipeline as P
 from rio_color_spark.functions.pip import pack_polygons
+from rio_color_spark.operators.color import index_and_color
 from rio_color_spark.pipeline import FLAGSHIP_OPS, assignments, run_pipeline
 from rio_color_spark.sources.catalog import CheckpointedWriter
 from rio_color_spark.sources.images import images_df
@@ -17,6 +18,13 @@ from rio_color_spark.sources.polygons import make_polygons
 
 def _commit(w, df, chunk, name="data"):
     return w.commit_chunk(chunk, {name: w.write_data(df, name, chunk)})
+
+
+def _task_plan(spark, lo: int, hi: int, partitions: int | None = None):
+    """A task-written plan (index_and_color's file-sink form) over the
+    synthetic image rows ``lo`` to ``hi - 1``."""
+    rows = images_df(spark, hi, partitions).filter(F.col("image_id") >= f"img{lo:08d}")
+    return index_and_color(rows, FLAGSHIP_OPS, sink=True)
 
 
 def _crash_after(monkeypatch, n: int) -> None:
@@ -38,7 +46,7 @@ def _crash_after(monkeypatch, n: int) -> None:
 def test_chunked_write_and_lineage(spark, tmp_path):
     w = CheckpointedWriter(str(tmp_path / "out"))
     for k in range(4):
-        _commit(w, spark.range(k * 10, (k + 1) * 10).withColumn("chunk", F.lit(k)), k)
+        _commit(w, _task_plan(spark, k * 10, (k + 1) * 10), k)
     recs = w.committed()
     assert sorted(recs) == [0, 1, 2, 3]
     assert all(r["counts"] == {"data": 10} for r in recs.values())
@@ -68,12 +76,25 @@ def test_pipeline_resume_equals_uninterrupted(spark, tmp_path, monkeypatch):
             for k in (0, 1)
         }
 
-    # Spark names part files afresh on every write: unchanged names prove
+    # every write names its files with a fresh token: unchanged names prove
     # the resume skipped the committed chunks instead of recomputing them
     before = part_files()
-    run_pipeline(spark, images, a_base, packed, n_chunks=4)  # resume
+    lineage = {k: r["lineage_id"] for k, r in CheckpointedWriter(a_base).committed().items()}
+    real_write = CheckpointedWriter.write_data
+    written = []
+
+    def recording(self, df, name, chunk):
+        written.append(chunk)
+        return real_write(self, df, name, chunk)
+
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointedWriter, "write_data", recording)
+        run_pipeline(spark, images, a_base, packed, n_chunks=4)  # resume
+    assert sorted(written) == [2, 3]
     assert part_files() == before
-    assert sorted(CheckpointedWriter(a_base).committed()) == [0, 1, 2, 3]
+    done = CheckpointedWriter(a_base).committed()
+    assert sorted(done) == [0, 1, 2, 3]
+    assert {k: done[k]["lineage_id"] for k in (0, 1)} == lineage
 
     b_base = str(tmp_path / "b")
     run_pipeline(spark, images, b_base, packed, n_chunks=4)  # uninterrupted
@@ -174,7 +195,7 @@ def test_writer_base_is_local(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     out = tmp_path / "out"
     w = CheckpointedWriter(out.as_uri())
-    _commit(w, spark.range(5), 0)
+    _commit(w, _task_plan(spark, 0, 5), 0)
     assert sorted(os.listdir(out)) == ["_manifest", "data"]
     assert w.read(spark, "data").count() == 5
     with pytest.raises(ValueError, match="local base"):
@@ -242,18 +263,6 @@ def test_fused_pip_matches_standalone_join(spark, tmp_path):
     lin = w.lineage_df(spark).filter("name = 'assignments'")
     assert lin.filter("path IS NULL").count() == lin.count() == 3
     assert lin.groupBy().sum("n_rows").collect()[0][0] == len(view)
-
-
-def test_writer_creation_options_applied(spark, tmp_path):
-    """--co analogue: writer creation options reach every chunk write."""
-    w = CheckpointedWriter(str(tmp_path / "o"), {"compression": "gzip"})
-    rec = _commit(w, spark.range(10), 0)
-    files = [
-        f for f in os.listdir(rec["paths"]["data"])
-        if f.endswith(".parquet")
-    ]
-    assert files and all(".gz." in f for f in files)
-    assert w.read(spark, "data").count() == 10
 
 
 def test_resume_rejects_rewritten_source(spark, tmp_path, monkeypatch):
@@ -344,10 +353,12 @@ def test_pipeline_payload_has_no_dictionary(spark, tmp_path):
             assert col["fmt"].has_dictionary_page, f
 
 
-def _sink_chunk(spark, path: str, n: int = 40) -> str:
-    """One written chunk output dir, as run_pipeline hands to the sink."""
+def _sink_chunk(spark, path: str, n: int = 40) -> list[str]:
+    """One written chunk's files, as run_pipeline hands them to the sink."""
     images_df(spark, n).coalesce(1).write.parquet(path)
-    return path
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
 
 
 def test_snapshot_sink_commits_from_worker_thread(spark, tmp_path):
@@ -381,7 +392,7 @@ def test_snapshot_sink_commits_from_worker_thread(spark, tmp_path):
     assert snaps[0]["summary"]["stripe_md5"] == "md5-0"
     assert [(f["name"], f["type"]) for f in t.schema()["fields"]] == [
         (f.name, f.dataType.simpleString())
-        for f in spark.read.parquet(chunk).schema.fields
+        for f in spark.read.parquet(*chunk).schema.fields
     ]
     assert t.read(spark).count() == 40
 
@@ -460,6 +471,29 @@ def test_stripe_schema_matches_spark(spark, tmp_path):
     assert flat and files
     assert _stripe_schema(spark, files[0]) == spark.read.parquet(src).schema
 
+    # task-written chunk files: Spark's inference over them equals the
+    # schema of Spark's own write of the same plan, and so does the
+    # shortcut; the rows are the same both ways
+    from rio_color_spark.sources.images import PAYLOAD_WRITE_OPTIONS
+
+    packed = pack_polygons(make_polygons(5))
+    rows = images_df(spark, 50, partitions=2)
+    by_spark = str(tmp_path / "by_spark")
+    index_and_color(rows, FLAGSHIP_OPS, packed=packed).write.options(
+        **PAYLOAD_WRITE_OPTIONS).parquet(by_spark)
+    w = CheckpointedWriter(str(tmp_path / "w"))
+    path, _ = w.write_data(
+        index_and_color(rows, FLAGSHIP_OPS, packed=packed, sink=True), "images", 0
+    )
+    want = spark.read.parquet(by_spark)
+    got = spark.read.parquet(path)
+    assert got.schema == want.schema
+    files, flat = _list_data_files(spark, path)
+    assert flat and len(files) == 2
+    assert _stripe_schema(spark, files[0]) == want.schema
+    assert got.count() == 50
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
 
 def test_single_stripe_reads_whole_dir(spark, tmp_path):
     """n_chunks=1 takes the directory fast path (one root path, no per-file
@@ -474,3 +508,64 @@ def test_single_stripe_reads_whole_dir(spark, tmp_path):
     assert set(df.inputFiles()) == set(spark.read.parquet(src).inputFiles())
     assert df.schema == spark.read.parquet(src).schema
     assert fps[0] is not None
+
+
+def test_failed_task_attempt_file_left_out(spark, tmp_path):
+    """A task attempt that fails after writing its file (attempt 0 only;
+    the session's ``local[N,4]`` master retries it) leaves that file out
+    of the chunk directory and out of the commit."""
+    seen = tmp_path / "seen"
+    seen.mkdir()
+    plan = _task_plan(spark, 0, 40, partitions=2)
+
+    def fail_first_attempt(batches):
+        from pyspark import TaskContext
+
+        for pdf in batches:
+            if TaskContext.get().attemptNumber() == 0:
+                for p in pdf["path"]:
+                    if os.path.exists(p):
+                        (seen / os.path.basename(p)).touch()
+                raise RuntimeError("simulated failure after the file was written")
+            yield pdf
+
+    w = CheckpointedWriter(str(tmp_path / "out"))
+    rec = _commit(w, plan.mapInPandas(fail_first_attempt, plan.schema), 0, "images")
+    failed = sorted(os.listdir(seen))
+    assert len(failed) == 2 and all(f.split("-")[2] == "0" for f in failed)
+    kept = sorted(os.listdir(rec["paths"]["images"]))
+    assert kept == sorted(os.path.basename(f) for f in rec["files"]["images"])
+    assert len(kept) == 2 and all(f.split("-")[2] == "1" for f in kept)
+    assert rec["counts"] == {"images": 40}
+    assert w.read(spark, "images").count() == 40
+
+
+def test_pipeline_domain_error_fails_fast(spark, tmp_path):
+    """A domain-violation ValueError raised in the chunk tasks (the chain
+    passes driver validation) fails the run with that error and commits
+    nothing."""
+    base = str(tmp_path / "out")
+    with pytest.raises(Exception, match="bias must be"):
+        run_pipeline(spark, images_df(spark, 40), base,
+                     pack_polygons(make_polygons(5)), ops="sigmoidal rgb 5 1.5",
+                     n_chunks=2)
+    w = CheckpointedWriter(base)
+    assert w.committed() == {}
+    with pytest.raises(FileNotFoundError):
+        w.read(spark, "images")
+
+
+def test_empty_chunk_stays_readable(spark, tmp_path):
+    """A chunk without rows commits one zero-row file per task, readable
+    through the writer and registered in the snapshot log."""
+    from rio_color_spark.sources.snapshots import SnapshotTable
+
+    snap_base = str(tmp_path / "snap")
+    w = run_pipeline(spark, images_df(spark, 1), str(tmp_path / "out"),
+                     pack_polygons(make_polygons(5)), n_chunks=2,
+                     snapshot_base=snap_base)
+    done = w.committed()
+    assert sorted(r["counts"]["images"] for r in done.values()) == [0, 1]
+    assert all(r["files"]["images"] for r in done.values())
+    assert w.read(spark, "images").count() == 1
+    assert SnapshotTable(snap_base).read(spark).count() == 1
