@@ -216,7 +216,7 @@ class CheckpointedWriter:
         """All committed data for one named output: exactly the files the
         chunk records name (uncommitted dirs and stray files ignored)."""
         files = [
-            f for r in self.committed().values() for f in r["files"].get(name) or ()
+            f for r in self.committed().values() for f in r["files"].get(name, ())
         ]
         if not files:
             raise FileNotFoundError(f"no committed chunks for {name!r} under {self.base}")
