@@ -54,9 +54,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROUNDS = 3
 #: executions per per-operator query; the recorded number is the minimum
 PER_OP_RUNS = 3
-#: per-run hard cap. Local-mode Python-stage tasks can (rarely) wedge on
-#: their worker socket with both sides blocked (BENCH/wedge_rootcause.md); a
-#: hung run must not hang the whole bench, so it is killed and retried once.
+#: per-run hard cap. A Python-stage task was once seen to wedge on its
+#: worker socket with both sides blocked (history/BENCH/wedge_rootcause.md);
+#: a hung run must not hang the whole bench, so it is killed and retried once.
 RUN_TIMEOUT_S = 900
 #: tmpfs for the bench tables: RAM-backed I/O measures the engine, not the
 #: host's single virtio disk

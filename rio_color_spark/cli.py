@@ -29,17 +29,17 @@ import argparse
 import contextlib
 import dataclasses
 import json
+import os
 import sys
 
 
 def check_jobs(jobs: int, parser: argparse.ArgumentParser) -> int:
-    """Reference check_jobs (cli.py:22-30): 0 → usage error; <0 → all cores."""
+    """Reference check_jobs (cli.py:22-30): 0 → usage error; <0 → every core
+    this process may run on (respects ``taskset``/cgroup pinning)."""
     if jobs == 0:
         parser.error("Jobs must be >= 1 or == -1")
     if jobs < 0:
-        import multiprocessing
-
-        return multiprocessing.cpu_count()
+        return len(os.sched_getaffinity(0))
     return jobs
 
 
@@ -184,7 +184,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "--partition",
         action="append",
         default=[],
-        metavar="TRANSFORM:COL[:PARAM]",
+        metavar="TRANSFORM:COL[:INT]",
         help="create: hidden-partition transform (repeatable), e.g. "
         "bucket:doc_id:16, truncate:ts:3600, identity:lang",
     )
@@ -297,10 +297,10 @@ def _table_cmd(args, parser) -> int:
             bits = p.split(":")
             if len(bits) == 2:
                 spec.append((bits[0], bits[1]))
-            elif len(bits) == 3:
+            elif len(bits) == 3 and bits[2].isdecimal():
                 spec.append((bits[0], bits[1], int(bits[2])))
             else:
-                parser.error(f"--partition expects TRANSFORM:COL[:PARAM], got {p!r}")
+                parser.error(f"--partition expects TRANSFORM:COL[:INT], got {p!r}")
         try:
             SnapshotTable.create(args.base, args.schema, partition_spec=spec or None)
         except (FileExistsError, KeyError, ValueError) as e:

@@ -16,6 +16,10 @@ path.
 
 A local master's driver JVM runs C1-compiled code only
 (:data:`LOCAL_DRIVER_JAVA_OPTIONS`).
+
+The master is used as given. On ``local[N]`` Spark gives a task one
+attempt, so a task that raises fails its job at once; a cluster master
+retries tasks per ``spark.task.maxFailures``.
 """
 
 from __future__ import annotations
@@ -27,24 +31,8 @@ import re
 import pyspark
 from pyspark.sql import SparkSession
 
-#: task retries for local-mode masters. Spark hard-codes maxTaskFailures=1
-#: for plain ``local``/``local[N]`` (SparkContext.createTaskScheduler), so
-#: any task-level self-healing — including the idle-timeout worker kill
-#: below — would fail the whole JOB on first trigger. ``local[N,F]`` is the
-#: retry-capable local master form; every engine session uses it.
-LOCAL_TASK_RETRIES = 4
-
 #: ``local``, ``local[N|*]`` or ``local[N|*,F]``: group 1 the cores, 2 the retries
 _LOCAL = re.compile(r"local(?:\[(\d+|\*)(,\d+)?\])?")
-
-
-def _retryable_master(master: str) -> str:
-    """``local[N]`` → ``local[N,F]`` so task failures retry instead of
-    failing the job (cluster masters pass through untouched)."""
-    m = _LOCAL.fullmatch(master)
-    if m and m.group(1) and not m.group(2):
-        return f"local[{m.group(1)},{LOCAL_TASK_RETRIES}]"
-    return master
 
 
 def driver_memory(phys_bytes: int | None = None) -> str:
@@ -167,7 +155,6 @@ def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     partitions = shuffle_partitions(master)
-    master = _retryable_master(master)
 
     # local-mode python workers inherit the driver env
     for k, v in _WORKER_ENV_PINS.items():
@@ -182,24 +169,6 @@ def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # self-healing for the (rare, local-mode, 1M-scale) wedged-task
-        # hazard: a JVM task thread stuck reading from an idle Python worker
-        # (jstack: ReaderInputStream select, worker ~0% CPU — observed once
-        # sitting 20+ min; BENCH/wedge_rootcause.md). With these set, the
-        # read times out and the worker is killed; whether the TASK then
-        # retries depends on the master's maxTaskFailures. Plain
-        # local/local[N] hard-codes maxTaskFailures=1 (task failure = job
-        # failure), which is why _retryable_master above rewrites every
-        # local master to local[N,F] — under it the kill is a seconds-scale
-        # task retry; without it the job would fail at the timeout (still
-        # strictly better than hanging forever, and bench.py's subprocess
-        # retry recovers at the job level). Contract: every engine kernel
-        # produces output per Arrow batch in far under this timeout
-        # (batches are 2048 rows / ~6 MiB; kernels run in ms), so a
-        # genuinely busy worker is never killed. On a 1000-executor cluster
-        # this matters more: some worker somewhere WILL hang.
-        .config("spark.python.worker.idleTimeoutSeconds", "600")
-        .config("spark.python.worker.killOnIdleTimeout", "true")
     )
     if partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(partitions))

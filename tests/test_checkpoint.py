@@ -511,31 +511,34 @@ def test_single_stripe_reads_whole_dir(spark, tmp_path):
 
 
 def test_failed_task_attempt_file_left_out(spark, tmp_path):
-    """A task attempt that fails after writing its file (attempt 0 only;
-    the session's ``local[N,4]`` master retries it) leaves that file out
-    of the chunk directory and out of the commit."""
-    seen = tmp_path / "seen"
-    seen.mkdir()
+    """Files in the chunk directory that no task row names (an attempt that
+    failed after writing, a partial file) are deleted by ``write_data`` and
+    left out of the commit."""
+    stray_log = tmp_path / "strays"
+    stray_log.mkdir()
     plan = _task_plan(spark, 0, 40, partitions=2)
 
-    def fail_first_attempt(batches):
-        from pyspark import TaskContext
+    def write_stray_sibling(batches):
+        import shutil
+        import uuid
 
         for pdf in batches:
-            if TaskContext.get().attemptNumber() == 0:
-                for p in pdf["path"]:
-                    if os.path.exists(p):
-                        (seen / os.path.basename(p)).touch()
-                raise RuntimeError("simulated failure after the file was written")
+            for p in pdf["path"]:
+                part = os.path.basename(p).split("-")[1]
+                stray = os.path.join(
+                    os.path.dirname(p), f"part-{part}-0-{uuid.uuid4().hex}.parquet"
+                )
+                shutil.copyfile(p, stray)
+                (stray_log / os.path.basename(stray)).touch()
             yield pdf
 
     w = CheckpointedWriter(str(tmp_path / "out"))
-    rec = _commit(w, plan.mapInPandas(fail_first_attempt, plan.schema), 0, "images")
-    failed = sorted(os.listdir(seen))
-    assert len(failed) == 2 and all(f.split("-")[2] == "0" for f in failed)
+    rec = _commit(w, plan.mapInPandas(write_stray_sibling, plan.schema), 0, "images")
+    strays = sorted(os.listdir(stray_log))
+    assert len(strays) == 2
     kept = sorted(os.listdir(rec["paths"]["images"]))
+    assert not set(strays) & set(kept)
     assert kept == sorted(os.path.basename(f) for f in rec["files"]["images"])
-    assert len(kept) == 2 and all(f.split("-")[2] == "1" for f in kept)
     assert rec["counts"] == {"images": 40}
     assert w.read(spark, "images").count() == 40
 

@@ -2,7 +2,6 @@
 e2e runs on a real table, jobs-count determinism, out-dtype, bad/empty ops
 exit codes, the --as-color golden echo, and check_jobs branches."""
 
-import multiprocessing
 import os
 
 import numpy as np
@@ -124,7 +123,7 @@ def test_check_jobs_branches():
 
     parser = _build_parser()
     assert check_jobs(4, parser) == 4
-    assert check_jobs(-1, parser) == multiprocessing.cpu_count()
+    assert check_jobs(-1, parser) == len(os.sched_getaffinity(0))
     with pytest.raises(SystemExit) as e:
         check_jobs(0, parser)
     assert e.value.code == 2
@@ -200,6 +199,10 @@ def test_table_subcommand_errors(tmp_path):
     with pytest.raises(SystemExit) as e:
         main(["table", "create", base, "--schema", "a int",
               "--partition", "bogus"])
+    assert e.value.code == 2
+    with pytest.raises(SystemExit) as e:
+        main(["table", "create", base, "--schema", "doc_id bigint",
+              "--partition", "bucket:doc_id:x"])
     assert e.value.code == 2
     assert main(["table", "create", base, "--schema", "a int"]) == 0
     with pytest.raises(SystemExit) as e:

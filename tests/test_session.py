@@ -50,7 +50,7 @@ def test_driver_memory_reads_this_host():
     "master, cores, want",
     [
         ("local[4]", 16, 8),  # two per core of the master, not the host
-        ("local[4,4]", 16, 8),  # the retry-capable form get_spark builds
+        ("local[4,4]", 16, 8),  # a user-given master with task retries
         ("local[*]", 4, 8),
         ("local[*,4]", 6, 12),
         ("local", 16, 2),
@@ -101,6 +101,29 @@ def test_local_driver_jvm_runs_c1_only(spark):
     assert options["spark.driver.defaultJavaOptions"] == LOCAL_DRIVER_JAVA_OPTIONS
     runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     assert LOCAL_DRIVER_JAVA_OPTIONS in list(runtime.getInputArguments())
+
+
+def test_local_task_failure_fails_the_job_at_once(spark, tmp_path):
+    """A local master passes through unchanged, so a task that raises fails
+    its job on the first attempt (Spark's ``local[N]`` allows one task
+    failure); no worker idle timeout is set."""
+    options = _builder("fail-fast", "local[4]")._options
+    assert options["spark.master"] == "local[4]"
+    assert "spark.python.worker.idleTimeoutSeconds" not in options
+
+    def fail(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        (tmp_path / f"p{ctx.partitionId()}-a{ctx.attemptNumber()}").touch()
+        for _ in batches:
+            pass
+        raise ValueError("domain error in the task")
+
+    with pytest.raises(Exception, match="ValueError"):
+        spark.range(2, numPartitions=2).mapInPandas(fail, "id long").collect()
+    markers = sorted(os.listdir(tmp_path))
+    assert markers and all(m.endswith("-a0") for m in markers)
 
 
 _DIRECTORY_INSTALL = pyspark.__file__
